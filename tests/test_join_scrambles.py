@@ -11,13 +11,18 @@ from pyspark.sql import functions as F
 
 from verdictdb_spark.api import VerdictContext
 from verdictdb_spark.sampling import (
+    BLOCK_COL,
+    TIER_COL,
     AggSpec,
     create_scramble,
     approx_join_agg,
     is_aligned,
+    create_fastconverge_scramble,
+    progressive_agg,
     progressive_join_agg,
+    progressive_multi_join_agg,
 )
-from verdictdb_spark.sampling.join import _spans
+from verdictdb_spark.sampling.progressive import _schedule, _slabs
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +35,7 @@ def tables(spark, sf_dir):
 def test_spans_cover_plane_once():
     for n1, n2 in [(6, 4), (1, 1), (8, 8), (3, 10)]:
         seen = set()
-        for lo1, hi1, lo2, hi2 in _spans(n1, n2):
+        for (lo1, hi1), (lo2, hi2) in _schedule([n1, n2], "doubling"):
             new1 = set(range(lo1, hi1 + 1))
             old1 = set(range(0, lo1))
             new2 = set(range(lo2, hi2 + 1))
@@ -41,6 +46,15 @@ def test_spans_cover_plane_once():
             assert not (seen & inc), "block pair joined twice"
             seen |= inc
         assert seen == {(a, b) for a in range(n1) for b in range(n2)}
+    # the one ladder names its schedules: an unknown name (or the
+    # one-scramble-only "linear" on a join) raises instead of silently
+    # meaning "doubling"
+    for ns, kind in [
+        ([6], "zigzag"), ([6], "Doubling"), ([6, 4], "linear"),
+        ([4, 3, 2], "linear"), ([4, 3, 2], "exponential"),
+    ]:
+        with pytest.raises(ValueError, match="unknown schedule"):
+            _schedule(ns, kind)
 
 
 def test_join_full_coverage_exact(spark, tables):
@@ -216,11 +230,9 @@ def test_aligned_requires_same_join_pair(spark, tables):
 def test_multi_spans_slabs_cover_hypercube_once():
     import itertools
 
-    from verdictdb_spark.sampling.join import _multi_spans, _slabs
-
     for ns in ([4, 3, 5], [1, 1, 1], [8, 2, 4], [2, 2]):
         seen = set()
-        for spans in _multi_spans(ns):
+        for spans in _schedule(ns, "doubling"):
             for ranges in _slabs(spans):
                 cells = set(
                     itertools.product(*[range(lo, hi + 1) for lo, hi in ranges])
@@ -231,8 +243,6 @@ def test_multi_spans_slabs_cover_hypercube_once():
 
 
 def test_three_way_chain_join_full_coverage_exact(spark, sf_dir, tables):
-    from verdictdb_spark.sampling.join import progressive_multi_join_agg
-
     li, o = tables
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     s1 = create_scramble(li, method="uniform", nblocks=4, seed=7)
@@ -273,8 +283,6 @@ def test_three_way_chain_join_full_coverage_exact(spark, sf_dir, tables):
 
 
 def test_multi_join_rejects_countdistinct(spark, sf_dir, tables):
-    from verdictdb_spark.sampling.join import progressive_multi_join_agg
-
     li, o = tables
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     s = [
@@ -290,3 +298,106 @@ def test_multi_join_rejects_countdistinct(spark, sf_dir, tables):
                 [AggSpec("countdistinct", "l_orderkey", "nd")],
             )
         )
+
+
+# ------------------------------------------- one block-space driver
+@pytest.fixture(scope="module")
+def shapes(spark, sf_dir, tables):
+    """The five block-space shapes of the progressive driver, each as a
+    ``schedule -> iterator`` factory over count(*)."""
+    li, o = tables
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    u1 = create_scramble(li, method="uniform", nblocks=6, seed=7)
+    fc1 = create_fastconverge_scramble(
+        li, "l_extendedprice", "l_returnflag", nblocks=6, seed=3
+    )
+    o2 = create_scramble(o, method="uniform", nblocks=4, seed=13)
+    h1 = create_scramble(li, method="hash", column="l_orderkey", nblocks=5, seed=21)
+    h2 = create_scramble(o, method="hash", column="o_orderkey", nblocks=5, seed=21)
+    l3 = create_scramble(li, method="uniform", nblocks=4, seed=7)
+    o3 = create_scramble(o, method="uniform", nblocks=3, seed=13)
+    c3 = create_scramble(c, method="uniform", nblocks=2, seed=29)
+    on = [("l_orderkey", "o_orderkey")]
+    cnt = [AggSpec("count", None, "n")]
+    return {
+        "uniform": lambda sch: progressive_agg(*u1, cnt, schedule=sch),
+        "fastconverge": lambda sch: progressive_agg(*fc1, cnt, schedule=sch),
+        "join2": lambda sch: progressive_join_agg(*u1, *o2, on, cnt, schedule=sch),
+        "aligned2": lambda sch: progressive_join_agg(*h1, *h2, on, cnt, schedule=sch),
+        "chain3": lambda sch: progressive_multi_join_agg(
+            [l3, o3, c3], [on, [("o_custkey", "c_custkey")]], cnt, schedule=sch
+        ),
+    }
+
+
+# (coverage, blocks_covered, is_exact) per yield.  One scramble of 6
+# blocks grows 1 -> 3 -> 6; joins grow every side 1 -> 2 -> 4 ...
+# (capped per side) and report the coverage product — except aligned
+# hash scrambles, whose inclusion is one event (side 1's coverage).
+_SPAN_CONTRACT = {
+    ("uniform", "doubling"): [(1 / 6, 1, False), (3 / 6, 3, False), (1.0, 6, True)],
+    ("uniform", "probe"): [(1 / 6, 1, False), (1.0, 6, True)],
+    ("uniform", "single"): [(1.0, 6, True)],
+    ("fastconverge", "doubling"): [(1 / 6, 1, False), (3 / 6, 3, False), (1.0, 6, True)],
+    ("fastconverge", "probe"): [(1 / 6, 1, False), (1.0, 6, True)],
+    ("fastconverge", "single"): [(1.0, 6, True)],
+    ("join2", "doubling"): [
+        (1 / 24, 2, False), (4 / 24, 4, False), (16 / 24, 8, False), (1.0, 10, True),
+    ],
+    ("join2", "probe"): [(1 / 24, 2, False), (1.0, 10, True)],
+    ("join2", "single"): [(1.0, 10, True)],
+    ("aligned2", "doubling"): [
+        (1 / 5, 2, False), (2 / 5, 4, False), (4 / 5, 8, False), (1.0, 10, True),
+    ],
+    ("aligned2", "probe"): [(1 / 5, 2, False), (1.0, 10, True)],
+    ("aligned2", "single"): [(1.0, 10, True)],
+    ("chain3", "doubling"): [(1 / 24, 3, False), (8 / 24, 6, False), (1.0, 9, True)],
+    ("chain3", "probe"): [(1 / 24, 3, False), (1.0, 9, True)],
+    ("chain3", "single"): [(1.0, 9, True)],
+}
+
+
+@pytest.mark.parametrize("shape,schedule", list(_SPAN_CONTRACT))
+def test_span_contract(shapes, shape, schedule):
+    """Every shape of the one driver keeps its span ladder: the
+    (coverage, blocks_covered, is_exact) sequence of its yields, with
+    exactness exactly at full coverage."""
+    got = [
+        (r.coverage, r.blocks_covered, r.is_exact) for r in shapes[shape](schedule)
+    ]
+    want = _SPAN_CONTRACT[shape, schedule]
+    assert [(b, e) for _, b, e in got] == [(b, e) for _, b, e in want]
+    assert [c for c, _, _ in got] == pytest.approx([c for c, _, _ in want], rel=1e-12)
+
+
+def test_join_engine_switch_projects_by_block_plane(tables):
+    """The auto engine projects full-coverage partial rows as rows / the
+    covered share of the whole block plane.  Partials are keyed by
+    block1 only, but grouped by the FK a group's rows need its order's
+    block2 as well, so projecting by side 1's share alone under-projects
+    by 1/cov2: at the probe's (0, 0) cell the side-1 projection sits
+    below the threshold while the full partial table is above it.  The
+    plane projection must fire on the FIRST span."""
+    li, o = tables
+    s1, m1 = create_scramble(li, method="uniform", nblocks=4, seed=7)
+    s2, m2 = create_scramble(o, method="uniform", nblocks=4, seed=13)
+    threshold = 2000
+    j = s1.join(
+        s2.withColumnRenamed(TIER_COL, "t2").withColumnRenamed(BLOCK_COL, "b2"),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    )
+    keys = ["l_orderkey", TIER_COL, BLOCK_COL, "t2"]
+    full = j.select(*keys).distinct().count()
+    cell = j.where((F.col(BLOCK_COL) == 0) & (F.col("b2") == 0))
+    first_rows = cell.select(*keys).distinct().count()
+    # side-1 projection < threshold < full partial rows (and the plane
+    # projection first_rows * 16 is above it)
+    assert first_rows * 4 < threshold < full
+    first = next(
+        progressive_join_agg(
+            s1, m1, s2, m2, [("l_orderkey", "o_orderkey")],
+            [AggSpec("count", None, "c")], ["l_orderkey"],
+            engine="auto", engine_threshold=threshold, schedule="probe",
+        )
+    )
+    assert first.blocks_covered == 2 and first.estimates_sdf is not None

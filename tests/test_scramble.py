@@ -145,6 +145,30 @@ def test_write_load_roundtrip(tmp_path, lineitem, spark):
     assert df2.where(F.col("verdictdbblock") <= 1).count() < 1000
 
 
+def test_load_cache_drops_other_applications(tmp_path, lineitem, spark, sf_dir):
+    """The per-application handle caches (scramble loads, base tables)
+    drop every other application's keys on insert: a long-lived driver
+    that cycles sessions does not accumulate dead handles."""
+    from verdictdb_spark import queries
+    from verdictdb_spark.sampling import scramble
+
+    sdf, meta = create_scramble(lineitem.limit(200), nblocks=2, seed=1)
+    path = str(tmp_path / "scr")
+    write_scramble(sdf, meta, path)
+    stale = ("app-stopped-long-ago", str(tmp_path / "old"))
+    scramble._LOAD_CACHE[stale] = object()
+    load_scramble(spark, path)
+    assert stale not in scramble._LOAD_CACHE
+    app = spark.sparkContext.applicationId
+    assert set(k[0] for k in scramble._LOAD_CACHE) == {app}
+
+    stale_t = ("app-stopped-long-ago", sf_dir, "orders")
+    queries._T_CACHE[stale_t] = object()
+    queries._t(spark, sf_dir, "nation")
+    assert stale_t not in queries._T_CACHE
+    assert set(k[0] for k in queries._T_CACHE) == {app}
+
+
 def test_meta_json_roundtrip():
     m = ScrambleMeta(method="hash", nblocks=5, hash_column="x", seed=3, original_count=100)
     m2 = ScrambleMeta.from_json(m.to_json())

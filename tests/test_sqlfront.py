@@ -436,6 +436,17 @@ def test_ddl_create_show_drop_roundtrip(spark, tmp_path, lineitem):
     assert c.sql("SHOW SCRAMBLES").count() == 0
 
 
+def test_show_scrambles_for_is_case_insensitive(spark, tmp_path, lineitem):
+    # identifiers compare like the statement keywords: an upper-case
+    # FOR LINEITEM lists the scramble registered for "lineitem"
+    c = VerdictContext(spark, str(tmp_path))
+    c.create_scramble("lineitem", lineitem.limit(500), nblocks=2, seed=3)
+    for qual in ("LINEITEM", "lineitem", "LineItem"):
+        shown = c.sql(f"SHOW SCRAMBLES FOR {qual}").toPandas()
+        assert list(shown["original_table"]) == ["lineitem"], qual
+    assert c.sql("SHOW SCRAMBLES FOR orders").count() == 0
+
+
 def test_ddl_create_hash_scramble_where(spark, tmp_path, lineitem):
     c = VerdictContext(spark, str(tmp_path))
     lineitem.createOrReplaceTempView("li_ddl2")

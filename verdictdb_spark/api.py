@@ -124,6 +124,27 @@ _SET_RE = re.compile(
 _GET_RE = re.compile(r"^\s*GET\s+([\w\.]+)\s*;?\s*$", re.IGNORECASE)
 
 
+def _final_only(kwargs: dict) -> None:
+    """Default the schedule of a progressive run whose caller consumes
+    only the FINAL estimate (``early_stop=False``); a schedule the
+    caller passed is kept.
+
+    With the engine pinned to ``spark`` the span is truly ``single``
+    (the distributed estimator is scale-safe for any group
+    cardinality).  Otherwise the group cardinality is unknown, so the
+    schedule is ``probe`` — block 0 (the origin cell) alone, then the
+    remainder in one span: the 1-cell first span bounds the driver
+    partial frame and arms the engine-threshold switch BEFORE the full
+    box is pulled, while small-group queries keep the cheap driver
+    combiner (the forced Spark estimator costs ~0.5-0.8 s of fixed
+    shuffle/checkpoint overhead on 3-group queries, while the doubling
+    ladder pays ~log2(nblocks) scan jobs — probe takes the best of
+    both)."""
+    kwargs.setdefault(
+        "schedule", "single" if kwargs.get("engine") == "spark" else "probe"
+    )
+
+
 def _reassemble(cl: dict, new_from: str) -> str:
     """Rebuild a SELECT statement from its `_clauses` map with a
     rewritten FROM — faithful because `_clauses` enforces canonical
@@ -309,15 +330,7 @@ class VerdictContext:
         of the refinement ladder — same partials, same estimator,
         one scan."""
         if not early_stop:
-            # probe schedule: block 0 (or the origin cell) alone, then
-            # the remainder in one span — bounds the driver partial
-            # frame before the auto engine decides, without the Spark
-            # estimator's fixed overhead on small-group results.  A
-            # caller that pins engine="spark" gets the true single span.
-            if kwargs.get("engine") == "spark":
-                kwargs.setdefault("schedule", "single")
-            else:
-                kwargs.setdefault("schedule", "probe")
+            _final_only(kwargs)
         sdf, meta = self.load_scramble_for(source_table)
         tf = transform
         if where is not None:
@@ -352,15 +365,7 @@ class VerdictContext:
         from .sampling.join import approx_join_agg
 
         if not early_stop:
-            # probe schedule: block 0 (or the origin cell) alone, then
-            # the remainder in one span — bounds the driver partial
-            # frame before the auto engine decides, without the Spark
-            # estimator's fixed overhead on small-group results.  A
-            # caller that pins engine="spark" gets the true single span.
-            if kwargs.get("engine") == "spark":
-                kwargs.setdefault("schedule", "single")
-            else:
-                kwargs.setdefault("schedule", "probe")
+            _final_only(kwargs)
         s1, m1 = self.load_scramble_for(table1)
         s2, m2 = self.load_scramble_for(table2)
         return approx_join_agg(
@@ -386,15 +391,7 @@ class VerdictContext:
         from .sampling.join import approx_multi_join_agg
 
         if not early_stop:
-            # probe schedule: block 0 (or the origin cell) alone, then
-            # the remainder in one span — bounds the driver partial
-            # frame before the auto engine decides, without the Spark
-            # estimator's fixed overhead on small-group results.  A
-            # caller that pins engine="spark" gets the true single span.
-            if kwargs.get("engine") == "spark":
-                kwargs.setdefault("schedule", "single")
-            else:
-                kwargs.setdefault("schedule", "probe")
+            _final_only(kwargs)
         scrambles = [self.load_scramble_for(t) for t in tables]
         return approx_multi_join_agg(
             scrambles, on, aggs, group_by,
@@ -941,14 +938,13 @@ class VerdictContext:
         m = _SHOW_RE.match(query)
         if m:
             # FOR <db|table> filters the listing (a discarded qualifier
-            # would return every scramble — silently wrong)
-            qual = m.group("qual")
+            # would return every scramble — silently wrong); identifiers
+            # compare case-insensitively, like the statement keywords
+            qual = (m.group("qual") or "").lower()
             rows = []
             for e in self.metastore.show("scramble"):
-                if qual is not None and not (
-                    e.source_table == qual
-                    or e.source_table.startswith(qual + ".")
-                ):
+                src = e.source_table.lower()
+                if qual and not (src == qual or src.startswith(qual + ".")):
                     continue
                 try:
                     meta = ScrambleMeta.from_json(e.meta_json)
@@ -1840,57 +1836,32 @@ class VerdictContext:
         never sees the intermediate steps (the top-level ``sql()``
         path and plan-time nested / derived-table inners).  Runs ONE
         full-prefix span (full block plane / hypercube for scramble
-        joins) on the Spark engine instead of the refinement ladder:
+        joins) instead of the refinement ladder:
         one scan+join, one partial agg, one lazy estimate — skips the
         per-step toPandas/localCheckpoint accumulation entirely
         (measured 11.3s -> ~6s on the 150k-group aggdim inner; r6:
         the whole early_stop=False front door).  Errors stay
         computable: the single span still yields per-(tier, block)
         partials, so the subsample ``_err`` closed form is unchanged.
+        The schedule is chosen by :func:`_final_only`."""
+        from .sampling import join, progressive
 
-        Engine choice under final_only: with the engine pinned to
-        ``spark`` the span is truly single (the distributed estimator
-        is scale-safe for any group cardinality).  Under ``auto`` the
-        group cardinality is unknown, so the schedule is ``probe`` —
-        block 0 alone, then the remainder in one span: the 1-block
-        first span bounds the driver partial frame at O(groups) rows
-        and arms the engine-threshold switch BEFORE the full prefix
-        is pulled, while small-group queries keep the cheap driver
-        combiner (A/B on this host: the forced Spark estimator costs
-        ~0.5-0.8 s of fixed shuffle/checkpoint overhead on 3-group
-        queries, while the driver ladder pays ~log2(nblocks) scan
-        jobs — probe takes the best of both)."""
         tf = self._transform_of(plan)
         kw = self._exec_kwargs()
+        ekw = {"engine": kw["engine"], "engine_threshold": kw["engine_threshold"]}
         if final_only:
-            ekw = (
-                {"engine": "spark", "schedule": "single"}
-                if kw["engine"] == "spark"
-                else {"engine": kw["engine"], "schedule": "probe"}
+            _final_only(ekw)
+        scr, args = plan.scrambles, (plan.aggs, plan.group_cols)
+        # dispatch through the module attributes (not the shared driver)
+        # so per-entry-point instrumentation sees every call
+        if len(scr) == 1:
+            return progressive.progressive_agg(*scr[0], *args, transform=tf, **ekw)
+        if len(scr) == 2:
+            return join.progressive_join_agg(
+                *scr[0], *scr[1], plan.scramble_on[0], *args, transform=tf, **ekw
             )
-        else:
-            ekw = {"engine": kw["engine"]}
-        ekw["engine_threshold"] = kw["engine_threshold"]
-        if len(plan.scrambles) == 1:
-            from .sampling.progressive import progressive_agg
-
-            sdf, meta = plan.scrambles[0]
-            return progressive_agg(
-                sdf, meta, plan.aggs, plan.group_cols, transform=tf, **ekw
-            )
-        if len(plan.scrambles) == 2:
-            from .sampling.join import progressive_join_agg
-
-            (s1, m1), (s2, m2) = plan.scrambles
-            return progressive_join_agg(
-                s1, m1, s2, m2, plan.scramble_on[0], plan.aggs,
-                plan.group_cols, transform=tf, **ekw,
-            )
-        from .sampling.join import progressive_multi_join_agg
-
-        return progressive_multi_join_agg(
-            plan.scrambles, plan.scramble_on, plan.aggs, plan.group_cols,
-            transform=tf, **ekw,
+        return join.progressive_multi_join_agg(
+            scr, plan.scramble_on, *args, transform=tf, **ekw
         )
 
     def _transform_of(self, plan: _Plan):

@@ -142,7 +142,7 @@ def progressive_quantiles(
         )
 
     acc: DataFrame | None = None
-    for it, (lo, hi) in enumerate(_schedule(meta.nblocks, schedule)):
+    for it, [(lo, hi)] in enumerate(_schedule([meta.nblocks], schedule)):
         batch = scramble.where(F.col(BLOCK_COL).between(lo, hi))
         span = sketch_agg(batch, sketch, col, group_by, input_kind="double")
         if acc is None:

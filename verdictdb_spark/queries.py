@@ -26,6 +26,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sampling.scramble import _cache_put
 from .session import ship_package
 
 Query = Callable[[SparkSession, str], DataFrame]
@@ -54,12 +55,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     driver-side listing + parquet footer read — and every registry
     entry reads its base tables once or twice per call.  Keyed by
     applicationId so a new session (or regenerated testdata in a new
-    driver run) never sees a stale handle."""
+    driver run) never sees a stale handle, and an insert drops the
+    handles of every other application."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _T_CACHE.get(key)
     if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _T_CACHE[key] = df
+        df = _cache_put(_T_CACHE, key, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return df
 
 

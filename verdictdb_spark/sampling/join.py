@@ -1,34 +1,35 @@
-"""Progressive aggregation over a JOIN OF TWO SCRAMBLES.
+"""Progressive aggregation over JOINS OF SCRAMBLES.
 
 Rebuild of the reference's ripple/hyper-table-cube join planning
 (``ola/OlaAggregationPlan.java:43-68`` plans the block-combination
-sequence, ``ola/HyperTableCube.java:69-106`` slices the block plane,
+sequence, ``ola/HyperTableCube.java:69-106`` slices the block space,
 ``ola/AggMeta.java:149-185`` multiplies per-scramble coverage into the
-scale factor).  Spark-first re-expression:
+scale factor).  A join of N scrambles is the N-dimensional block space
+of ``progressive._progress``, the same driver that runs a single
+scramble; this module holds the join signatures and their rules:
 
-* The block plane (block1 x block2) is covered by an expanding square
-  prefix, doubling per iteration.  Each iteration joins ONLY the
-  L-shaped increment — (new blocks1 x covered blocks2) union
-  (old blocks1 x new blocks2) — so a full run joins every block pair
-  exactly once; with written scrambles both sides are partition-pruned
-  file scans.  This is the cube-slicing idea with Catalyst doing the
-  physical join planning per slice.
-* A joined row pair survives iff BOTH source rows' blocks are in their
-  prefixes.  With independent scramble hashes the inclusion
-  probability multiplies: P = cdf1(tier1, hi1) * cdf2(tier2, hi2) —
-  the reference's scale product (``AggMeta.java:149-185``).  The
-  composite (tier1, tier2) plays the role of the tier, block1 the role
-  of the subsample block, and the single-scramble estimator
-  (``progressive._estimate`` incl. subsample error bars) is reused
-  verbatim through a meta adapter.
-* ALIGNED hash scrambles (both sides hash-scrambled on the join key
-  with the same seed and block count) are detected and handled with
-  the stronger rule: matching rows hash identically, so block1 ==
-  block2 for every matching pair — the join is restricted with a
-  block-equality predicate (co-partitioned slices, no cross terms) and
-  inclusion is a SINGLE event with P = cdf(tier, hi), not a product.
-  This is what makes COUNT(DISTINCT join_key) over a join legal, the
-  reference's scramble-correctness rule
+* Each step grows every side's block prefix and joins only the
+  disjoint slab increments of the covered box (for two sides the
+  L-shaped (new1 x all2) + (old1 x new2)), so a full run joins every
+  block tuple exactly once; with written scrambles every side is a
+  partition-pruned file scan.  This is the cube-slicing idea with
+  Catalyst doing the physical join planning per slab.
+* A joined row tuple survives iff every source row's block is in its
+  prefix.  With independent scramble hashes the inclusion probability
+  multiplies: P = cdf1(tier1, hi1) * cdf2(tier2, hi2) * ... — the
+  reference's scale product.  The composite (tier1, tier2, ...) plays
+  the role of the tier, block1 the role of the subsample block, and
+  the single-scramble estimator (incl. subsample error bars) is reused
+  verbatim.
+* ALIGNED hash scrambles (both sides of a 2-way join hash-scrambled on
+  the join key with the same seed and block count) are detected and
+  handled with the stronger rule: matching rows hash identically, so
+  block1 == block2 for every matching pair — each slab is cut to its
+  diagonal and the join gets a block-equality predicate (co-partitioned
+  slices, no cross terms), and inclusion is a SINGLE event with
+  P = cdf(tier, hi), not a product.  This is what makes
+  COUNT(DISTINCT join_key) over a join legal, the reference's
+  scramble-correctness rule
   (``SelectQueryCoordinator.ensureScrambleCorrectness:189-238``).
 """
 
@@ -36,55 +37,10 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .progressive import (
-    AggSpec,
-    ProgressiveResult,
-    _estimate,
-    _estimate_spark,
-    _partial_exprs,
-    fold_progressive,
-)
-from .scramble import BLOCK_COL, TIER_COL, ScrambleMeta
-
-_TIER2 = "_verdictdbtier2"
-_BLOCK2 = "_verdictdbblock2"
-
-
-class _JoinMeta:
-    """Adapter presenting a scramble-pair as a single scramble to
-    ``progressive._estimate``: tier = composite t1 * K + t2, block =
-    block1, coverage/block_prob multiplied by side 2's prefix coverage
-    (fixed per iteration).  ``aligned=True`` drops the product (the
-    inclusion events coincide)."""
-
-    def __init__(self, m1: ScrambleMeta, m2: ScrambleMeta, hi2: int, aligned: bool):
-        self.m1, self.m2, self.hi2, self.aligned = m1, m2, hi2, aligned
-        self.nblocks = m1.nblocks
-        self.k2 = max(len(m2.cdf), 1)
-
-    def composite(self, t1: int, t2: int) -> int:
-        return t1 * self.k2 + t2
-
-    def _split(self, t: int) -> tuple[int, int]:
-        return t // self.k2, t % self.k2
-
-    def coverage(self, upto_block: int, tier: int = 0) -> float:
-        t1, t2 = self._split(int(tier))
-        c1 = self.m1.coverage(upto_block, t1)
-        if self.aligned:
-            return c1
-        return c1 * self.m2.coverage(self.hi2, t2)
-
-    def block_prob(self, block: int, tier: int = 0) -> float:
-        t1, t2 = self._split(int(tier))
-        p1 = self.m1.block_prob(block, t1)
-        if self.aligned:
-            return p1
-        return p1 * self.m2.coverage(self.hi2, t2)
+from .progressive import AggSpec, ProgressiveResult, _progress, fold_progressive
+from .scramble import ScrambleMeta
 
 
 def is_aligned(meta1: ScrambleMeta, meta2: ScrambleMeta, on: Sequence[tuple[str, str]]) -> bool:
@@ -104,8 +60,6 @@ def is_aligned(meta1: ScrambleMeta, meta2: ScrambleMeta, on: Sequence[tuple[str,
 
 def _validate_join(
     aggs: Sequence[AggSpec],
-    meta1: ScrambleMeta,
-    meta2: ScrambleMeta,
     on: Sequence[tuple[str, str]],
     aligned: bool,
 ) -> None:
@@ -126,18 +80,6 @@ def _validate_join(
                 )
 
 
-def _spans(n1: int, n2: int) -> list[tuple[int, int, int, int]]:
-    """Square doubling prefixes: (lo1, hi1, lo2, hi2) per iteration,
-    where lo marks the first NEW block of the iteration (lo > hi means
-    that side gained nothing)."""
-    out, p_prev1, p_prev2, p = [], 0, 0, 1
-    while p_prev1 < n1 or p_prev2 < n2:
-        p1, p2 = min(p, n1), min(p, n2)
-        out.append((p_prev1, p1 - 1, p_prev2, p2 - 1))
-        p_prev1, p_prev2, p = p1, p2, p * 2
-    return out
-
-
 def progressive_join_agg(
     scramble1: DataFrame,
     meta1: ScrambleMeta,
@@ -156,161 +98,23 @@ def progressive_join_agg(
     ``on`` is a list of (left_col, right_col) equi-join pairs.  Each
     iteration doubles the covered square of the block plane and joins
     only the L-shaped increment; partials accumulate keyed by (group,
-    tier1, block1, tier2) and the estimate applies the
-    coverage-product scale.  ``schedule="single"`` covers the whole
-    block plane in ONE iteration (one join, one partial aggregation)
-    — the one-shot mode for callers that consume only the final
-    estimate (early_stop=False), skipping the L-shaped increment
-    ladder entirely; the estimator maths are identical because the
-    full-plane slice produces the same per-(group, tier, block)
-    partial rows the ladder accumulates.
+    composite tier, block1) and the estimate applies the
+    coverage-product scale.  ``schedule`` is ``"doubling"``,
+    ``"probe"`` or ``"single"`` (the whole plane in ONE join — the
+    one-shot mode for callers that consume only the final estimate),
+    see ``progressive._schedule``.
 
     ``transform(joined_df) -> DataFrame`` runs on each joined increment
     before aggregation (broadcast-dim joins, filters, derived columns)
-    under the same row-local contract as ``progressive_agg``.
-
-    ``engine`` works as in ``progressive_agg``: ``"driver"`` keeps the
-    partial table in pandas (the reference's in-memory combiner);
-    ``"spark"`` (or ``"auto"`` past ``engine_threshold`` accumulated
-    partial rows) accumulates partials as a DataFrame — the composite
-    tier is computed JVM-side — and runs the shared Spark estimator,
-    so high-cardinality group-bys over scramble joins never build an
-    O(groups x blocks) driver frame.
+    under the same row-local contract as ``progressive_agg``; ``engine``
+    works as there too.
     """
-    group_by = list(group_by)
     aligned = is_aligned(meta1, meta2, on)
-    _validate_join(aggs, meta1, meta2, on, aligned)
-    partial_exprs = _partial_exprs(aggs)
-
-    # side 2's tier/block columns are renamed so the join output keeps
-    # both coordinate systems
-    s2 = scramble2.withColumnRenamed(TIER_COL, _TIER2).withColumnRenamed(
-        BLOCK_COL, _BLOCK2
+    _validate_join(aggs, on, aligned)
+    yield from _progress(
+        [(scramble1, meta1), (scramble2, meta2)], [on], aggs, group_by,
+        schedule, transform, engine, engine_threshold, aligned=aligned,
     )
-    cond = None
-    for lc, rc in on:
-        c = scramble1[lc] == s2[rc]
-        cond = c if cond is None else cond & c
-    if aligned:
-        cond = cond & (scramble1[BLOCK_COL] == s2[_BLOCK2])
-
-    k2 = max(len(meta2.cdf), 1)
-
-    def slice_agg(a1: int, b1: int, a2: int, b2: int) -> DataFrame:
-        """Partial-aggregate one block rectangle; the composite tier
-        (t1 * k2 + t2, matching ``_JoinMeta.composite``) is computed
-        JVM-side so both estimate engines consume the same shape."""
-        left = scramble1.where(F.col(BLOCK_COL).between(a1, b1))
-        right = s2.where(F.col(_BLOCK2).between(a2, b2))
-        joined = left.join(right, cond)
-        if transform is not None:
-            joined = transform(joined)
-        return (
-            joined.groupBy(*group_by, TIER_COL, BLOCK_COL, _TIER2)
-            .agg(*partial_exprs)
-            .withColumn(TIER_COL, F.col(TIER_COL) * k2 + F.col(_TIER2))
-            .drop(_TIER2)
-        )
-
-    def increment_slices(lo1, hi1, lo2, hi2) -> list[tuple[int, int, int, int]]:
-        """The L-shaped increment (new1 x all2) + (old1 x new2)."""
-        if aligned:
-            # block1 == block2 for matches: the only populated cells of
-            # the increment are the new diagonal blocks
-            d = (max(lo1, lo2), min(hi1, hi2))
-            return [(d[0], d[1], d[0], d[1])] if d[0] <= d[1] else []
-        slices = []
-        if hi1 >= lo1:
-            slices.append((lo1, hi1, 0, hi2))  # new blocks1 x full prefix2
-        if hi2 >= lo2 and lo1 > 0:
-            slices.append((0, lo1 - 1, lo2, hi2))  # old prefix1 x new blocks2
-        return slices
-
-    acc: list[pd.DataFrame] = []
-    total_rows = 0
-    acc_sdf: DataFrame | None = None
-    use_spark = engine == "spark"
-    have_rows = False
-    n1, n2 = meta1.nblocks, meta2.nblocks
-    if schedule == "single":
-        spans = [(0, n1 - 1, 0, n2 - 1)]
-    elif schedule == "probe" and (n1 > 1 or n2 > 1):
-        # (0,0) cell alone, then the rest of the plane: the 1-cell
-        # first span bounds the driver partial frame and arms the
-        # auto engine switch before the full plane is joined; the
-        # remainder decomposes into the standard two L-slices
-        spans = [(0, 0, 0, 0), (1, n1 - 1, 1, n2 - 1)]
-    elif schedule == "probe":
-        spans = [(0, n1 - 1, 0, n2 - 1)]
-    else:
-        spans = _spans(n1, n2)
-    for it, (lo1, hi1, lo2, hi2) in enumerate(spans):
-        cur_hi1, cur_hi2 = max(hi1, lo1 - 1), max(hi2, lo2 - 1)
-        new_dfs = [slice_agg(*s) for s in increment_slices(lo1, hi1, lo2, hi2)]
-        plane_cov = (
-            (cur_hi1 + 1) * (cur_hi2 + 1) / (meta1.nblocks * meta2.nblocks)
-        )
-        if not use_spark:
-            for adf in new_dfs:
-                pdf = adf.toPandas()
-                if len(pdf):
-                    acc.append(pdf)
-                    total_rows += len(pdf)
-            if (
-                engine == "auto"
-                # projected full-plane partial rows (see progressive_agg)
-                and total_rows / max(plane_cov, 1e-9) > engine_threshold
-                and plane_cov <= 0.5
-            ):
-                # switch: re-aggregate the covered rectangle in ONE
-                # partition-pruned Spark job rather than round-tripping
-                # pandas partials back up; the coverage guard bounds the
-                # re-join cost — a late crossing stays on the driver,
-                # whose closed-form estimator is O(nnz)
-                use_spark = True
-                acc_sdf = slice_agg(0, cur_hi1, 0, cur_hi2).localCheckpoint(eager=True)
-                acc = []
-        else:
-            for adf in new_dfs:
-                acc_sdf = adf if acc_sdf is None else acc_sdf.unionByName(adf)
-            if acc_sdf is not None and new_dfs:
-                acc_sdf = acc_sdf.localCheckpoint(eager=True)
-        jm = _JoinMeta(meta1, meta2, cur_hi2, aligned)
-        cov1 = meta1.coverage(cur_hi1, 0)
-        cov2 = meta2.coverage(cur_hi2, 0)
-        cov = cov1 if aligned else cov1 * cov2
-        exact = (
-            cur_hi1 + 1 >= meta1.nblocks
-            and cur_hi2 + 1 >= meta2.nblocks
-            and cov >= 1.0 - 1e-9
-        )
-        if use_spark:
-            # no partials yet -> no estimate (mirrors the driver
-            # branch; an empty frame would let the stop rule converge
-            # on nothing).  The probe stops at the first non-empty
-            # iteration — partials only accumulate.
-            if acc_sdf is None or (not have_rows and acc_sdf.isEmpty()):
-                continue
-            have_rows = True
-            yield ProgressiveResult(
-                estimates_sdf=_estimate_spark(acc_sdf, aggs, group_by, jm, cur_hi1),
-                coverage=cov,
-                blocks_covered=(cur_hi1 + 1) + (cur_hi2 + 1),
-                iteration=it,
-                is_exact=exact,
-            )
-        else:
-            if not acc:
-                continue
-            whole = pd.concat(acc, ignore_index=True)
-            est = _estimate(whole, aggs, group_by, jm, cur_hi1)
-            yield ProgressiveResult(
-                estimates=est,
-                coverage=cov,
-                blocks_covered=(cur_hi1 + 1) + (cur_hi2 + 1),
-                iteration=it,
-                is_exact=exact,
-            )
 
 
 def approx_join_agg(
@@ -344,85 +148,6 @@ def approx_join_agg(
     )
 
 
-# ===================================================== N-way chain joins
-class _MultiJoinMeta:
-    """N-scramble estimator adapter (the full hyper-table-cube case,
-    ``ola/HyperTableCube.java:69-106``): composite tier = mixed radix
-    over all N per-side tiers, block = side 1's block; sides 2..N
-    multiply in their CURRENT prefix coverage (``AggMeta.java:149-185``
-    generalizes the two-scramble scale product to d dimensions)."""
-
-    def __init__(self, metas: Sequence[ScrambleMeta], his_rest: Sequence[int]):
-        self.metas = list(metas)
-        self.his_rest = list(his_rest)  # current hi block of sides 2..N
-        self.nblocks = metas[0].nblocks
-        self.ks = [max(len(m.cdf), 1) for m in metas]
-
-    def composite(self, tiers: Sequence[int]) -> int:
-        t = 0
-        for ti, k in zip(tiers, self.ks):
-            t = t * k + int(ti)
-        return t
-
-    def _split(self, t: int) -> list[int]:
-        out = []
-        for k in reversed(self.ks):
-            out.append(t % k)
-            t //= k
-        return list(reversed(out))
-
-    def coverage(self, upto_block: int, tier: int = 0) -> float:
-        ts = self._split(int(tier))
-        c = self.metas[0].coverage(upto_block, ts[0])
-        for m, hi, tj in zip(self.metas[1:], self.his_rest, ts[1:]):
-            c *= m.coverage(hi, tj)
-        return c
-
-    def block_prob(self, block: int, tier: int = 0) -> float:
-        ts = self._split(int(tier))
-        p = self.metas[0].block_prob(block, ts[0])
-        for m, hi, tj in zip(self.metas[1:], self.his_rest, ts[1:]):
-            p *= m.coverage(hi, tj)
-        return p
-
-
-def _multi_spans(ns: Sequence[int]) -> list[list[tuple[int, int]]]:
-    """Doubling hypercube prefixes: per iteration, one (lo, hi) per
-    side, lo = first NEW block (lo > hi: no new blocks that side)."""
-    prev = [0] * len(ns)
-    p, out = 1, []
-    while any(pv < n for pv, n in zip(prev, ns)):
-        cur = [min(p, n) for n in ns]
-        out.append([(pv, c - 1) for pv, c in zip(prev, cur)])
-        prev, p = cur, p * 2
-    return out
-
-
-def _slabs(spans: list[tuple[int, int]]) -> list[list[tuple[int, int]]]:
-    """Decompose a hypercube increment into disjoint slabs: slab i =
-    old_1 x .. x old_{i-1} x NEW_i x cur_{i+1} x .. x cur_N (each block
-    tuple of the new hypercube is covered exactly once across slabs)."""
-    out = []
-    for i, (lo_i, hi_i) in enumerate(spans):
-        if lo_i > hi_i:
-            continue
-        ranges = []
-        ok = True
-        for j, (lo_j, hi_j) in enumerate(spans):
-            if j < i:
-                if lo_j - 1 < 0:
-                    ok = False
-                    break
-                ranges.append((0, lo_j - 1))
-            elif j == i:
-                ranges.append((lo_i, hi_i))
-            else:
-                ranges.append((0, max(hi_j, lo_j - 1)))
-        if ok:
-            out.append(ranges)
-    return out
-
-
 def progressive_multi_join_agg(
     scrambles: Sequence[tuple[DataFrame, ScrambleMeta]],
     on: Sequence[Sequence[tuple[str, str]]],
@@ -439,12 +164,11 @@ def progressive_multi_join_agg(
     table_{i+1}_col) equi-join pairs linking consecutive scrambles.
 
     Each iteration doubles every side's block prefix and joins only the
-    disjoint slab increments of the hypercube, so a full run touches
-    every block tuple exactly once; inclusion probability of a joined
-    row tuple is the product of the N prefix coverages (independent
-    scramble hashes), applied through the same single-scramble H-T
-    estimator.  COUNT DISTINCT is not supported over N-way scramble
-    joins (the aligned-hash argument only composes pairwise).
+    disjoint slab increments of the hypercube; the inclusion
+    probability of a joined row tuple is the product of the N prefix
+    coverages (independent scramble hashes).  COUNT DISTINCT is not
+    supported over N-way scramble joins (the aligned-hash argument only
+    composes pairwise).
     """
     n = len(scrambles)
     if n < 2:
@@ -454,139 +178,9 @@ def progressive_multi_join_agg(
     for a in aggs:
         if a.op == "countdistinct":
             raise ValueError("countdistinct unsupported over N-way scramble joins")
-    group_by = list(group_by)
-    partial_exprs = _partial_exprs(aggs)
-    metas = [m for _, m in scrambles]
-
-    # rename side j>=2 coordinates; side 1 keeps TIER_COL/BLOCK_COL
-    dfs = [scrambles[0][0]]
-    tcols, bcols = [TIER_COL], [BLOCK_COL]
-    for j in range(1, n):
-        tc, bc = f"_vdbtier{j + 1}", f"_vdbblock{j + 1}"
-        dfs.append(
-            scrambles[j][0].withColumnRenamed(TIER_COL, tc).withColumnRenamed(BLOCK_COL, bc)
-        )
-        tcols.append(tc)
-        bcols.append(bc)
-
-    ks = [max(len(m.cdf), 1) for m in metas]
-
-    def join_ranges(ranges: list[tuple[int, int]]) -> DataFrame:
-        cur = dfs[0].where(F.col(BLOCK_COL).between(*ranges[0]))
-        for j in range(1, n):
-            right = dfs[j].where(F.col(bcols[j]).between(*ranges[j]))
-            cond = None
-            for lc, rc in on[j - 1]:
-                c = cur[lc] == right[rc]
-                cond = c if cond is None else cond & c
-            cur = cur.join(right, cond)
-        return cur
-
-    def slab_agg(ranges: list[tuple[int, int]]) -> DataFrame:
-        """Partial-aggregate one hypercube slab with the mixed-radix
-        composite tier (matches ``_MultiJoinMeta.composite``) computed
-        JVM-side."""
-        joined = join_ranges(ranges)
-        if transform is not None:
-            joined = transform(joined)
-        agg_df = joined.groupBy(*group_by, *tcols, BLOCK_COL).agg(*partial_exprs)
-        comp = F.col(tcols[0])
-        for j in range(1, n):
-            comp = comp * ks[j] + F.col(tcols[j])
-        return agg_df.withColumn(TIER_COL, comp).drop(
-            *[tc for tc in tcols if tc != TIER_COL]
-        )
-
-    acc: list[pd.DataFrame] = []
-    total_rows = 0
-    acc_sdf: DataFrame | None = None
-    use_spark = engine == "spark"
-    have_rows = False
-    nb_total = 1.0
-    for m in metas:
-        nb_total *= m.nblocks
-    if schedule == "single":
-        # one iteration covering the full hypercube: _slabs emits the
-        # single full-cube slab (every other slab needs an "old" prefix
-        # that does not exist) — the one-shot mode for early_stop=False
-        all_spans = [[(0, m.nblocks - 1) for m in metas]]
-    elif schedule == "probe" and any(m.nblocks > 1 for m in metas):
-        # origin cell alone, then the rest (disjoint slabs) — the
-        # auto-engine final-only mode, see progressive._schedule
-        all_spans = [
-            [(0, 0) for _ in metas],
-            [(1, m.nblocks - 1) for m in metas],
-        ]
-    elif schedule == "probe":
-        all_spans = [[(0, m.nblocks - 1) for m in metas]]
-    else:
-        all_spans = _multi_spans([m.nblocks for m in metas])
-    for it, spans in enumerate(all_spans):
-        cur_his = [max(hi, lo - 1) for lo, hi in spans]
-        new_dfs = [slab_agg(r) for r in _slabs(spans)]
-        cube_cov = 1.0
-        for h in cur_his:
-            cube_cov *= h + 1
-        cube_cov /= nb_total
-        if not use_spark:
-            for adf in new_dfs:
-                pdf = adf.toPandas()
-                if len(pdf):
-                    acc.append(pdf)
-                    total_rows += len(pdf)
-            if (
-                engine == "auto"
-                # projected full-cube partial rows (see progressive_agg)
-                and total_rows / max(cube_cov, 1e-9) > engine_threshold
-                and cube_cov <= 0.5
-            ):
-                # switch: one pruned re-aggregation of the covered
-                # hyper-rectangle replaces the collected partials; the
-                # coverage guard bounds the N-way re-join cost (a late
-                # crossing stays on the driver's O(nnz) estimator)
-                use_spark = True
-                acc_sdf = slab_agg([(0, h) for h in cur_his]).localCheckpoint(
-                    eager=True
-                )
-                acc = []
-        else:
-            for adf in new_dfs:
-                acc_sdf = adf if acc_sdf is None else acc_sdf.unionByName(adf)
-            if acc_sdf is not None and new_dfs:
-                acc_sdf = acc_sdf.localCheckpoint(eager=True)
-        jm = _MultiJoinMeta(metas, cur_his[1:])
-        cov = 1.0
-        for m, hi in zip(metas, cur_his):
-            cov *= m.coverage(hi, 0)
-        exact = (
-            all(h + 1 >= m.nblocks for m, h in zip(metas, cur_his))
-            and cov >= 1.0 - 1e-9
-        )
-        if use_spark:
-            # mirror the driver branch's empty-partials skip (see the
-            # two-scramble loop)
-            if acc_sdf is None or (not have_rows and acc_sdf.isEmpty()):
-                continue
-            have_rows = True
-            yield ProgressiveResult(
-                estimates_sdf=_estimate_spark(acc_sdf, aggs, group_by, jm, cur_his[0]),
-                coverage=cov,
-                blocks_covered=sum(h + 1 for h in cur_his),
-                iteration=it,
-                is_exact=exact,
-            )
-        else:
-            if not acc:
-                continue
-            whole = pd.concat(acc, ignore_index=True)
-            est = _estimate(whole, aggs, group_by, jm, cur_his[0])
-            yield ProgressiveResult(
-                estimates=est,
-                coverage=cov,
-                blocks_covered=sum(h + 1 for h in cur_his),
-                iteration=it,
-                is_exact=exact,
-            )
+    yield from _progress(
+        scrambles, on, aggs, group_by, schedule, transform, engine, engine_threshold
+    )
 
 
 def approx_multi_join_agg(

@@ -1,4 +1,4 @@
-"""Progressive approximate aggregation over a scramble.
+"""Progressive approximate aggregation over one block space.
 
 Rebuild of the reference's async/OLA path: block-restricted partial
 aggregates (``ola/AsyncQueryExecutionPlan.convertToProgressiveAgg:
@@ -11,14 +11,22 @@ reconstructed as sum/count (``replaceColumnWithAggMeta:565-639``),
 and a difference-based early stop (2% per value / 5% group count,
 ``QueryResultAccuracyEstimatorFromDifference.java:35-40``).
 
-Spark-first architecture: each schedule step is ONE partition-pruned
-scan of only the NEW blocks (the block column is the physical
-partition column, so Catalyst prunes files), producing a tiny
-per-(block, tier, group) partial table that is collected and merged
-driver-side in pandas — the exact analogue of the reference's
-in-memory H2 combiner (``ola/InMemoryAggregate.java:36-273``), with
-pandas in place of H2.  Full coverage => exact (scale factor 1.0),
-the reference's own oracle (SparkTpchSelectQueryCoordinatorTest).
+One driver, ``_progress``, plans every progressive aggregate over a
+d-dimensional block space, as the reference does
+(``ola/HyperTableCube.java:69-106``): a single scramble is d=1, a
+chain join of N scrambles is the N-dimensional hyper-table cube.  Per
+schedule step it joins only the NEW disjoint slabs of the covered
+block box (each slab a partition-pruned scan per side), producing a
+tiny per-(group, tier, block) partial table that is collected and
+merged driver-side in pandas — the analogue of the reference's
+in-memory H2 combiner (``ola/InMemoryAggregate.java:36-273``) — or,
+for high-cardinality group-bys, kept a DataFrame and estimated by
+Spark.  Inclusion probabilities multiply across independent
+scrambles (``ola/AggMeta.java:149-185``); ``_BlockSpaceMeta`` presents
+the product to the single-scramble estimators.  Full coverage =>
+exact (scale factor 1.0), the reference's own oracle
+(SparkTpchSelectQueryCoordinatorTest).  ``progressive_agg`` here and
+the join entry points in ``join.py`` are signature adapters over it.
 
 COUNT(DISTINCT c) is only legal on a hash scramble on c: the block
 id is a function of hash(c), so each distinct value lands in exactly
@@ -29,6 +37,7 @@ correct combiner — the same correctness rule the reference enforces
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -150,34 +159,43 @@ def _validate(aggs: Sequence[AggSpec], meta: ScrambleMeta) -> None:
             )
 
 
-def _schedule(nblocks: int, kind: str) -> list[tuple[int, int]]:
-    """Block spans per iteration. 'doubling' mirrors geometric coverage
-    growth (few Spark jobs); 'linear' mirrors the reference's
-    one-block-per-iteration stream."""
-    if kind == "linear":
-        return [(i, i) for i in range(nblocks)]
-    if kind == "single":
-        # one span covering every block: the one-shot mode for callers
-        # that consume only the FINAL estimate (nested/derived-table
-        # inners executed at plan time with early_stop=False) — one
-        # scan, one partial aggregation, one estimate, zero
-        # intermediate materializations
-        return [(0, nblocks - 1)]
+def _schedule(ns: Sequence[int], kind: str) -> list[list[tuple[int, int]]]:
+    """The span ladder over a block space of per-side block counts
+    ``ns``: per iteration, one (lo, hi) per side, where lo is that
+    side's first NEW block and hi its covered prefix end (lo > hi: the
+    side gained nothing this iteration).
+
+    * ``doubling`` — geometric coverage growth (few Spark jobs).  One
+      scramble grows its prefix 1 -> 3 -> 7 -> 15 blocks (each span
+      twice the previous one); a join grows every side's prefix
+      1 -> 2 -> 4 -> 8.
+    * ``linear`` — the reference's one-block-per-iteration stream; one
+      scramble only.
+    * ``single`` — one span over every block: the one-shot mode for
+      callers that consume only the FINAL estimate — one scan, one
+      partial aggregation, one estimate.
+    * ``probe`` — block 0 (the origin cell) alone, then everything
+      else.  The final-only mode for the AUTO engine: the 1-cell first
+      span bounds the driver partial frame and arms the engine switch
+      BEFORE the full box is pulled, while the remainder still scans
+      in one step."""
+    if kind == "single" or (kind == "probe" and all(n <= 1 for n in ns)):
+        return [[(0, n - 1) for n in ns]]
     if kind == "probe":
-        # two spans: block 0 alone, then everything else.  The final-
-        # only mode for the AUTO engine — the 1-block first span bounds
-        # the driver partial frame at O(groups x tiers) rows and arms
-        # the engine-threshold switch BEFORE the full prefix is pulled,
-        # while the remainder still scans in one job (vs the doubling
-        # ladder's log2(nblocks) jobs)
-        if nblocks <= 1:
-            return [(0, 0)]
-        return [(0, 0), (1, nblocks - 1)]
-    spans, lo, step = [], 0, 1
-    while lo < nblocks:
-        hi = min(lo + step - 1, nblocks - 1)
-        spans.append((lo, hi))
-        lo, step = hi + 1, step * 2
+        return [[(0, 0) for _ in ns], [(1, n - 1) for n in ns]]
+    if kind == "linear" and len(ns) == 1:
+        return [[(i, i)] for i in range(ns[0])]
+    if kind != "doubling":
+        raise ValueError(
+            f"unknown schedule {kind!r} for {len(ns)} scramble(s): expected "
+            + ("doubling, linear, probe or single" if len(ns) == 1
+               else "doubling, probe or single")
+        )
+    spans, prev, p = [], [0] * len(ns), 1
+    while any(pv < n for pv, n in zip(prev, ns)):
+        cur = [min(p, n) for n in ns]
+        spans.append([(pv, c - 1) for pv, c in zip(prev, cur)])
+        prev, p = cur, 2 * p + 1 if len(ns) == 1 else 2 * p
     return spans
 
 
@@ -581,6 +599,234 @@ def converged_result(
     )
 
 
+class _BlockSpaceMeta:
+    """The N scrambles of one block space presented as a single
+    scramble to ``_estimate``/``_estimate_spark``: tier = mixed-radix
+    composite of the per-side tiers (t1 * k2 + t2 for two sides), block
+    = side 1's block (the subsample block), and sides 2..N multiply in
+    their CURRENT prefix coverage (``ola/AggMeta.java:149-185``).
+    ``aligned`` drops the product: matching rows of aligned hash
+    scrambles share a block, so inclusion is a single event."""
+
+    def __init__(
+        self, metas: Sequence[ScrambleMeta], his_rest: Sequence[int], aligned: bool
+    ):
+        self.metas, self.his_rest, self.aligned = list(metas), list(his_rest), aligned
+        self.ks = [max(len(m.cdf), 1) for m in metas]
+        self._memo: dict[int, tuple[int, list[float]]] = {}
+
+    def _split(self, tier: int) -> tuple[int, list[float]]:
+        """(side-1 tier, coverages of sides 2..N) of a composite tier,
+        memoized: the estimators ask once per partial row."""
+        hit = self._memo.get(tier)
+        if hit is None:
+            t, rest = tier, []
+            for m, hi, k in zip(
+                self.metas[:0:-1], self.his_rest[::-1], self.ks[:0:-1]
+            ):
+                t, tj = divmod(t, k)
+                rest.append(m.coverage(hi, tj))
+            hit = self._memo[tier] = (t, [] if self.aligned else rest[::-1])
+        return hit
+
+    def coverage(self, upto_block: int, tier: int = 0) -> float:
+        t, rest = self._split(int(tier))
+        p = self.metas[0].coverage(upto_block, t)
+        for c in rest:
+            p *= c
+        return p
+
+    def block_prob(self, block: int, tier: int = 0) -> float:
+        t, rest = self._split(int(tier))
+        p = self.metas[0].block_prob(block, t)
+        for c in rest:
+            p *= c
+        return p
+
+
+def _slabs(spans: list[tuple[int, int]]) -> list[list[tuple[int, int]]]:
+    """Decompose a block-box increment into disjoint slabs: slab i =
+    old_1 x .. x old_{i-1} x NEW_i x cur_{i+1} x .. x cur_N (each block
+    tuple of the new box is covered exactly once across slabs)."""
+    out = []
+    for i, (lo_i, hi_i) in enumerate(spans):
+        if lo_i > hi_i or any(lo_j == 0 for lo_j, _ in spans[:i]):
+            continue
+        out.append(
+            [(0, lo_j - 1) for lo_j, _ in spans[:i]]
+            + [(lo_i, hi_i)]
+            + [(0, max(hi_j, lo_j - 1)) for lo_j, hi_j in spans[i + 1:]]
+        )
+    return out
+
+
+def _progress(
+    sides: Sequence[tuple[DataFrame, ScrambleMeta]],
+    on: Sequence[Sequence[tuple[str, str]]],
+    aggs: Sequence[AggSpec],
+    group_by: Sequence[str],
+    schedule: str,
+    transform,
+    engine: str,
+    engine_threshold: int,
+    aligned: bool = False,
+) -> Iterator[ProgressiveResult]:
+    """The progressive driver over the block space of N scrambles
+    chain-joined by ``on[j]`` (the (left_col, right_col) equi-join
+    pairs linking side j+2 to the sides before it); see
+    ``progressive_agg`` for the engine and transform contracts.
+
+    Each step of ``_schedule`` joins only the new ``_slabs`` of the
+    covered block box, so a full run touches every block tuple exactly
+    once; ``aligned`` (two hash scrambles on the join key, see
+    ``join.is_aligned``) cuts every slab to its diagonal and adds a
+    block-equality join predicate — co-partitioned slices, no cross
+    terms."""
+    group_by = list(group_by)
+    partial_exprs = _partial_exprs(aggs)
+    metas = [m for _, m in sides]
+    ns = [m.nblocks for m in metas]
+    ks = [max(len(m.cdf), 1) for m in metas]
+    # side 1 keeps TIER_COL/BLOCK_COL; sides 2..N are renamed so the
+    # join output keeps every coordinate system
+    dfs, tcols, bcols = [sides[0][0]], [TIER_COL], [BLOCK_COL]
+    for j, (sdf, _) in enumerate(sides[1:], start=2):
+        tcols.append(f"_vdbtier{j}")
+        bcols.append(f"_vdbblock{j}")
+        dfs.append(
+            sdf.withColumnRenamed(TIER_COL, tcols[-1])
+            .withColumnRenamed(BLOCK_COL, bcols[-1])
+        )
+
+    def box_agg(ranges: list[tuple[int, int]]) -> DataFrame:
+        """Partial-aggregate one box of the block space; the composite
+        tier (mixed radix, matching ``_BlockSpaceMeta._split``) is
+        computed JVM-side so both estimate engines consume the same
+        shape."""
+        cur = dfs[0].where(F.col(BLOCK_COL).between(*ranges[0]))
+        for j in range(1, len(dfs)):
+            right = dfs[j].where(F.col(bcols[j]).between(*ranges[j]))
+            cond = None
+            for lc, rc in on[j - 1]:
+                e = cur[lc] == right[rc]
+                cond = e if cond is None else cond & e
+            if aligned:
+                cond = cond & (cur[BLOCK_COL] == right[bcols[j]])
+            cur = cur.join(right, cond)
+        if transform is not None:
+            cur = transform(cur)
+        # the grouping-key order fixes Spark's aggregate plan and output
+        # row order, and with them the floating-point summation order
+        # of every estimate downstream: one and two sides group as
+        # (tier, block, tier2), longer chains as (tiers..., block)
+        keys = [TIER_COL, BLOCK_COL, *tcols[1:]] if len(dfs) <= 2 else [*tcols, BLOCK_COL]
+        agg_df = cur.groupBy(*group_by, *keys).agg(*partial_exprs)
+        if len(dfs) == 1:
+            return agg_df
+        comp = F.col(TIER_COL)
+        for tc, k in zip(tcols[1:], ks[1:]):
+            comp = comp * k + F.col(tc)
+        return agg_df.withColumn(TIER_COL, comp).drop(*tcols[1:])
+
+    def slabs(spans: list[tuple[int, int]]) -> list[list[tuple[int, int]]]:
+        out = _slabs(spans)
+        if aligned:
+            # block1 == block2 for every match: only the diagonal of a
+            # slab holds rows
+            cut = [(max(r[0] for r in s), min(r[1] for r in s)) for s in out]
+            out = [[d] * len(s) for d, s in zip(cut, out) if d[0] <= d[1]]
+        return out
+
+    acc: list[pd.DataFrame] = []
+    total_rows = 0
+    acc_sdf: DataFrame | None = None
+    use_spark = engine == "spark"
+    have_rows = False
+    for it, spans in enumerate(_schedule(ns, schedule)):
+        his = [max(hi, lo - 1) for lo, hi in spans]
+        new_dfs = [box_agg(r) for r in slabs(spans)]
+        if not use_spark:
+            for adf in new_dfs:
+                pdf = adf.toPandas()
+                if len(pdf):
+                    acc.append(pdf)
+                    total_rows += len(pdf)
+            # PROJECTED full-coverage partial rows: rows / covered share
+            # of the block box, prod_i (hi_i + 1) / n_i.  Switching on
+            # the projection instead of the accumulated count means a
+            # high-cardinality query crosses after its FIRST small span
+            # — before a later span pulls the whole O(groups x blocks)
+            # frame through toPandas (the probe schedule's second span
+            # is everything, so a react-after-collect rule would defeat
+            # the bound the 1-cell first span exists to provide).  For
+            # joins this is the plane/cube share, not side 1's: partial
+            # rows are keyed by block1 only, but a group's rows arrive
+            # with EVERY side's coverage (an FK group needs its parent
+            # row's block2), so projecting by side 1 alone under-projects
+            # high-cardinality groups by 1/cov2 and the driver would
+            # collect far past the threshold.  The box share is an
+            # upper bound; switching early on saturating groups is the
+            # price of bounded driver memory.
+            share = math.prod(h + 1 for h in his) / math.prod(ns)
+            if engine == "auto" and total_rows / max(share, 1e-9) > engine_threshold:
+                # switch to the Spark engine.  Early crossing (<= half
+                # the box): RE-AGGREGATE the covered box in one
+                # partition-pruned Spark job — cheap, and sidesteps the
+                # Arrow nullable-int -> float64 coercion of the
+                # collected chunks.  Late crossing (past half, where a
+                # rescan would redo most of the work): LIFT the
+                # accumulated driver chunks into a DataFrame instead —
+                # either way the driver never keeps growing an
+                # O(groups x blocks) frame once the threshold fires.
+                use_spark = True
+                box = box_agg([(0, h) for h in his])
+                if share > 0.5 and acc:
+                    try:
+                        acc_sdf = _lift_partials(
+                            dfs[0].sparkSession, acc, box
+                        ).localCheckpoint(eager=True)
+                    except Exception:
+                        pass  # uninferable chunk — rescan below
+                if acc_sdf is None:
+                    acc_sdf = box.localCheckpoint(eager=True)
+                acc = []
+        else:
+            for adf in new_dfs:
+                acc_sdf = adf if acc_sdf is None else acc_sdf.unionByName(adf)
+            if acc_sdf is not None and new_dfs:
+                # materialize: old blocks must not be re-scanned per step
+                acc_sdf = acc_sdf.localCheckpoint(eager=True)
+        # one scramble is its own meta: the estimators call it once per
+        # partial row, where the adapter's tier split would cost ~4x
+        meta = metas[0] if len(metas) == 1 else _BlockSpaceMeta(metas, his[1:], aligned)
+        cov = meta.coverage(his[0], 0)
+        if use_spark:
+            # no partials yet -> no estimate (as on the driver): an
+            # empty partial frame would yield an empty (or all-NULL
+            # scalar) estimate that the stop rule could spuriously
+            # accept.  The isEmpty probe runs on the checkpointed frame
+            # and stops at the first non-empty step (rows only
+            # accumulate).
+            if acc_sdf is None or (not have_rows and acc_sdf.isEmpty()):
+                continue
+            have_rows = True
+            est = {"estimates_sdf": _estimate_spark(acc_sdf, aggs, group_by, meta, his[0])}
+        elif acc:
+            whole = pd.concat(acc, ignore_index=True)
+            est = {"estimates": _estimate(whole, aggs, group_by, meta, his[0])}
+        else:
+            continue
+        yield ProgressiveResult(
+            **est,
+            coverage=cov,
+            blocks_covered=sum(h + 1 for h in his),
+            iteration=it,
+            # a partial-size scramble never reaches coverage 1: its
+            # full prefix is still an estimate of the original table
+            is_exact=all(h + 1 >= n for h, n in zip(his, ns)) and cov >= 1.0 - 1e-9,
+        )
+
+
 def progressive_agg(
     scramble: DataFrame,
     meta: ScrambleMeta,
@@ -614,107 +860,15 @@ def progressive_agg(
     Spark aggregations (the reference's CTAS/temp-table path for
     high-cardinality group-bys, ``ola/SelectAsyncAggExecutionNode``);
     ``"auto"`` starts on the driver and switches to Spark once the
-    accumulated partial rows exceed ``engine_threshold``.  At cluster
-    scale swap the per-iteration ``localCheckpoint`` for a reliable
-    checkpoint directory.
+    projected full-coverage partial rows exceed ``engine_threshold``.
+    At cluster scale swap the per-iteration ``localCheckpoint`` for a
+    reliable checkpoint directory.
     """
     _validate(aggs, meta)
-    group_by = list(group_by)
-    partial_exprs = _partial_exprs(aggs)
-    acc: list[pd.DataFrame] = []
-    total_rows = 0
-    acc_sdf: DataFrame | None = None
-    use_spark = engine == "spark"
-    have_rows = False
-    spans = _schedule(meta.nblocks, schedule)
-    for it, (lo, hi) in enumerate(spans):
-        batch = scramble.where(F.col(BLOCK_COL).between(lo, hi))
-        if transform is not None:
-            batch = transform(batch)
-        agg_df = batch.groupBy(*group_by, TIER_COL, BLOCK_COL).agg(*partial_exprs)
-        if not use_spark:
-            pdf = agg_df.toPandas()
-            if len(pdf):
-                acc.append(pdf)
-                total_rows += len(pdf)
-            # PROJECTED full-coverage partial rows (rows scale ~linearly
-            # with covered blocks until groups saturate): switching on
-            # the projection instead of the accumulated count means a
-            # high-cardinality query crosses after its FIRST small span
-            # — before a later span pulls the whole O(groups x blocks)
-            # frame through toPandas (the probe schedule's second span
-            # is everything, so a react-after-collect rule would defeat
-            # the bound the 1-block first span exists to provide)
-            cov_now = meta.coverage(hi, 0)
-            projected = total_rows / max(cov_now, 1e-9)
-            if engine == "auto" and projected > engine_threshold:
-                # switch to the Spark engine.  Early crossing (<= half
-                # coverage): RE-AGGREGATE the covered prefix in one
-                # partition-pruned Spark job — cheap, and sidesteps the
-                # Arrow nullable-int -> float64 coercion of the
-                # collected chunks.  Late crossing (past half coverage,
-                # where a rescan would redo most of the work): LIFT the
-                # accumulated driver chunks into a DataFrame instead —
-                # either way the driver never keeps growing an
-                # O(groups x blocks) frame once the threshold fires.
-                use_spark = True
-                lifted = None
-                if meta.coverage(hi, 0) > 0.5 and acc:
-                    try:
-                        lifted = _lift_partials(
-                            scramble.sparkSession, acc, agg_df
-                        ).localCheckpoint(eager=True)
-                    except Exception:
-                        lifted = None  # uninferable chunk — rescan below
-                if lifted is not None:
-                    acc_sdf = lifted
-                else:
-                    prefix = scramble.where(F.col(BLOCK_COL).between(0, hi))
-                    if transform is not None:
-                        prefix = transform(prefix)
-                    acc_sdf = (
-                        prefix.groupBy(*group_by, TIER_COL, BLOCK_COL)
-                        .agg(*partial_exprs)
-                        .localCheckpoint(eager=True)
-                    )
-                acc = []
-        else:
-            nxt = agg_df if acc_sdf is None else acc_sdf.unionByName(agg_df)
-            # materialize: old blocks must not be re-scanned per iteration
-            acc_sdf = nxt.localCheckpoint(eager=True)
-        cov = meta.coverage(hi, 0)
-        # a partial-size scramble never reaches coverage 1: its
-        # full prefix is still an estimate of the original table
-        exact = hi + 1 >= meta.nblocks and cov >= 1.0 - 1e-9
-        if use_spark:
-            # mirror the driver branch's "no partials yet -> no
-            # estimate": an empty partial frame would yield an empty
-            # (or all-NULL scalar) estimate that the stop rule could
-            # spuriously accept.  The isEmpty probe runs on the
-            # checkpointed frame and stops at the first non-empty
-            # iteration (rows only accumulate).
-            if acc_sdf is None or (not have_rows and acc_sdf.isEmpty()):
-                continue
-            have_rows = True
-            yield ProgressiveResult(
-                estimates_sdf=_estimate_spark(acc_sdf, aggs, group_by, meta, hi),
-                coverage=cov,
-                blocks_covered=hi + 1,
-                iteration=it,
-                is_exact=exact,
-            )
-        else:
-            if not acc:
-                continue
-            whole = pd.concat(acc, ignore_index=True)
-            est = _estimate(whole, aggs, group_by, meta, hi)
-            yield ProgressiveResult(
-                estimates=est,
-                coverage=cov,
-                blocks_covered=hi + 1,
-                iteration=it,
-                is_exact=exact,
-            )
+    yield from _progress(
+        [(scramble, meta)], [], aggs, group_by, schedule, transform,
+        engine, engine_threshold,
+    )
 
 
 def converged(

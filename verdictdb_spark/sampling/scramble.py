@@ -436,9 +436,20 @@ def write_scramble(df: DataFrame, meta: ScrambleMeta, path: str) -> None:
 # METADATA handle (parquet file index + schema + sidecar json), not data
 # — but building it costs a driver-side directory listing and footer
 # read per call, which every front-door query pays once or twice.  The
-# cache is per Spark application; writers below invalidate explicitly
-# (a cached DataFrame's file index would not see appended files).
+# cache is per Spark application: an insert drops the handles of every
+# other application (a stopped session's handles are dead weight in a
+# long-lived driver); writers below invalidate explicitly (a cached
+# DataFrame's file index would not see appended files).
 _LOAD_CACHE: dict = {}
+
+
+def _cache_put(cache: dict, key: tuple, value):
+    """Insert into a cache keyed by (applicationId, ...), dropping the
+    keys of every other Spark application first."""
+    for k in [k for k in cache if k[0] != key[0]]:
+        del cache[k]
+    cache[key] = value
+    return value
 
 
 def invalidate_scramble_cache(path: str | None = None) -> None:
@@ -459,6 +470,4 @@ def load_scramble(spark: SparkSession, path: str) -> tuple[DataFrame, ScrambleMe
         return hit
     with open(os.path.join(path, "_verdictdb_meta.json")) as f:
         meta = ScrambleMeta.from_json(f.read())
-    out = (spark.read.parquet(path), meta)
-    _LOAD_CACHE[key] = out
-    return out
+    return _cache_put(_LOAD_CACHE, key, (spark.read.parquet(path), meta))
