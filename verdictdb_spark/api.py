@@ -145,11 +145,37 @@ def _final_only(kwargs: dict) -> None:
     )
 
 
+# The route table sql() and stream() walk, in this order
+# (VerdictContext._route): (sql() method, stream() method or None,
+# whether the sql() method takes with_errors — percentile and nested
+# answers carry no _err columns).  Methods are looked up by name on
+# every walk.
+_ROUTES = (
+    ("_try_aggregate", "_stream_aggregate", True),
+    ("_try_percentile", "_stream_percentile", False),
+    ("_try_nested", "_stream_nested", False),
+    ("_try_union", None, True),  # no stream form
+)
+
+
+def _derived_tables(query: str) -> tuple[dict, list] | None:
+    """``(clauses, [(start, end, inner SELECT)])`` of a SELECT's FROM
+    derived tables, or None when it has none (or its text does not
+    scan — exact Spark SQL reports that)."""
+    if not re.match(r"^\s*select\b", query, re.IGNORECASE):
+        return None
+    try:
+        cl = _clauses(query)
+        spans = from_subquery_spans(cl["FROM"])  # _clauses requires FROM
+    except Unsupported:
+        return None
+    return (cl, spans) if spans else None
+
+
 def _reassemble(cl: dict, new_from: str) -> str:
     """Rebuild a SELECT statement from its `_clauses` map with a
     rewritten FROM — faithful because `_clauses` enforces canonical
-    clause order.  Shared by the nested-aggregation sql() and stream()
-    paths (one splice implementation, not two)."""
+    clause order."""
     parts = ["SELECT " + cl["SELECT"], "FROM " + new_from]
     for kw in ("WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT"):
         if kw in cl:
@@ -480,70 +506,88 @@ class VerdictContext:
             # inside WITH bodies substitute; a refused inline keeps the
             # original text (exact spark.sql handles WITH natively)
             query = cte
-        try:
-            plan = self._plan(query, early_stop=early_stop)
-        except Unsupported:
-            # before the exact fallback: percentile-only selects run as
-            # a one-pass KLL sketch (the reference's percentile(col, p)
-            # surface), then the nested-aggregation path — the whole
-            # statement may be outside the rewritable shape while a
-            # FROM derived table inside it is itself a rewritable
-            # aggregate over a scramble
-            pct = self._try_percentile(query, early_stop=early_stop)
-            if pct is not None:
-                return pct
-            nested = self._try_nested(query, early_stop=early_stop)
-            if nested is not None:
-                return nested
-            union = self._try_union(
-                query, early_stop=early_stop, with_errors=with_errors
-            )
-            if union is not None:
-                return union
-            # SET verdictdb.debug = true surfaces WHY a SELECT fell
-            # back — shape rejections are the dominant fallback class
-            if self._debug() and re.match(r"^\s*select\b", query, re.IGNORECASE):
-                raise
-            # return here — falling through to the `plan is None`
-            # branch would run _try_nested a SECOND time (a full
-            # progressive scan repeated for nothing)
-            return self.spark.sql(query)
+        return self._route(query, early_stop=early_stop, with_errors=with_errors)
+
+    def _debug(self) -> bool:
+        return self.conf.get("verdictdb.debug", "false").lower() in ("true", "1")
+
+    # ------------------------------------------------------ route table
+    def _route(
+        self, query: str, stream: bool = False, early_stop: bool = True,
+        with_errors: bool = False,
+    ):
+        """Walk :data:`_ROUTES` for one statement: the first route that
+        answers wins — a DataFrame for ``sql()``, a lazy iterator of
+        ``ProgressiveResult`` for ``stream()``.  A route passes by
+        returning None or raising ``Unsupported``.  When every route
+        passes, ``sql()`` runs the statement exactly (the reference's
+        pass-through, SelectQueryCoordinator.java:118-171) and
+        ``stream()`` raises the first ``Unsupported``: streams have no
+        exact fallback.
+
+        A ``ValueError`` or ``AnalysisException`` means the route
+        claimed the statement and then failed: the registered scramble
+        can't legally answer the shape (e.g. COUNT DISTINCT on a
+        uniform scramble), or an expression failed Spark analysis under
+        the rewrite.  ``sql()`` then runs exact without trying the next
+        route (which would run the same inner again); ``stream()``
+        raises.  Any other error (a KeyError in the estimator, a
+        missing scramble artifact) is a bug, not a fallback, and
+        surfaces.  ``SET verdictdb.debug = true`` re-raises route
+        failures, and a SELECT's first ``Unsupported`` instead of its
+        exact run — to diagnose why a query fell back."""
+        reason = None
+        for sql_name, stream_name, errors in _ROUTES:
+            if stream and stream_name is None:
+                continue
+            route = getattr(self, stream_name if stream else sql_name)
+            try:
+                if stream:
+                    out = route(query)
+                elif errors:
+                    out = route(query, early_stop=early_stop, with_errors=with_errors)
+                else:
+                    out = route(query, early_stop=early_stop)
+            except Unsupported as e:
+                reason = reason or e
+                continue
+            except (ValueError, AnalysisException):
+                if stream or self._debug():
+                    raise
+                return self.spark.sql(query)
+            if out is not None:
+                return out
+        if stream:
+            raise reason or Unsupported("no registered scramble for STREAM query")
+        if reason and self._debug() and re.match(r"^\s*select\b", query, re.IGNORECASE):
+            raise reason
+        return self.spark.sql(query)
+
+    # -------------------------------------------------------- aggregate
+    def _try_aggregate(
+        self, query: str, early_stop: bool = True, with_errors: bool = False
+    ) -> DataFrame | None:
+        """The progressive rewrite of an aggregate over registered
+        scrambles; None when no FROM table has one."""
+        plan = self._plan(query, early_stop=early_stop)
         if plan is None:
-            pct = self._try_percentile(query, early_stop=early_stop)
-            if pct is not None:
-                return pct
-            nested = self._try_nested(query, early_stop=early_stop)
-            if nested is not None:
-                return nested
-            return self.spark.sql(query)
+            return None
         if plan.const_false:
             # WHERE proven constant-false at plan time: the exact run
             # IS the answer (empty groups / NULL aggregates) — one
             # execution, no progressive scan
             return self.spark.sql(query)
-        try:
-            # early_stop=False callers consume only the final frame —
-            # one-shot span instead of the refinement ladder (same
-            # estimator over the same per-(tier, block) partials)
-            return self._execute(
-                plan, early_stop=early_stop, with_errors=with_errors,
-                final_only=not early_stop,
-            )
-        except (ValueError, AnalysisException):
-            # the registered scramble can't legally answer this shape
-            # (e.g. COUNT DISTINCT on a uniform scramble), or an
-            # expression failed Spark analysis under the rewrite — the
-            # contract is pass-through, not error.  KeyError is NOT
-            # caught: a metadata-lookup failure in the estimator is a
-            # planner bug and must surface, not silently degrade to a
-            # slow exact run.  SET verdictdb.debug = true re-raises
-            # even these, for diagnosing why a query fell back.
-            if self._debug():
-                raise
-            return self.spark.sql(query)
+        # early_stop=False callers consume only the final frame —
+        # one-shot span instead of the refinement ladder (same
+        # estimator over the same per-(tier, block) partials)
+        return self._execute(
+            plan, early_stop=early_stop, with_errors=with_errors,
+            final_only=not early_stop,
+        )
 
-    def _debug(self) -> bool:
-        return self.conf.get("verdictdb.debug", "false").lower() in ("true", "1")
+    def _stream_aggregate(self, query: str):
+        plan = self._plan(query)
+        return None if plan is None else self._stream_plan(plan)
 
     # --------------------------------------------- set operations
     def _try_union(
@@ -560,13 +604,11 @@ class VerdictContext:
         trailing ORDER BY/LIMIT (which scopes to the whole union in
         SQL) is stripped from the last block and applied to the
         concatenated frame.  Mixed numeric column types across sides
-        (approximate
-        sides estimate in double, exact sides keep bigint) widen to
-        double, matching SQL union type promotion."""
-        try:
-            masked0 = _mask(query)
-        except Unsupported:
-            return None
+        (approximate sides estimate in double, exact sides keep bigint)
+        widen to double, matching SQL union type promotion.  A side
+        Spark or the engine rejects raises: the route walk then runs
+        the whole statement exactly."""
+        masked0 = _mask(query)
         if re.search(r"\b(EXCEPT|INTERSECT)\b", masked0, re.IGNORECASE):
             return None
         seps = list(re.finditer(r"\bUNION(\s+ALL)?\b", masked0, re.IGNORECASE))
@@ -605,80 +647,71 @@ class VerdictContext:
             # fabricate a result for SQL Spark itself would reject)
             if re.search(r"\b(ORDER\s+BY|LIMIT)\b", _mask(p), re.IGNORECASE):
                 return None
-        try:
-            # arity gate BEFORE running anything: ask Catalyst (analysis
-            # only, no job) what each side's true column count is.
-            # Comparing the executed frames would be fooled by
-            # with_errors _err columns padding one side — fabricating a
-            # result for SQL Spark itself rejects (arity mismatch)
-            true_arity = {len(self.spark.sql(p).columns) for p in parts}
-            if len(true_arity) != 1:
-                return None  # Spark rejects this union — surface exactly
-            frames = [
-                self.sql(p, early_stop=early_stop, with_errors=with_errors)
-                for p in parts
-            ]
-            base = frames[0]
-            ncols = len(base.columns)
-            if any(len(f.columns) != ncols for f in frames):
-                # _err columns on an approximate side but not on an
-                # exact side — exact fallback (errors can't align)
+        # arity gate BEFORE running anything: ask Catalyst (analysis
+        # only, no job) what each side's true column count is.
+        # Comparing the executed frames would be fooled by
+        # with_errors _err columns padding one side — fabricating a
+        # result for SQL Spark itself rejects (arity mismatch)
+        true_arity = {len(self.spark.sql(p).columns) for p in parts}
+        if len(true_arity) != 1:
+            return None  # Spark rejects this union — surface exactly
+        frames = [
+            self.sql(p, early_stop=early_stop, with_errors=with_errors)
+            for p in parts
+        ]
+        base = frames[0]
+        ncols = len(base.columns)
+        if any(len(f.columns) != ncols for f in frames):
+            # _err columns on an approximate side but not on an
+            # exact side — exact fallback (errors can't align)
+            return None
+        integral = {"tinyint", "smallint", "int", "bigint"}
+        floating = {"float", "double"}
+        casts: list[str | None] = []
+        for i in range(ncols):
+            ts = {f.dtypes[i][1] for f in frames}
+            if len(ts) == 1:
+                casts.append(None)
+            elif ts <= integral:
+                casts.append("bigint")
+            elif ts <= integral | floating:
+                casts.append("double")
+            else:
+                # decimal (exact money) mixed with anything: SQL
+                # promotion keeps decimal — casting to double here
+                # would corrupt values past 2^53, so refuse
                 return None
-            integral = {"tinyint", "smallint", "int", "bigint"}
-            floating = {"float", "double"}
-            casts: list[str | None] = []
-            for i in range(ncols):
-                ts = {f.dtypes[i][1] for f in frames}
-                if len(ts) == 1:
-                    casts.append(None)
-                elif ts <= integral:
-                    casts.append("bigint")
-                elif ts <= integral | floating:
-                    casts.append("double")
-                else:
-                    # decimal (exact money) mixed with anything: SQL
-                    # promotion keeps decimal — casting to double here
-                    # would corrupt values past 2^53, so refuse
-                    return None
-            aligned = []
-            for f in frames:
-                aligned.append(
-                    f.select(
-                        *[
-                            (f[c].cast(casts[i]) if casts[i] else f[c]).alias(
-                                base.columns[i]
-                            )
-                            for i, c in enumerate(f.columns)
-                        ]
-                    )
-                )
-            out = aligned[0]
-            for f in aligned[1:]:
-                out = out.union(f)
-            if tail_order is not None:
-                items = []
-                for piece in _split_top_level(tail_order):
-                    m2 = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
-                    desc = bool(m2 and m2.group(1).upper() == "DESC")
-                    expr = (piece[: m2.start()] if m2 else piece).strip()
-                    if re.fullmatch(r"\d+", expr):
-                        idx = int(expr) - 1
-                        if not (0 <= idx < ncols):
-                            return None
-                        expr = base.columns[idx]
-                    if expr not in base.columns:
-                        # union-scoped ORDER BY may only reference
-                        # output columns — anything else, exact fallback
+        out = None
+        for f in frames:
+            f = f.select(
+                *[
+                    (f[c].cast(casts[i]) if casts[i] else f[c]).alias(base.columns[i])
+                    for i, c in enumerate(f.columns)
+                ]
+            )
+            out = f if out is None else out.union(f)
+        if tail_order is not None:
+            items = []
+            for piece in _split_top_level(tail_order):
+                m2 = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
+                desc = bool(m2 and m2.group(1).upper() == "DESC")
+                expr = (piece[: m2.start()] if m2 else piece).strip()
+                if re.fullmatch(r"\d+", expr):
+                    idx = int(expr) - 1
+                    if not (0 <= idx < ncols):
                         return None
-                    items.append(
-                        F.col(expr).desc() if desc else F.col(expr).asc()
-                    )
-                out = out.orderBy(*items)
-            if tail_limit is not None:
-                out = out.limit(tail_limit)
-            return out
-        except (ValueError, AnalysisException):
-            return None  # a side Spark/the engine rejects — exact fallback
+                    expr = base.columns[idx]
+                if expr not in base.columns:
+                    # union-scoped ORDER BY may only reference
+                    # output columns — anything else, exact fallback
+                    return None
+                items.append(
+                    F.col(expr).desc() if desc else F.col(expr).asc()
+                )
+            out = out.orderBy(*items)
+        if tail_limit is not None:
+            out = out.limit(tail_limit)
+        return out
 
     # ----------------------------------------- nested aggregation
     def _try_nested(self, query: str, early_stop: bool) -> DataFrame | None:
@@ -703,68 +736,98 @@ class VerdictContext:
         outer aggregate over estimated inputs has no closed-form
         error here (the reference's dependent nodes likewise surface
         only the final point estimate).  Returns None when nothing is
-        substitutable — the caller falls back to exact."""
-        if not re.match(r"^\s*select\b", query, re.IGNORECASE):
+        substitutable."""
+        found = _derived_tables(query)
+        if found is None:
             return None
+        cl, spans = found
+        frames = []
+        for s, e, inner in spans:
+            try:
+                plan = self._plan(inner, early_stop=early_stop)
+            except (Unsupported, AnalysisException):
+                plan = None
+            if plan is None:
+                # depth-3+: the derived table's own FROM may hold the
+                # rewritable block
+                df = self._try_nested(inner, early_stop=early_stop)
+            elif plan.const_false:
+                df = None
+            else:
+                # without early stop only the final estimate is
+                # consumed — one-shot inner run
+                df = self._execute(
+                    plan, early_stop=early_stop, with_errors=False,
+                    final_only=not early_stop,
+                )
+            if df is not None:
+                frames.append((s, e, df))
+        return self._splice(cl, frames) if frames else None
+
+    def _stream_nested(self, query: str):
+        """stream()'s nested route: the inner aggregate refines step by
+        step and the exact OUTER re-evaluates over each snapshot — the
+        reference's progressive display extended to its dependent-plan
+        query class.  Applies to a single FROM derived table that plans
+        over a scramble; the inner is planned once and streamed through
+        :meth:`_stream_plan`."""
+        found = _derived_tables(query)
+        if found is None or len(found[1]) != 1:
+            return None
+        cl, [(s, e, inner)] = found
         try:
-            cl = _clauses(query)
-        except Unsupported:
+            plan = self._plan(inner)
+        except (Unsupported, AnalysisException):
             return None
-        from_text = cl.get("FROM")
-        if not from_text:
+        if plan is None or plan.const_false:
             return None
-        try:
-            spans = from_subquery_spans(from_text)
-        except Unsupported:
-            return None  # unbalanced text — let exact SQL error it
-        if not spans:
-            return None
+
+        def steps():
+            for res in self._stream_plan(plan):
+                sdf = res.estimates_sdf
+                if sdf is None:
+                    sdf = self.spark.createDataFrame(res.estimates)
+                # drop the per-step error columns: the exact outer never
+                # sees them in sql()'s nested path either, and a
+                # star-expanding outer must match the exact schema
+                sdf = sdf.select(*[c for c in sdf.columns if not c.endswith("_err")])
+                step = ProgressiveResult.__new__(ProgressiveResult)
+                step.__dict__.update(res.__dict__)
+                step.estimates_sdf = self._splice(cl, [(s, e, sdf)])
+                step._pdf = None
+                yield step
+
+        return steps()
+
+    def _splice(self, cl: dict, frames: list) -> DataFrame:
+        """Run a SELECT's OUTER statement exactly, each FROM derived
+        table ``(start, end, frame)`` replaced by a temp view over its
+        frame — the one FROM splice of the nested route, for sql() and
+        every stream() step."""
+        from_text = cl["FROM"]
         views: list[str] = []
         pieces: list[str] = []
         last = 0
         try:
-            for s, e, inner in spans:
-                df = None
-                try:
-                    inner_plan = self._plan(inner, early_stop=early_stop)
-                except (Unsupported, AnalysisException):
-                    inner_plan = None
-                if inner_plan is not None and not inner_plan.const_false:
-                    # without early stop only the final estimate is
-                    # consumed — one-shot inner run
-                    df = self._execute(
-                        inner_plan, early_stop=early_stop, with_errors=False,
-                        final_only=not early_stop,
-                    )
-                elif inner_plan is None:
-                    # depth-3+: the derived table's own FROM may hold
-                    # the rewritable block
-                    df = self._try_nested(inner, early_stop=early_stop)
-                if df is None:
-                    continue
+            for s, e, df in frames:
+                # a fresh name per view: under Spark Connect's lazy
+                # analysis a re-registered name would make every earlier
+                # stream step resolve to the latest snapshot
                 name = f"_vdb_nested_{uuid.uuid4().hex[:12]}"
                 df.createOrReplaceTempView(name)
                 views.append(name)
-                pieces.append(from_text[last:s])
-                pieces.append(name)
+                pieces += [from_text[last:s], name]
                 last = e + 1
-            if not views:
-                return None
-            new_from = "".join(pieces) + from_text[last:]
-            # a ValueError from the engine (e.g. COUNT DISTINCT on a
-            # uniform scramble, zero-row inner) is the same
-            # pass-through signal as the front door's
-            out = self.spark.sql(_reassemble(cl, new_from))
+            out = self.spark.sql(_reassemble(cl, "".join(pieces) + from_text[last:]))
             # force analysis NOW: classic spark.sql analyzes eagerly
             # anyway, but Spark Connect defers — without this probe a
             # Catalyst-rejected outer would surface at the caller's
-            # .collect() instead of falling back to exact here
+            # .collect() instead of taking the exact fallback here
             _ = out.columns
             return out
-        except (ValueError, AnalysisException):
-            return None  # shape the engine/Catalyst rejects — exact fallback
         finally:
             if hasattr(self.spark, "_jsparkSession"):
+                # classic: the analyzed frame holds its resolved plan
                 for v in views:
                     self.spark.catalog.dropTempView(v)
             # Spark Connect analyzes lazily: dropping now would break
@@ -772,162 +835,152 @@ class VerdictContext:
             # views registered (metadata only; no data pinned)
 
     # ------------------------------------------------------- percentile
-    def _try_percentile(
-        self, query: str, early_stop: bool = True
-    ) -> DataFrame | None:
-        """``SELECT [g,] percentile(x, p) ... FROM t [WHERE] [GROUP BY
-        g] [ORDER BY] [LIMIT]`` — the reference's declared percentile
-        surface (supported_queries.md "percentile(col1, p) — p should
-        be within 0.01 and 0.99").  Answered by mergeable KLL sketches
-        (map-side partials + log-tree merge, rank-error ~O(1/k)), not
-        the progressive sum/count machinery: quantiles are not
-        H-T-scalable sums.  With ``early_stop=True`` over a UNIFORM
-        scramble (single input expression), the sketch builds
-        PROGRESSIVELY per block span and stops when consecutive
-        quantile frames agree within the configured thresholds — the
-        sampling speedup the engine exists for; otherwise one full
-        sketch pass per distinct input expression.  Returns None for
-        any other shape (fallback chain continues)."""
+    def _percentile_source(self, query: str):
+        """The percentile route's one setup, for sql() and stream():
+        ``SELECT [g,] percentile(x, p) ... FROM t [WHERE] [GROUP BY g]
+        [ORDER BY] [LIMIT]`` over a table with a registered scramble —
+        the reference's declared percentile surface
+        (supported_queries.md "percentile(col1, p) — p should be within
+        0.01 and 0.99").  None for any other statement, and for a table
+        without a scramble: Spark answers percentile()/median()
+        natively and exactly there, and a KLL sketch would trade
+        accuracy with no sampling speedup to justify it.
+
+        Otherwise ``(parsed, filtered scramble, meta, k, steps)``.
+        ``steps`` iterates the progressive sketch
+        (``operators.quantile.progressive_quantiles``: per-block-span
+        KLL partials merged into the accumulated per-group states,
+        group aliases applied) when the scramble is UNIFORM and there
+        is one input expression (one sketch per step); else None."""
         from .sqlparse import parse_percentile_select
 
         p = parse_percentile_select(query)
-        if p is None:
+        if p is None or self.metastore.lookup(p.table, kind="scramble") is None:
             return None
-        try:
-            df, meta = self.load_scramble_for(p.table)
-        except Exception:
-            # no registered scramble: keep the exact-fallback contract
-            # (Spark answers percentile()/median() natively and exactly
-            # for plain tables — a KLL sketch would silently trade
-            # accuracy with no sampling speedup to justify it)
-            return None
-        from .operators.quantile import approx_quantiles_wide
-
+        df, meta = self.load_scramble_for(p.table)
+        if p.where:
+            df = df.where(F.expr(p.where))
         k = int(self.conf.get("verdictdb.percentile_k", "4096"))
-        try:
-            if p.where:
-                df = df.where(F.expr(p.where))
-            # one sketch pass per distinct input expression; the tiny
-            # per-expression result frames join on the group keys
+        cols = {c for _, c, _ in p.items}
+        if meta.method != "uniform" or len(cols) != 1:
+            return p, df, meta, k, None
+        (col,) = cols
+
+        def steps():
+            from .operators.quantile import progressive_quantiles
+
+            renames = {s: n for s, n in p.group_out if n != s}
+            for res in progressive_quantiles(
+                df, meta, F.expr(col).cast("double"),
+                [pr for _, _, pr in p.items], group_by=p.group_cols,
+                names=[n for n, _, _ in p.items], k=k,
+            ):
+                yield res.renamed(renames)
+
+        return p, df, meta, k, steps()
+
+    def _try_percentile(
+        self, query: str, early_stop: bool = True
+    ) -> DataFrame | None:
+        """sql()'s percentile route: mergeable KLL sketches (map-side
+        partials + log-tree merge, rank-error ~O(1/k)), not the
+        progressive sum/count machinery — quantiles are not
+        H-T-scalable sums.  With ``early_stop=True`` over a multi-block
+        uniform scramble (one input expression) the sketch builds
+        progressively and stops when consecutive quantile frames agree
+        within the configured thresholds (the ``converged`` rule of the
+        sum/count engine) — the sampling speedup the engine exists
+        for; otherwise one full sketch pass per distinct input
+        expression."""
+        src = self._percentile_source(query)
+        if src is None:
+            return None
+        p, df, meta, k, steps = src
+        renames = {s: n for s, n in p.group_out if n != s}
+        keys = [renames.get(g, g) for g in p.group_cols]
+        if early_stop and steps is not None and meta.nblocks > 1:
+            from .sampling.progressive import converged
+
+            kw = self._exec_kwargs()
+            names = [n for n, _, _ in p.items]
+            prev = None
+            for res in steps:
+                cur = res.estimates  # O(groups) rows
+                # progressive_quantiles yields even when the accumulated
+                # sketch frame is still empty (unlike progressive_agg's
+                # have_rows skip): an empty or all-NaN frame must not arm
+                # the stop rule — two such frames "agree" vacuously, and a
+                # selective WHERE whose matches live in later blocks would
+                # return an empty/NULL result despite matching rows
+                if not len(cur) or cur[names].isna().all().all():
+                    continue
+                if prev is not None and converged(
+                    prev, cur, keys, names,
+                    kw["value_threshold"], kw["group_threshold"],
+                ):
+                    break
+                prev = cur
+            pieces = [res.estimates_sdf]
+        else:
+            from .operators.quantile import approx_quantiles_wide
+
+            # one sketch pass per distinct input expression
             by_col: dict[str, list[tuple[str, float]]] = {}
             for name, col, prob in p.items:
                 by_col.setdefault(col, []).append((name, prob))
-            out = None
-            if (
-                early_stop
-                and meta is not None
-                and meta.method == "uniform"
-                and meta.nblocks > 1
-                and len(by_col) == 1
-            ):
-                out = self._percentile_early_stop(df, meta, p, k)
-            if out is None:
-                pieces = [
-                    approx_quantiles_wide(
-                        df,
-                        F.expr(col).cast("double"),
-                        [pr for _, pr in pairs],
-                        group_by=p.group_cols,
-                        names=[n for n, _ in pairs],
-                        method="kll",
-                        k=k,
-                    )
-                    for col, pairs in by_col.items()
+            pieces = [
+                approx_quantiles_wide(
+                    df,
+                    F.expr(col).cast("double"),
+                    [pr for _, pr in pairs],
+                    group_by=p.group_cols,
+                    names=[n for n, _ in pairs],
+                    method="kll",
+                    k=k,
+                ).withColumnsRenamed(renames)
+                for col, pairs in by_col.items()
+            ]
+        if keys:
+            # the tiny per-expression frames join on the group keys.
+            # FULL outer: a group whose values are all NULL for one
+            # percentile column has no sketch row for that piece — SQL
+            # keeps the group with a NULL percentile, so an inner join
+            # would wrongly drop it
+            out = pieces[0]
+            for piece in pieces[1:]:
+                out = out.join(piece, on=keys, how="full")
+        else:
+            # an ungrouped aggregate query always returns ONE row, but a
+            # sketch over zero non-null values returns none: left-join
+            # every piece onto one literal row, so a 0-row piece gives
+            # NULLs (lazily — the sketch scan is not run twice just to
+            # probe emptiness)
+            out = self.spark.range(1).select(F.lit(1).alias("_vdb_one"))
+            for piece in pieces:
+                out = out.join(
+                    piece.withColumn("_vdb_one", F.lit(1)), "_vdb_one", "left"
+                )
+            out = out.drop("_vdb_one")
+        if p.order_by:
+            out = out.orderBy(
+                *[
+                    F.col(o.expr).desc() if o.desc else F.col(o.expr).asc()
+                    for o in p.order_by
                 ]
-                if p.group_cols:
-                    out = pieces[0]
-                    for piece in pieces[1:]:
-                        # FULL outer: a group whose values are all NULL
-                        # for one percentile column has no sketch row
-                        # for that piece — SQL keeps the group with a
-                        # NULL percentile, so an inner join would
-                        # wrongly drop it
-                        out = out.join(piece, on=p.group_cols, how="full")
-                elif len(pieces) == 1:
-                    out = pieces[0]
-                else:
-                    # ungrouped multi-expression: left-join every piece
-                    # onto one literal row so a 0-row piece contributes
-                    # NULL instead of emptying the whole result
-                    out = self.spark.range(1).select(F.lit(1).alias("_vdb_one"))
-                    for piece in pieces:
-                        out = out.join(
-                            piece.withColumn("_vdb_one", F.lit(1)),
-                            "_vdb_one", "left",
-                        )
-                    out = out.drop("_vdb_one")
-            if not p.group_cols:
-                # an ungrouped aggregate query always returns ONE row;
-                # a sketch over zero non-null values returns none —
-                # restore SQL semantics (one all-NULL row) lazily via a
-                # left join from a literal row, so the sketch scan is
-                # not executed twice just to probe emptiness
-                cols = out.columns
-                out = (
-                    self.spark.range(1)
-                    .select(F.lit(1).alias("_vdb_one"))
-                    .join(
-                        out.withColumn("_vdb_one", F.lit(1)),
-                        on="_vdb_one",
-                        how="left",
-                    )
-                    .select(*cols)
-                )
-            for src, name in p.group_out:
-                if name != src:
-                    out = out.withColumnRenamed(src, name)
-            if p.order_by:
-                out = out.orderBy(
-                    *[
-                        F.col(o.expr).desc() if o.desc else F.col(o.expr).asc()
-                        for o in p.order_by
-                    ]
-                )
-            out = out.select(*p.select_order)
-            if p.limit is not None:
-                out = out.limit(p.limit)
-            _ = out.columns  # force analysis (Spark Connect defers)
-            return out
-        except (ValueError, AnalysisException):
-            if self._debug():
-                raise
-            return None
+            )
+        out = out.select(*p.select_order)
+        if p.limit is not None:
+            out = out.limit(p.limit)
+        _ = out.columns  # force analysis (Spark Connect defers)
+        return out
 
-    def _percentile_early_stop(self, df, meta, p, k: int):
-        """Progressive percentile with the difference-based stop rule:
-        refine per block span and stop when consecutive quantile
-        frames agree (same `converged` rule as the sum/count engine).
-        Returns the stopping step's estimate frame, or None if the
-        progression produced nothing (caller falls back to one-shot)."""
-        from .operators.quantile import progressive_quantiles
-        from .sampling.progressive import converged
-
-        kw = self._exec_kwargs()
-        names = [n for n, _, _ in p.items]
-        probs = [pr for _, _, pr in p.items]
-        col = p.items[0][1]
-        prev, last = None, None
-        for res in progressive_quantiles(
-            df, meta, F.expr(col).cast("double"), probs,
-            group_by=p.group_cols, names=names, k=k,
-        ):
-            cur = res.estimates  # O(groups) rows
-            # progressive_quantiles yields even when the accumulated
-            # sketch frame is still empty (unlike progressive_agg's
-            # have_rows skip): an empty or all-NaN frame must not arm
-            # the stop rule — two such frames "agree" vacuously, and a
-            # selective WHERE whose matches live in later blocks would
-            # return an empty/NULL result despite matching rows
-            if not len(cur) or cur[names].isna().all().all():
-                last = res
-                continue
-            if prev is not None and converged(
-                prev, cur, p.group_cols, names,
-                kw["value_threshold"], kw["group_threshold"],
-            ):
-                return res.estimates_sdf
-            prev, last = cur, res
-        return last.estimates_sdf if last is not None else None
+    def _stream_percentile(self, query: str):
+        """stream()'s percentile route: the progressive steps of
+        :meth:`_percentile_source`.  ORDER BY/LIMIT are final-result
+        decorations and are not applied per step, matching stream()'s
+        contract for aggregates."""
+        src = self._percentile_source(query)
+        return None if src is None else src[-1]
 
     # ------------------------------------------------------------- DDL
     def _ddl(self, query: str) -> DataFrame | None:
@@ -1600,182 +1653,38 @@ class VerdictContext:
     def stream(self, query: str):
         """Progressive iterator for a rewritable SELECT (the grammar's
         ``STREAM select_statement``): yields one ``ProgressiveResult``
-        per refinement step with the plan's aliases in ``estimates`` —
-        including composite select items (``sum(a)/sum(b) AS r``),
-        evaluated per step.  HAVING / ORDER BY / LIMIT are
-        final-result decorations and are not applied per step.
-        Raises ``Unsupported`` for non-rewritable statements (streams
-        have no exact fallback)."""
+        per refinement step, from the first route of :data:`_ROUTES`
+        with a stream form (aggregate, percentile, nested).  Lazy:
+        nothing is planned before the first step is asked for.  Raises
+        ``Unsupported`` for non-rewritable statements (streams have no
+        exact fallback)."""
         q = _STREAM_RE.match(query)
         if q:
             query = q.group(1)
         cte = inline_ctes(query)
         if cte is not None:
             query = cte
-        try:
-            plan = self._plan(query)
-        except Unsupported:
-            pgen = self._stream_percentile(query)
-            if pgen is not None:
-                yield from pgen
-                return
-            gen = self._stream_nested(query)
-            if gen is None:
-                raise
-            yield from gen
-            return
-        if plan is None:
-            pgen = self._stream_percentile(query)
-            if pgen is not None:
-                yield from pgen
-                return
-            gen = self._stream_nested(query)
-            if gen is not None:
-                yield from gen
-                return
-            raise Unsupported("no registered scramble for STREAM query")
-        if plan.const_false:
-            # constant-false WHERE: the stream legitimately refines
-            # nothing — an empty iterator, matching the progressive
-            # contract (no estimates from zero rows)
-            return
-        renames = plan.group_renames
+        yield from self._route(query, stream=True)
+
+    def _stream_plan(self, plan: _Plan):
+        """stream()'s per-plan body: one step per refinement with the
+        plan's aliases in ``estimates`` — including composite select
+        items (``sum(a)/sum(b) AS r``), evaluated per step.  HAVING /
+        ORDER BY / LIMIT are final-result decorations and are not
+        applied per step.  A constant-false WHERE legitimately refines
+        nothing: no steps (no estimates from zero rows)."""
         composites = plan.parsed.composites
         hidden = [a.alias for a in plan.parsed.agg_items if a.hidden]
         try:
+            if plan.const_false:
+                return
             for res in self._progression(plan):
-                res = res.renamed(renames)
+                res = res.renamed(plan.group_renames)
                 if composites:
                     res = self._apply_composites(res, composites, hidden)
                 yield res
         finally:
             plan.release()
-
-    def _stream_percentile(self, query: str):
-        """Progressive iterator for a percentile-only SELECT over a
-        UNIFORM scramble: per-block-span KLL partials merge into the
-        accumulated per-group states and each step yields refined
-        quantiles (``operators.quantile.progressive_quantiles``).
-        Returns None when the statement is not this shape — the
-        stream() fallback chain continues.  Requires a single input
-        expression (one sketch per step); ORDER BY/LIMIT are
-        final-result decorations and are not applied per step,
-        matching stream()'s contract for aggregates."""
-        from .sqlparse import parse_percentile_select
-
-        p = parse_percentile_select(query)
-        if p is None:
-            return None
-        cols = {c for _, c, _ in p.items}
-        if len(cols) != 1:
-            return None
-        try:
-            sdf, meta = self.load_scramble_for(p.table)
-        except Exception:
-            return None
-        if meta.method != "uniform":
-            return None
-        col = next(iter(cols))
-        names = [n for n, _, _ in p.items]
-        probs = [pr for _, _, pr in p.items]
-        df = sdf.where(F.expr(p.where)) if p.where else sdf
-        k = int(self.conf.get("verdictdb.percentile_k", "4096"))
-        from .operators.quantile import progressive_quantiles
-        from .sampling.progressive import ProgressiveResult
-
-        renames = [(s, n) for s, n in p.group_out if n != s]
-
-        def run():
-            for res in progressive_quantiles(
-                df, meta, F.expr(col).cast("double"), probs,
-                group_by=p.group_cols, names=names, k=k,
-            ):
-                out = res.estimates_sdf
-                for s, n in renames:
-                    out = out.withColumnRenamed(s, n)
-                if renames:
-                    res = ProgressiveResult(
-                        estimates_sdf=out,
-                        coverage=res.coverage,
-                        blocks_covered=res.blocks_covered,
-                        iteration=res.iteration,
-                        is_exact=res.is_exact,
-                    )
-                yield res
-
-        return run()
-
-    def _stream_nested(self, query: str):
-        """Progressive iterator for a NESTED-aggregation statement: the
-        inner aggregate refines step-by-step and the exact OUTER
-        re-evaluates over each snapshot — the reference's progressive
-        display extended to its dependent-plan query class
-        (``QueryExecutionPlanFactory.java:242-345``).  Applies to a
-        single substitutable FROM subquery; returns None when the
-        shape doesn't (the caller raises its own Unsupported)."""
-        if not re.match(r"^\s*select\b", query, re.IGNORECASE):
-            return None
-        try:
-            cl = _clauses(query)
-            spans = from_subquery_spans(cl["FROM"])
-        except Unsupported:
-            return None
-        if len(spans) != 1:
-            return None
-        s, e, inner = spans[0]
-        try:
-            probe = self._plan(inner)
-        except (Unsupported, AnalysisException):
-            return None
-        if probe is None or probe.const_false:
-            if probe is not None:
-                probe.release()
-            return None
-        probe.release()  # self.stream(inner) below re-plans for itself
-        from_text = cl["FROM"]
-        base = f"_vdb_nested_{uuid.uuid4().hex[:12]}"
-
-        def gen():
-            names: list[str] = []
-            try:
-                for res in self.stream(inner):
-                    sdf = res.estimates_sdf
-                    if sdf is None:
-                        sdf = self.spark.createDataFrame(res.estimates)
-                    # drop the per-step error columns: the exact outer
-                    # never sees them in sql()'s nested path either, and
-                    # a star-expanding outer must match the exact schema
-                    keep = [c for c in sdf.columns if not c.endswith("_err")]
-                    sdf = sdf.select(*keep)
-                    # one view name PER STEP: a shared name re-registered
-                    # each iteration would make every lazily-analyzed
-                    # step (Spark Connect) resolve to the FINAL snapshot
-                    name = f"{base}_{len(names)}"
-                    names.append(name)
-                    sdf.createOrReplaceTempView(name)
-                    out_df = self.spark.sql(
-                        _reassemble(
-                            cl, from_text[:s] + name + from_text[e + 1 :]
-                        )
-                    )
-                    _ = out_df.columns  # force analysis (Connect defers)
-                    step = ProgressiveResult.__new__(ProgressiveResult)
-                    step.__dict__.update(res.__dict__)
-                    step.estimates_sdf = out_df
-                    step._pdf = None
-                    yield step
-            finally:
-                if hasattr(self.spark, "_jsparkSession"):
-                    # classic: every yielded frame holds its resolved
-                    # plan, so the step views can all drop; Connect
-                    # keeps them (lazy analysis — see _try_nested)
-                    for name in names:
-                        try:
-                            self.spark.catalog.dropTempView(name)
-                        except Exception:
-                            pass
-
-        return gen()
 
     def _apply_composites(self, res, composites, drop: list[str]):
         """Evaluate composite residuals on a progressive snapshot and
