@@ -348,3 +348,120 @@ def test_probe_schedule_exact_and_projected_switch(lineitem):
     assert res2.estimates_sdf.count() == (
         lineitem.select("l_orderkey").distinct().count()
     )
+
+
+def test_engines_agree_at_partial_coverage_non_uniform(lineitem):
+    """Both engines scale by the same per-(tier, block) factors: at 3 of
+    8 blocks, on a multi-tier fastconverge scramble (non-uniform
+    block_prob) and on a hash scramble with COUNT DISTINCT, grouped and
+    ungrouped, every estimate and error agrees and NaN/NULL fall in the
+    same cells."""
+    from verdictdb_spark.sampling import TIER_COL, create_fastconverge_scramble
+
+    # lineitem has no 3.09-sigma outliers: plant some, so tier 0 holds
+    # rows and the tiers pack non-uniformly
+    li = lineitem.withColumn(
+        "v",
+        F.when(F.col("l_orderkey") % 47 == 0, F.col("l_extendedprice") * 100)
+        .otherwise(F.col("l_extendedprice")),
+    )
+    fc = create_fastconverge_scramble(li, outlier_column="v", nblocks=8, seed=3)
+    hs = create_scramble(lineitem, method="hash", column="l_orderkey", nblocks=8, seed=5)
+    assert fc[0].select(TIER_COL).distinct().count() > 1
+    assert len({round(fc[1].block_prob(b, 2), 12) for b in range(8)}) > 1
+    cases = [(fc, AGGS), (hs, AGGS + [AggSpec("countdistinct", "l_orderkey", "nd")])]
+    for (sdf, m), aggs in cases:
+        for gb in ([], ["l_returnflag"]):
+            snaps = {}
+            for engine in ("driver", "spark"):
+                for r in progressive_agg(sdf, m, aggs, gb, engine=engine):
+                    if r.blocks_covered >= 3:
+                        break
+                assert r.blocks_covered == 3 and not r.is_exact
+                est = r.estimates
+                snaps[engine] = est.sort_values(gb).reset_index(drop=True) if gb else est
+            d, s = snaps["driver"], snaps["spark"]
+            assert sorted(d.columns) == sorted(s.columns)
+            assert {f"{a.alias}_err" for a in aggs} <= set(d.columns)
+            assert len(d) == len(s)
+            for col in d.columns:
+                if col in gb:
+                    assert list(d[col]) == list(s[col])
+                    continue
+                nan_d, nan_s = d[col].isna().to_numpy(), s[col].isna().to_numpy()
+                assert (nan_d == nan_s).all(), (m.method, gb, col)
+                assert d[col][~nan_d].to_numpy(float) == pytest.approx(
+                    s[col][~nan_s].to_numpy(float), rel=1e-9
+                ), (m.method, gb, col)
+
+
+def test_estimator_backends_match_row_loop_reference(spark):
+    """Both estimator backends against a row-at-a-time reference: per-row
+    scale factors, a dense groups x blocks grid of per-block estimates
+    (0 where a group has no rows), ``np.std(ddof=1)``; on a 3-tier
+    non-uniform meta read at hi < nblocks - 1."""
+    import pandas as pd
+
+    from verdictdb_spark.sampling import BLOCK_COL, TIER_COL, ScrambleMeta
+    from verdictdb_spark.sampling.progressive import _estimate, _estimate_spark
+
+    rng = np.random.default_rng(7)
+    nblocks, hi, n = 6, 3, 400
+    cdf = {}
+    for t in range(3):
+        w = rng.random(nblocks) + 0.1
+        cdf[t] = [float(x) for x in np.cumsum(w) / w.sum()]
+    meta = ScrambleMeta("uniform", nblocks, cdf=cdf)
+    acc = pd.DataFrame({
+        "g": rng.choice(list("abcd"), n),
+        TIER_COL: rng.integers(0, 3, n),
+        BLOCK_COL: rng.integers(0, hi + 1, n),
+        "psum_x": rng.normal(5.0, 2.0, n),
+        "pcnt_x": rng.integers(0, 4, n),
+        "pcnt_star": rng.integers(1, 5, n),
+        "pmax_x": rng.random(n),
+    })
+    acc = acc[(acc["g"] != "d") | (acc[BLOCK_COL] != 2)]  # a (group, block) hole
+    aggs = [
+        AggSpec("sum", "x", "s"), AggSpec("count", None, "c"),
+        AggSpec("avg", "x", "a"), AggSpec("max", "x", "mx"),
+    ]
+    blocks = sorted(acc[BLOCK_COL].unique())
+
+    def err(v):
+        return 1.96 * np.std(v, ddof=1) / np.sqrt(len(v))
+
+    expect = {}
+    for g, rows in acc.groupby("g"):
+        srcs = ("psum_x", "pcnt_x", "pcnt_star")
+        tot = dict.fromkeys(srcs, 0.0)
+        grid = {c: dict.fromkeys(blocks, 0.0) for c in srcs}
+        mx: dict = {}
+        for r in rows.itertuples(index=False):
+            t, b = getattr(r, TIER_COL), getattr(r, BLOCK_COL)
+            for c in srcs:
+                tot[c] += getattr(r, c) / meta.coverage(hi, t)
+                grid[c][b] += getattr(r, c) / meta.block_prob(b, t)
+            mx[b] = max(mx.get(b, -np.inf), r.pmax_x)
+        ratios = [
+            grid["psum_x"][b] / grid["pcnt_x"][b] for b in blocks if grid["pcnt_x"][b] > 0
+        ]
+        expect[g] = {
+            "s": tot["psum_x"], "c": tot["pcnt_star"],
+            "a": tot["psum_x"] / tot["pcnt_x"], "mx": max(mx.values()),
+            "s_err": err(list(grid["psum_x"].values())),
+            "c_err": err(list(grid["pcnt_star"].values())),
+            "a_err": err(ratios), "mx_err": err(list(mx.values())),
+        }
+    outs = {
+        "driver": _estimate(acc.reset_index(drop=True), aggs, ["g"], meta, hi),
+        "spark": _estimate_spark(
+            spark.createDataFrame(acc), aggs, ["g"], meta, hi
+        ).toPandas(),
+    }
+    for backend, out in outs.items():
+        got = out.set_index("g")
+        assert sorted(got.index) == sorted(expect)
+        for g, cols in expect.items():
+            for col, v in cols.items():
+                assert got.loc[g, col] == pytest.approx(v, rel=1e-9), (backend, g, col)

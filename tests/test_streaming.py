@@ -36,6 +36,26 @@ def test_result_stream_each_and_converged(spark, sf_dir):
     assert abs(res.estimates["aq"].iloc[0] - exact) / exact < 0.05
 
 
+def test_until_converged_keeps_spark_snapshots_distributed(spark, sf_dir):
+    """The stop rule compares Spark-engine snapshots Spark-side: no
+    snapshot's estimate frame is pulled to the driver."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    sdf, meta = create_scramble(li, nblocks=10, seed=3)
+    aggs = [AggSpec("avg", "l_quantity", "aq"), AggSpec("count", None, "c")]
+    stream = ResultStream(
+        progressive_agg(
+            sdf, meta, aggs, ["l_returnflag"], schedule="linear", engine="spark"
+        ),
+        ["l_returnflag"],
+        ["aq", "c"],
+    )
+    res = stream.until_converged()
+    assert len(stream.history) >= 2 and res is stream.history[-1]
+    assert all(
+        r.estimates_sdf is not None and r._pdf is None for r in stream.history
+    )
+
+
 def test_incremental_sketch_sink(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     src = str(tmp_path / "src")

@@ -4,9 +4,11 @@ library rebuilt from scratch with the capabilities of VerdictDB
 
 Public surface (grows per SURVEY.md §7):
   sketches:   HllSketch, CmsSketch, KllSketch, TDigestSketch, BloomSketch
-  operators:  approx_count_distinct_by, approx_frequencies, approx_quantiles,
-              top_k, membership filter, dedup_*, similarity search, text ops
-  sampling:   create_scramble, approx_agg_progressive (progressive refinement)
+  operators:  approx_count_distinct_by, approx_frequency, approx_quantiles,
+              approx_top_k, membership filter, dedup_*, similarity search,
+              text ops
+  sampling:   create_scramble, progressive_agg / approx_agg (progressive
+              refinement)
   lineage:    checkpointed partial-sketch tables with resume
 """
 

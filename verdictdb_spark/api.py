@@ -1144,19 +1144,7 @@ class VerdictContext:
                 "method string, status string",
             )
 
-        m = _DROP_SAMPLES_RE.match(query)
-        if m:
-            dropped = 0
-            for e in self.metastore.show("scramble"):
-                if e.source_table == m.group("orig"):
-                    self._drop_entry(e)
-                    dropped += 1
-            return spark.createDataFrame(
-                [(m.group("orig"), dropped)],
-                schema="original_table string, dropped int",
-            )
-
-        m = _DROP_ALL_RE.match(query)
+        m = _DROP_SAMPLES_RE.match(query) or _DROP_ALL_RE.match(query)
         if m:
             dropped = 0
             for e in self.metastore.show("scramble"):

@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sketches.state import reduce_merge
+
 GROUP_ALL = "__all__"  # sentinel group key for global (ungrouped) sketches
 
 LINEAGE_FIELDS = [
@@ -247,10 +249,7 @@ def tree_merge(
         states = [sketch.from_bytes(b) for b in blobs]
         if hasattr(sketch, "merge_many") and len(states) > 1:
             return sketch.merge_many(states)
-        acc = states[0]
-        for s in states[1:]:
-            acc = sketch.merge(acc, s)
-        return acc
+        return reduce_merge(sketch, states)
 
     def make_merge_fn(extra: list[str]):
         keycols = gnames + extra

@@ -49,72 +49,6 @@ def cms_sketch_table(
     return tree_merge(partials, sk, group_by)
 
 
-def _candidates(df: DataFrame, col: str, group_by: Sequence[str], per_part: int) -> DataFrame:
-    """Per-(partition x group) Misra-Gries summaries — the candidate set
-    for global heavy hitters, with BOUNDED memory (C = per_part * 4
-    counters per group, regardless of the distinct-value count).
-
-    MG merge rule (mergeable summaries): add counts, then if more than
-    C counters remain, subtract the (C+1)-th largest count from all and
-    drop the non-positive — total undercount stays <= N_p/(C+1).
-    Emits value + its JVM hash so CMS lookups use the identical hash
-    function; MG counts are lower bounds, final ranking uses the CMS.
-    """
-    gcols = list(group_by)
-    cap = per_part * 4
-    sel = gcols + [F.col(col).cast("string").alias("_value"), F.xxhash64(F.col(col)).alias("_vh")]
-    prepared = df.where(F.col(col).isNotNull()).select(*sel)
-    out_fields = [prepared.schema[g] for g in gcols] + [
-        T.StructField("_value", T.StringType()),
-        T.StructField("_vh", T.LongType()),
-        T.StructField("_lcount", T.LongType()),
-    ]
-
-    keycols = gcols + ["_value"]
-
-    def _mg_trim(acc: pd.DataFrame) -> pd.DataFrame:
-        """Enforce <= cap counters per group via the MG decrement."""
-        if gcols:
-            def trim(g: pd.DataFrame) -> pd.DataFrame:
-                if len(g) <= cap:
-                    return g
-                thr = g["_lcount"].nlargest(cap + 1).iloc[-1]
-                g = g.assign(_lcount=g["_lcount"] - thr)
-                return g[g["_lcount"] > 0]
-
-            return acc.groupby(gcols, sort=False, dropna=False, group_keys=False).apply(trim)
-        if len(acc) <= cap:
-            return acc
-        thr = acc["_lcount"].nlargest(cap + 1).iloc[-1]
-        acc = acc.assign(_lcount=acc["_lcount"] - thr)
-        return acc[acc["_lcount"] > 0]
-
-    def local_mg(batches):
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            g = (
-                pdf.groupby(keycols, sort=False, dropna=False)
-                .agg(_vh=("_vh", "first"), _lcount=("_vh", "size"))
-                .reset_index()
-            )
-            if acc is None:
-                acc = g
-            else:
-                acc = (
-                    pd.concat([acc, g])
-                    .groupby(keycols, sort=False, dropna=False)
-                    .agg(_vh=("_vh", "first"), _lcount=("_lcount", "sum"))
-                    .reset_index()
-                )
-            acc = _mg_trim(acc)
-        if acc is None:
-            yield pd.DataFrame(columns=keycols + ["_vh", "_lcount"])
-            return
-        yield acc[keycols[:-1] + ["_value", "_vh", "_lcount"]]
-
-    return prepared.mapInPandas(local_mg, T.StructType(out_fields))
-
-
 def _fused_partials(
     df: DataFrame,
     col: str,
@@ -124,9 +58,8 @@ def _fused_partials(
 ) -> DataFrame:
     """ONE pass over the input producing BOTH the per-(partition x
     group) CMS partial states and the Misra-Gries candidate summaries
-    (the previous implementation ran ``cms_sketch_table`` and
-    ``_candidates`` as two separate scans of the source — at 100 TB
-    that is the whole input read twice for one query).  Output rows
+    (two separate scans would read the whole input twice for one
+    query — at 100 TB, the dominant cost).  Output rows
     are tagged by kind: state rows carry (group cols, state, part_id);
     candidate rows carry (group cols, _value, _vh, _lcount); the other
     columns are NULL.  Per-partition memory stays O(groups x CMS size
@@ -159,6 +92,11 @@ def _fused_partials(
     keycols = gcols + ["_value"]
 
     def _mg_trim(acc: pd.DataFrame) -> pd.DataFrame:
+        """Keep <= cap counters per group by the MG merge rule
+        (mergeable summaries): if more remain, subtract the (cap+1)-th
+        largest count from all and drop the non-positive — the total
+        undercount stays <= N_p/(cap+1).  MG counts are lower bounds;
+        the final ranking uses the CMS."""
         if gcols:
             def trim(g: pd.DataFrame) -> pd.DataFrame:
                 if len(g) <= cap:

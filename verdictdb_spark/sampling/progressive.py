@@ -17,16 +17,23 @@ d-dimensional block space, as the reference does
 chain join of N scrambles is the N-dimensional hyper-table cube.  Per
 schedule step it joins only the NEW disjoint slabs of the covered
 block box (each slab a partition-pruned scan per side), producing a
-tiny per-(group, tier, block) partial table that is collected and
-merged driver-side in pandas — the analogue of the reference's
-in-memory H2 combiner (``ola/InMemoryAggregate.java:36-273``) — or,
-for high-cardinality group-bys, kept a DataFrame and estimated by
-Spark.  Inclusion probabilities multiply across independent
-scrambles (``ola/AggMeta.java:149-185``); ``_BlockSpaceMeta`` presents
-the product to the single-scramble estimators.  Full coverage =>
+tiny per-(group, tier, block) partial table.  ``progressive_agg``
+here and the join entry points in ``join.py`` are signature adapters
+over it.
+
+One estimator turns that table into estimates and error bars, with two
+backends for the one algorithm: level 1 groups the partials by
+(group, block), level 2 by group, and both backends read the same
+per-aggregate table, scale factors and error formula.  The driver
+backend collects the partials to pandas — the analogue of the
+reference's in-memory H2 combiner (``ola/InMemoryAggregate.java:
+36-273``); for high-cardinality group-bys the table stays a DataFrame
+and the same two levels run as Spark aggregations.  Inclusion
+probabilities multiply across independent scrambles
+(``ola/AggMeta.java:149-185``); ``_BlockSpaceMeta`` presents the
+product to the estimator as one scramble.  Full coverage =>
 exact (scale factor 1.0), the reference's own oracle
-(SparkTpchSelectQueryCoordinatorTest).  ``progressive_agg`` here and
-the join entry points in ``join.py`` are signature adapters over it.
+(SparkTpchSelectQueryCoordinatorTest).
 
 COUNT(DISTINCT c) is only legal on a hash scramble on c: the block
 id is a function of hash(c), so each distinct value lands in exactly
@@ -115,37 +122,6 @@ class ProgressiveResult:
         return out
 
 
-def _partial_exprs(aggs: Sequence[AggSpec]) -> list:
-    """Decompose to mergeable partials (mirrors
-    createUnfoldSelectlistWithBasicAgg:664-826: avg -> sum+count)."""
-    exprs = []
-    seen = set()
-
-    def add(name, expr):
-        if name not in seen:
-            seen.add(name)
-            exprs.append(expr.alias(name))
-
-    for a in aggs:
-        if a.op == "sum" or a.op == "avg":
-            add(f"psum_{a.col}", F.sum(a.col))
-        if a.op == "count" and a.col is None:
-            add("pcnt_star", F.count(F.lit(1)))
-        if a.op == "count" and a.col is not None:
-            add(f"pcnt_{a.col}", F.count(a.col))
-        if a.op == "avg":
-            # SQL AVG ignores NULLs: denominator is count(col), NOT count(*)
-            add(f"pcnt_{a.col}", F.count(a.col))
-        if a.op == "min":
-            add(f"pmin_{a.col}", F.min(a.col))
-        if a.op == "max":
-            add(f"pmax_{a.col}", F.max(a.col))
-        if a.op == "countdistinct":
-            add(f"pndv_{a.col}", F.countDistinct(a.col))
-    add("pcnt_star", F.count(F.lit(1)))  # always: variance + group weights
-    return exprs
-
-
 def _validate(aggs: Sequence[AggSpec], meta: ScrambleMeta) -> None:
     for a in aggs:
         if a.op == "countdistinct" and (
@@ -199,6 +175,106 @@ def _schedule(ns: Sequence[int], kind: str) -> list[list[tuple[int, int]]]:
     return spans
 
 
+# The estimator: one algorithm, two backends.  Level 1 groups the
+# (group, tier, block) partials by (group, block).  Per sum-like
+# partial c it sums S_c = c * scale(tier), c's share of the
+# Horvitz-Thompson total, and V_c = c * invp(tier, block), the block's
+# own estimate of that total; per extreme, V_c is the block's min/max.
+# Level 2 groups by group: the totals (sum of S_, min/max of V_) and
+# the subsample errors over the per-block V_ -- the reference derives
+# both from one scaling query over the same partials
+# (AsyncAggExecutionNode.createQuery:236-311,
+# SingleAggResultRewriter.java:203-281).  ``_estimate`` runs it in
+# pandas on the driver, ``_estimate_spark`` as two Spark aggregations.
+
+_PREFIX = {
+    "sum": "psum_", "count": "pcnt_", "countdistinct": "pndv_",
+    "min": "pmin_", "max": "pmax_",
+}
+_PARTIAL = {
+    "psum_": F.sum,
+    "pcnt_": lambda c: F.count(F.lit(1) if c is None else c),
+    "pndv_": F.countDistinct,
+    "pmin_": F.min,
+    "pmax_": F.max,
+}
+
+
+def _sources(a: AggSpec) -> list[str]:
+    """The partial columns aggregate ``a`` reads: avg is sum / count
+    (createUnfoldSelectlistWithBasicAgg:664-826) with count(col), not
+    count(*), as SQL AVG ignores NULLs; every other aggregate reads its
+    own partial."""
+    if a.op == "avg":
+        return [f"psum_{a.col}", f"pcnt_{a.col}"]
+    return [_PREFIX[a.op] + ("star" if a.col is None else a.col)]
+
+
+def _partial_exprs(aggs: Sequence[AggSpec]) -> list:
+    """The mergeable per-(group, tier, block) partials of ``aggs``;
+    count(*) is always there (variance + group weights)."""
+    exprs: dict = {}
+    for a in aggs:
+        for name in _sources(a):
+            exprs.setdefault(name, _PARTIAL[name[:5]](a.col))
+    exprs.setdefault("pcnt_star", F.count(F.lit(1)))
+    return [e.alias(name) for name, e in exprs.items()]
+
+
+def _agg_table(aggs: Sequence[AggSpec]) -> list[tuple[str, list[str], str]]:
+    """Per aggregate: (alias, source partials, error kind).  ``closed``:
+    the spread of the per-block estimates of a sum-like total over all
+    ``nb`` blocks; ``spread``: the spread over the blocks where the
+    group was observed, of avg's per-block ratio or of the per-block
+    extreme (a stability heuristic, the reference's uniform subsample
+    treatment)."""
+    return [
+        (a.alias, _sources(a), "closed" if a.op in SUMLIKE else "spread")
+        for a in aggs
+    ]
+
+
+def _value(srcs: list[str], get):
+    """An aggregate's value from its sources (pandas Series or Spark
+    Columns alike): avg's ratio, else the one source."""
+    v = get(srcs[0])
+    return v / get(srcs[1]) if len(srcs) > 1 else v
+
+
+def _split_partials(columns) -> tuple[list[str], dict[str, str]]:
+    """(sum-like partial columns, {extreme partial column: min|max})."""
+    sums = [c for c in columns if c.startswith(("psum_", "pcnt_", "pndv_"))]
+    exts = {c: c[1:4] for c in columns if c.startswith(("pmin_", "pmax_"))}
+    return sums, exts
+
+
+def _scale_factors(pairs: list[tuple[int, int]], meta, hi_block: int):
+    """Per distinct (tier, block) pair of a partial table: the
+    Horvitz-Thompson scale 1/coverage(hi_block, tier)
+    (``AggMeta.computeScaleFactors:92-105``) and the single-block scale
+    1/block_prob(block, tier).  The latter is the inverse CDF INCREMENT,
+    not nblocks, so fastconverge and partial-size scrambles stay
+    calibrated.  Also returns nb, the number of blocks present."""
+    scale = [1.0 / meta.coverage(hi_block, t) for t, _ in pairs]
+    invp = [1.0 / meta.block_prob(b, t) for t, b in pairs]
+    return len({b for _, b in pairs}), scale, invp
+
+
+def _closed_err(s1, s2, nb: int, sqrt, pos):
+    """1.96 x the standard error of ``nb`` per-block estimates from their
+    sum ``s1`` and sum of squares ``s2``, ddof=1.  Blocks where the
+    group has no rows are implicit zeros: real observations of 0 that
+    must enter the variance, here without a dense groups x blocks fill
+    (O(nnz) memory at 10^6 groups)."""
+    mean = s1 / nb
+    return 1.96 * sqrt(pos((s2 - nb * (mean * mean)) / (nb - 1)) / nb)
+
+
+def _spread_err(std, n, sqrt):
+    """1.96 x std / sqrt(n) over the n blocks that observed the group."""
+    return 1.96 * std / sqrt(n)
+
+
 def _estimate(
     acc: pd.DataFrame,
     aggs: Sequence[AggSpec],
@@ -206,173 +282,67 @@ def _estimate(
     meta: ScrambleMeta,
     hi_block: int,
 ) -> pd.DataFrame:
-    gb = group_by + [TIER_COL]
-    agg_map: dict[str, tuple] = {}
-    for c in acc.columns:
-        if c.startswith(("psum_", "pcnt_", "pndv_")):
-            agg_map[c] = (c, "sum")
-        elif c.startswith("pmin_"):
-            agg_map[c] = (c, "min")
-        elif c.startswith("pmax_"):
-            agg_map[c] = (c, "max")
-    per_tier = acc.groupby(gb, dropna=False, sort=False).agg(**agg_map).reset_index()
-    # Horvitz-Thompson scale per tier (AggMeta.computeScaleFactors)
-    per_tier["_scale"] = per_tier[TIER_COL].map(
-        lambda t: 1.0 / meta.coverage(hi_block, int(t))
+    """The estimator in pandas, on the driver (the reference's in-memory
+    combiner, ``ola/InMemoryAggregate.java``).  Columns: group keys,
+    the estimates, then their ``_err`` (none while nb <= 1)."""
+    sums, exts = _split_partials(acc.columns)
+    tier = acc[TIER_COL].to_numpy(np.int64)
+    block = acc[BLOCK_COL].to_numpy(np.int64)
+    m = int(block.max()) + 1
+    codes, keys = pd.factorize(tier * m + block)
+    nb, scale, invp = _scale_factors(
+        [divmod(int(k), m) for k in keys], meta, hi_block
     )
-    for c in agg_map:
-        if c.startswith(("psum_", "pcnt_", "pndv_")):
-            per_tier[c] = per_tier[c] * per_tier["_scale"]
-    # consolidate tiers (sumUpTierGroup:703-768)
-    if group_by:
-        final = per_tier.groupby(group_by, dropna=False, sort=False).agg(**agg_map).reset_index()
-    else:
-        final = per_tier.drop(columns=[TIER_COL, "_scale"]).agg(
-            {c: spec[1] for c, spec in agg_map.items()}
-        ).to_frame().T
-
-    out = final[group_by].copy() if group_by else pd.DataFrame(index=[0])
-    for a in aggs:
-        if a.op == "sum":
-            out[a.alias] = final[f"psum_{a.col}"]
-        elif a.op == "count":
-            out[a.alias] = final["pcnt_star" if a.col is None else f"pcnt_{a.col}"]
-        elif a.op == "avg":
-            out[a.alias] = final[f"psum_{a.col}"] / final[f"pcnt_{a.col}"]
-        elif a.op == "min":
-            out[a.alias] = final[f"pmin_{a.col}"]
-        elif a.op == "max":
-            out[a.alias] = final[f"pmax_{a.col}"]
-        elif a.op == "countdistinct":
-            out[a.alias] = final[f"pndv_{a.col}"]
-    _attach_errors(out, acc, aggs, group_by, meta, hi_block)
-    return out.reset_index(drop=True)
-
-
-def _attach_errors(
-    out: pd.DataFrame,
-    acc: pd.DataFrame,
-    aggs: Sequence[AggSpec],
-    group_by: list[str],
-    meta: ScrambleMeta,
-    hi_block: int,
-) -> None:
-    """Subsample error estimates for EVERY aggregate (the reference's
-    rewriter covers all scaled aggs, SingleAggResultRewriter.java:
-    203-281): each covered block yields an independent estimate of the
-    final answer; <alias>_err = 1.96 * std(per-block estimates)/sqrt(b).
-
-    Correctness details the naive version gets wrong:
-    * per-block scale is the inverse CDF INCREMENT of that (tier,
-      block) — NOT a constant nblocks — so fastconverge (non-uniform
-      per-tier CDFs) and partial-size scrambles are calibrated;
-    * (group, block) combinations with no rows are real observations
-      of 0 for sum/count/ndv and must enter the variance (skipping
-      them biases errors low for rare groups);
-    * avg is a ratio of scaled sum to scaled count per block;
-      min/max report the raw per-block spread (a stability heuristic,
-      matching the reference's uniform subsample treatment).
-    """
-    nb = acc[BLOCK_COL].nunique()
-    if nb <= 1:
-        return
-    # inverse single-block inclusion probability per (tier, block) row
-    inv_p = np.array(
-        [1.0 / meta.block_prob(int(b), int(t)) for t, b in zip(acc[TIER_COL], acc[BLOCK_COL])]
+    scale, invp = np.take(scale, codes), np.take(invp, codes)
+    per = (
+        acc[group_by + [BLOCK_COL]]
+        .assign(
+            **{f"S_{c}": acc[c].to_numpy() * scale for c in sums},
+            **{f"V_{c}": acc[c].to_numpy() * invp for c in sums},
+            **{f"V_{c}": acc[c] for c in exts},
+        )
+        .groupby(group_by + [BLOCK_COL], dropna=False, sort=False)
+        .agg({f"S_{c}": "sum" for c in sums} | {f"V_{c}": "sum" for c in sums}
+             | {f"V_{c}": how for c, how in exts.items()})
+        .reset_index()
     )
-
-    # one sparse per-(group, block) pass for ALL sources; the empty
-    # (group, block) cells enter the variance via the CLOSED FORM
-    # (mean = S1/nb, E[v^2] = S2/nb) rather than a dense groups x
-    # blocks zero-fill — identical numbers, O(nnz) memory (round 2's
-    # dense MultiIndex grid was the last scale-killer at 10^6 groups).
-    srcs: list[str] = []
-    for a in aggs:
-        if a.op in ("sum", "count", "countdistinct"):
-            srcs.append(
-                {
-                    "sum": f"psum_{a.col}",
-                    "count": "pcnt_star" if a.col is None else f"pcnt_{a.col}",
-                    "countdistinct": f"pndv_{a.col}",
-                }[a.op]
-            )
-        elif a.op == "avg":
-            srcs += [f"psum_{a.col}", f"pcnt_{a.col}"]
-    srcs = list(dict.fromkeys(srcs))
-    minmax = [
-        (f"pmin_{a.col}" if a.op == "min" else f"pmax_{a.col}", a.op)
-        for a in aggs
-        if a.op in ("min", "max")
-    ]
-    tmp = acc[group_by + [BLOCK_COL]].copy()
-    for s in srcs:
-        tmp[s] = acc[s].to_numpy() * inv_p
-    for s, op in minmax:
-        tmp[s] = acc[s].to_numpy()
-    agg_spec = {s: "sum" for s in srcs} | {s: op for s, op in minmax}
-    if group_by:
-        per = (
-            tmp.groupby(group_by + [BLOCK_COL], dropna=False, sort=False)
-            .agg(agg_spec)
-            .reset_index()
-        )
-    else:
-        per = tmp.groupby([BLOCK_COL], sort=False).agg(agg_spec).reset_index()
-
-    def grouped(frame: pd.DataFrame, col_map: dict[str, tuple[str, str]]):
-        if group_by:
-            return frame.groupby(group_by, dropna=False, sort=False).agg(**col_map)
-        return pd.DataFrame(
-            {k: [frame[c].agg(how)] for k, (c, how) in col_map.items()}
-        )
-
-    def put(alias: str, err) -> None:
-        if group_by:
-            err_map = err.to_dict()
-            keys = (
-                out[group_by].itertuples(index=False, name=None)
-                if len(group_by) > 1
-                else out[group_by[0]]
-            )
-            out[f"{alias}_err"] = [
-                err_map.get(tuple(k) if len(group_by) > 1 else k, np.nan) for k in keys
-            ]
+    table = _agg_table(aggs)
+    named = {c: (f"S_{c}", "sum") for c in sums}
+    named |= {c: (f"V_{c}", how) for c, how in exts.items()}
+    for alias, srcs, kind in table if nb > 1 else ():
+        if kind == "closed":
+            per[f"Q_{srcs[0]}"] = per[f"V_{srcs[0]}"] ** 2
+            named[f"S1_{srcs[0]}"] = (f"V_{srcs[0]}", "sum")
+            named[f"S2_{srcs[0]}"] = (f"Q_{srcs[0]}", "sum")
         else:
-            out[f"{alias}_err"] = float(err.iloc[0]) if hasattr(err, "iloc") else err
-
-    for s in srcs:
-        per[f"_sq_{s}"] = per[s] ** 2
-    sums = grouped(
-        per,
-        {f"S1_{s}": (s, "sum") for s in srcs}
-        | {f"S2_{s}": (f"_sq_{s}", "sum") for s in srcs},
-    )
-
-    def closed_form_err(s: str):
-        """std over nb per-block estimates (implicit zeros), ddof=1."""
-        mean = sums[f"S1_{s}"] / nb
-        var = (sums[f"S2_{s}"] - nb * mean**2) / (nb - 1)
-        return 1.96 * np.sqrt(np.maximum(var, 0.0) / nb)
-
-    for a in aggs:
-        if a.op in ("sum", "count", "countdistinct"):
-            s = {
-                "sum": f"psum_{a.col}",
-                "count": "pcnt_star" if a.col is None else f"pcnt_{a.col}",
-                "countdistinct": f"pndv_{a.col}",
-            }[a.op]
-            put(a.alias, closed_form_err(s))
-        elif a.op == "avg":
-            # blocks with no rows of the group carry no ratio information
-            num, den = f"psum_{a.col}", f"pcnt_{a.col}"
-            sub = per[per[den] > 0].copy()
-            sub["_r"] = sub[num] / sub[den]
-            st = grouped(sub, {"_std": ("_r", "std"), "_n": ("_r", "count")})
-            put(a.alias, 1.96 * st["_std"] / np.sqrt(st["_n"]))
-        elif a.op in ("min", "max"):
-            s = f"pmin_{a.col}" if a.op == "min" else f"pmax_{a.col}"
-            st = grouped(per, {"_std": (s, "std"), "_n": (s, "count")})
-            put(a.alias, 1.96 * st["_std"] / np.sqrt(st["_n"]))
+            r = _value(srcs, lambda c: per[f"V_{c}"])
+            if len(srcs) > 1:  # blocks without the group carry no ratio
+                r = r.where(per[f"V_{srcs[1]}"] > 0)
+            per[f"R_{alias}"] = r
+            named[f"sd_{alias}"] = (f"R_{alias}", "std")
+            named[f"n_{alias}"] = (f"R_{alias}", "count")
+    if group_by:
+        final = (
+            per.groupby(group_by, dropna=False, sort=False).agg(**named).reset_index()
+        )
+    else:
+        final = pd.DataFrame({k: [per[c].agg(how)] for k, (c, how) in named.items()})
+    # an ungrouped answer is one row of scalars: the estimates share the
+    # partial row's one dtype, and the errors are floats
+    tot = final if group_by else final[sums + list(exts)].iloc[0].to_frame().T
+    out = final[group_by].copy()
+    for alias, srcs, _ in table:
+        out[alias] = _value(srcs, lambda c: tot[c])
+    for alias, srcs, kind in table if nb > 1 else ():
+        if kind == "closed":
+            err = _closed_err(
+                final[f"S1_{srcs[0]}"], final[f"S2_{srcs[0]}"], nb,
+                np.sqrt, lambda v: np.maximum(v, 0.0),
+            )
+        else:
+            err = _spread_err(final[f"sd_{alias}"], final[f"n_{alias}"], np.sqrt)
+        out[f"{alias}_err"] = err if group_by else err.astype(float)
+    return out
 
 
 def _estimate_spark(
@@ -382,109 +352,56 @@ def _estimate_spark(
     meta: ScrambleMeta,
     hi_block: int,
 ) -> DataFrame:
-    """Spark-side twin of ``_estimate`` + ``_attach_errors`` for
-    HIGH-CARDINALITY group-bys: the (group, tier, block) partial table
-    stays a DataFrame and both the Horvitz-Thompson totals and the
-    closed-form subsample errors are computed as two Spark
-    aggregations, so the driver never holds O(groups x blocks) rows —
-    the reference switches to its CTAS/temp-table combiner
-    (``ola/SelectAsyncAggExecutionNode``) for exactly this case.
-
-    Numerically identical to the pandas path: totals scale each
-    (tier, block) partial by 1/coverage(hi, tier); errors treat the
-    per-block inverse-probability estimates (implicit zeros over the
-    ``nb`` covered blocks) with the same ddof=1 closed form."""
-    spark = partials.sparkSession
-    pairs = partials.select(TIER_COL, BLOCK_COL).distinct().collect()
-    nb = len({int(r[BLOCK_COL]) for r in pairs})
-    rows = [
-        (
-            int(r[TIER_COL]),
-            int(r[BLOCK_COL]),
-            1.0 / meta.coverage(hi_block, int(r[TIER_COL])),
-            1.0 / meta.block_prob(int(r[BLOCK_COL]), int(r[TIER_COL])),
-        )
-        for r in pairs
+    """The estimator as two Spark aggregations, for HIGH-CARDINALITY
+    group-bys: the partial table stays a DataFrame, so the driver never
+    holds O(groups x blocks) rows — the reference's CTAS/temp-table
+    combiner (``ola/SelectAsyncAggExecutionNode``) for exactly this
+    case.  The scale factors enter the plan as literal arrays indexed
+    by (tier, block).  Columns: group keys, then each estimate followed
+    by its ``_err`` (none while nb <= 1)."""
+    pairs = [
+        (int(r[TIER_COL]), int(r[BLOCK_COL]))
+        for r in partials.select(TIER_COL, BLOCK_COL).distinct().collect()
     ]
-    scale_df = spark.createDataFrame(
-        rows, schema=f"{TIER_COL} int, {BLOCK_COL} int, _scale double, _invp double"
+    nb, scale, invp = _scale_factors(pairs, meta, hi_block)
+    m = max(b for _, b in pairs) + 1
+    width = (max(t for t, _ in pairs) + 1) * m
+
+    def lookup(factors: list[float]):
+        dense = [0.0] * width
+        for (t, b), f in zip(pairs, factors):
+            dense[t * m + b] = f
+        return F.array(*map(F.lit, dense))[F.col(TIER_COL) * m + F.col(BLOCK_COL)]
+
+    sums, exts = _split_partials(partials.columns)
+    s_, v_ = lookup(scale), lookup(invp)
+    per = partials.groupBy(*group_by, BLOCK_COL).agg(
+        *[F.sum(F.col(c) * s_).alias(f"S_{c}") for c in sums],
+        *[F.sum(F.col(c) * v_).alias(f"V_{c}") for c in sums],
+        *[getattr(F, how)(c).alias(f"V_{c}") for c, how in exts.items()],
     )
-    pcols = [c for c in partials.columns if c.startswith(("psum_", "pcnt_", "pndv_"))]
-    mins = [c for c in partials.columns if c.startswith("pmin_")]
-    maxs = [c for c in partials.columns if c.startswith("pmax_")]
-    j = partials.join(F.broadcast(scale_df), [TIER_COL, BLOCK_COL])
-    # level 1: per (group, block) — tier-consolidated totals (S_) and
-    # per-block single-block population estimates (V_) in one pass
-    perb = j.groupBy(*group_by, BLOCK_COL).agg(
-        *[F.sum(F.col(c) * F.col("_scale")).alias(f"S_{c}") for c in pcols],
-        *[F.sum(F.col(c) * F.col("_invp")).alias(f"V_{c}") for c in pcols],
-        *[F.min(c).alias(c) for c in mins],
-        *[F.max(c).alias(c) for c in maxs],
-    )
-
-    def closed_err(v):  # std over nb per-block estimates, implicit zeros
-        s1, s2 = F.sum(v), F.sum(F.col(v) * F.col(v))
-        var = (s2 - s1 * s1 / F.lit(float(nb))) / F.lit(float(nb - 1))
-        return 1.96 * F.sqrt(F.greatest(var, F.lit(0.0)) / F.lit(float(nb)))
-
-    def obs_err(col):  # observed-blocks-only spread (avg ratio, min/max)
-        return F.when(
-            F.count(col) > 1,
-            1.96 * F.stddev_samp(col) / F.sqrt(F.count(col).cast("double")),
-        )
-
-    final_exprs, out_cols = [], list(group_by)
-    seen: set[str] = set()
-
-    def add(expr, name):
-        if name not in seen:
-            seen.add(name)
-            final_exprs.append(expr.alias(name))
-
-    for c in pcols:
-        add(F.sum(f"S_{c}"), c)
-    for c in mins:
-        add(F.min(c), c)
-    for c in maxs:
-        add(F.max(c), c)
-    for a in aggs:
-        if a.op in ("sum", "count", "countdistinct"):
-            src = {
-                "sum": f"psum_{a.col}",
-                "count": "pcnt_star" if a.col is None else f"pcnt_{a.col}",
-                "countdistinct": f"pndv_{a.col}",
-            }[a.op]
-            if nb > 1:
-                add(closed_err(f"V_{src}"), f"{a.alias}_err")
-        elif a.op == "avg":
-            num, den = f"V_psum_{a.col}", f"V_pcnt_{a.col}"
-            r = F.when(F.col(den) > 0, F.col(num) / F.col(den))
-            if nb > 1:
-                add(obs_err(r), f"{a.alias}_err")
-        elif a.op in ("min", "max"):
-            src = f"pmin_{a.col}" if a.op == "min" else f"pmax_{a.col}"
-            if nb > 1:
-                add(obs_err(F.col(src)), f"{a.alias}_err")
-    agged = perb.groupBy(*group_by).agg(*final_exprs)
+    cols = [F.sum(f"S_{c}").alias(c) for c in sums]
+    cols += [getattr(F, how)(f"V_{c}").alias(c) for c, how in exts.items()]
     sel = [F.col(g) for g in group_by]
-    for a in aggs:
-        if a.op == "sum":
-            sel.append(F.col(f"psum_{a.col}").alias(a.alias))
-        elif a.op == "count":
-            sel.append(
-                F.col("pcnt_star" if a.col is None else f"pcnt_{a.col}").alias(a.alias)
+    for alias, srcs, kind in _agg_table(aggs):
+        sel.append(_value(srcs, F.col).alias(alias))
+        if nb <= 1:
+            continue
+        if kind == "closed":
+            v = F.col(f"V_{srcs[0]}")
+            err = _closed_err(
+                F.sum(v), F.sum(v * v), nb,
+                F.sqrt, lambda x: F.greatest(x, F.lit(0.0)),
             )
-        elif a.op == "avg":
-            sel.append((F.col(f"psum_{a.col}") / F.col(f"pcnt_{a.col}")).alias(a.alias))
-        elif a.op == "min":
-            sel.append(F.col(f"pmin_{a.col}").alias(a.alias))
-        elif a.op == "max":
-            sel.append(F.col(f"pmax_{a.col}").alias(a.alias))
-        elif a.op == "countdistinct":
-            sel.append(F.col(f"pndv_{a.col}").alias(a.alias))
-        if nb > 1:
-            sel.append(F.col(f"{a.alias}_err"))
-    return agged.select(*sel)
+        else:
+            r = _value(srcs, lambda c: F.col(f"V_{c}"))
+            if len(srcs) > 1:
+                r = F.when(F.col(f"V_{srcs[1]}") > 0, r)
+            n = F.count(r)
+            err = F.when(n > 1, _spread_err(F.stddev_samp(r), n.cast("double"), F.sqrt))
+        cols.append(err.alias(f"{alias}_err"))
+        sel.append(F.col(f"{alias}_err"))
+    return per.groupBy(*group_by).agg(*cols).select(*sel)
 
 
 def _lift_partials(spark, pdfs: list[pd.DataFrame], template: DataFrame) -> DataFrame:
@@ -613,21 +530,14 @@ class _BlockSpaceMeta:
     ):
         self.metas, self.his_rest, self.aligned = list(metas), list(his_rest), aligned
         self.ks = [max(len(m.cdf), 1) for m in metas]
-        self._memo: dict[int, tuple[int, list[float]]] = {}
 
     def _split(self, tier: int) -> tuple[int, list[float]]:
-        """(side-1 tier, coverages of sides 2..N) of a composite tier,
-        memoized: the estimators ask once per partial row."""
-        hit = self._memo.get(tier)
-        if hit is None:
-            t, rest = tier, []
-            for m, hi, k in zip(
-                self.metas[:0:-1], self.his_rest[::-1], self.ks[:0:-1]
-            ):
-                t, tj = divmod(t, k)
-                rest.append(m.coverage(hi, tj))
-            hit = self._memo[tier] = (t, [] if self.aligned else rest[::-1])
-        return hit
+        """(side-1 tier, coverages of sides 2..N) of a composite tier."""
+        t, rest = tier, []
+        for m, hi, k in zip(self.metas[:0:-1], self.his_rest[::-1], self.ks[:0:-1]):
+            t, tj = divmod(t, k)
+            rest.append(m.coverage(hi, tj))
+        return t, [] if self.aligned else rest[::-1]
 
     def coverage(self, upto_block: int, tier: int = 0) -> float:
         t, rest = self._split(int(tier))
@@ -796,9 +706,7 @@ def _progress(
             if acc_sdf is not None and new_dfs:
                 # materialize: old blocks must not be re-scanned per step
                 acc_sdf = acc_sdf.localCheckpoint(eager=True)
-        # one scramble is its own meta: the estimators call it once per
-        # partial row, where the adapter's tier split would cost ~4x
-        meta = metas[0] if len(metas) == 1 else _BlockSpaceMeta(metas, his[1:], aligned)
+        meta = _BlockSpaceMeta(metas, his[1:], aligned)
         cov = meta.coverage(his[0], 0)
         if use_spark:
             # no partials yet -> no estimate (as on the driver): an

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Callable, Iterator, Sequence
 
-from ..sampling.progressive import ProgressiveResult, converged
+from ..sampling.progressive import ProgressiveResult, converged_result
 
 
 class ResultStream:
@@ -57,12 +57,14 @@ class ResultStream:
 
     def until_converged(self) -> ProgressiveResult:
         """Stop at the reference's accuracy rule
-        (QueryResultAccuracyEstimatorFromDifference.java:35-40)."""
+        (QueryResultAccuracyEstimatorFromDifference.java:35-40), checked
+        where the snapshots live: Spark-engine estimates are compared
+        Spark-side, never pulled to the driver."""
         prev: ProgressiveResult | None = None
         for res in self:
-            if prev is not None and converged(
-                prev.estimates,
-                res.estimates,
+            if prev is not None and converged_result(
+                prev,
+                res,
                 self.group_by,
                 self.value_cols,
                 self.value_threshold,
