@@ -135,3 +135,72 @@ def test_simhash_hot_bucket_cap(spark):
     pairs = simhash_near_duplicates(docs, "doc_id", "text", max_hamming=0, hot_bucket_cap=64)
     assert pairs.count() == m - 1
     assert pairs.agg(F.max("hamming")).first()[0] == 0
+
+
+def _union_find_components(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def _components(spark, edges):
+    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    return dict(map(tuple, connected_components(df).toPandas().values.tolist()))
+
+
+def test_connected_components_two_stars_after_round_one(spark):
+    """After one round the path 1-2-3-4-0 is {2->0, 2->1, 3->1, 4->0}:
+    every target is a root, but vertex 2 is the smaller neighbour of
+    two different stars, so it is not a star forest yet and stopping
+    there would split the component."""
+    from verdictdb_spark.operators import dedup
+
+    edges = [(0, 4), (1, 2), (2, 3), (3, 4)]
+    e = spark.createDataFrame(edges, ["s", "d"])
+    round_one = dedup._small_star(dedup._large_star(dedup._neighbourhoods(e)))
+    assert sorted(map(tuple, round_one.collect())) == [(2, 0), (2, 1), (3, 1), (4, 0)]
+    got = _components(spark, edges)
+    assert got == _union_find_components(edges)
+    assert set(got.values()) == {0}
+
+
+def test_connected_components_star_forest_input_stops_after_one_round(spark, monkeypatch):
+    """An input that already is a star forest (either edge orientation)
+    stays one through a round, and the stop rule ends there — no
+    confirming round."""
+    from verdictdb_spark.operators import dedup
+
+    rounds = []
+    small_star = dedup._small_star
+
+    def counted(e):
+        rounds.append(1)
+        return small_star(e)
+
+    monkeypatch.setattr(dedup, "_small_star", counted)
+    edges = [(1, 5), (7, 1), (1, 9), (3, 2), (20, 11)]
+    assert _components(spark, edges) == _union_find_components(edges)
+    assert len(rounds) == 1
+
+
+def test_connected_components_random_sparse_graphs(spark):
+    import random
+
+    rng = random.Random(11)
+    for n, m in ((60, 40), (200, 180), (400, 300)):
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+        # a vertex with only a self-loop has no component row
+        linked = {x for a, b in edges if a != b for x in (a, b)}
+        want = {v: c for v, c in _union_find_components(edges).items() if v in linked}
+        assert _components(spark, edges) == want

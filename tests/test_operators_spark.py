@@ -112,3 +112,50 @@ def test_bloom_contains_col(spark, files_df):
     sk, state = build_bloom(langs, "lang", capacity=1024, fpr=0.01)
     probe = files_df.limit(100).withColumn("hit", bloom_contains_col(sk, state, "lang"))
     assert probe.where(~F.col("hit")).count() == 0
+
+
+def test_top_k_keeps_null_key_group(spark, files_df):
+    """A NULL group key is a group for top-k as for HLL and KLL."""
+    from verdictdb_spark.operators.distinct import approx_count_distinct_by
+
+    nulls = files_df.withColumn(
+        "repo",
+        F.when(F.col("repo").isin("org1/repo1", "org2/repo2"), None).otherwise(F.col("repo")),
+    )
+    got = approx_top_k(nulls, "lang", k=2, group_by=["repo"]).toPandas()
+    hll = approx_count_distinct_by(nulls, "content", ["repo"]).toPandas()
+    assert hll["repo"].isna().any()
+    assert set(got["repo"].fillna("<null>")) == set(hll["repo"].fillna("<null>"))
+    exact = (
+        nulls.where(F.col("repo").isNull()).groupBy("lang").count()
+        .orderBy(F.desc("count"), "lang").limit(1).toPandas()
+    )
+    top = got[got["repo"].isna()].sort_values("est_count", ascending=False)
+    assert top["value"].iloc[0] == exact["lang"].iloc[0]
+
+
+def test_top_k_multi_round_merge_matches_single_round(spark, files_df):
+    """Top-k states merged through extra tree rounds (fan-in 2 over 8
+    partials) give the rows of a single-round merge."""
+    from verdictdb_spark.operators.frequency import (
+        CmsCandidates,
+        _fused_partials,
+        _top_k_finisher,
+    )
+    from verdictdb_spark.operators.approx_agg import tree_merge
+    from verdictdb_spark.sketches.cms import CmsSketch
+
+    sk = CmsSketch(eps=1.0 / (1 << 12))
+    partials = _fused_partials(files_df, "lang", ["repo"], sk, per_part=2).localCheckpoint()
+    assert partials.select("part_id").distinct().count() > 2
+    finish = _top_k_finisher(sk, 2, "value", "est_count")
+
+    def rows(df):
+        return sorted(map(tuple, df.toPandas().values.tolist()))
+
+    one = rows(tree_merge(partials, CmsCandidates(sk), ["repo"], finish=finish))
+    many = rows(
+        tree_merge(partials, CmsCandidates(sk), ["repo"], fanin=2, n_partials_hint=8, finish=finish)
+    )
+    assert many == one
+    assert rows(approx_top_k(files_df, "lang", k=2, group_by=["repo"], eps=1.0 / (1 << 12))) == one

@@ -181,3 +181,25 @@ def test_percentile_plan_pruned_and_pushed(spark, sf_dir, tmp_path):
         assert "l_quantity" in rs
     assert "GreaterThan(l_discount,0.02)" in text  # pushed to parquet
     assert "BatchEvalPython" not in text  # Arrow-batched UDAF only
+
+
+def test_sketch_queries_are_build_then_merge_and_finish(spark, sf_dir):
+    """HLL NDV, KLL quantiles and CMS top-k each run exactly two Python
+    stages — the partial build and the last merge round, which also
+    finishes — with no per-row Python UDF, no grouped-map stage and,
+    for top-k, no join of candidates to states."""
+    from verdictdb_spark.operators.frequency import approx_top_k
+    from verdictdb_spark.operators.quantile import approx_quantiles
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for name, out in (
+        ("hll", approx_count_distinct_by(docs, "text", ["lang"], p=12)),
+        ("kll", approx_quantiles(docs, F.length("text"), [0.5], ["lang"])),
+        ("topk", approx_top_k(docs, "lang", k=3)),
+    ):
+        plan = _plan(out)
+        assert plan.count("MapInPandas") == 2, (name, plan)
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        if name == "topk":
+            assert "Join" not in plan, plan

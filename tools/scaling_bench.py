@@ -47,12 +47,14 @@ ROWS_P1 = int(os.environ.get("SCALING_ROWS_P1", "20480000"))
 PARTITIONS = 64
 REPEATS = int(os.environ.get("SCALING_REPEATS", "3"))
 CONTROL_DRIFT_TOL = float(os.environ.get("SCALING_DRIFT_TOL", "0.08"))
-OUT_PATH = os.environ.get("SCALING_OUT", "/root/repo/BENCH_SCALING.json")
+# the checkout this file lives in: its library is the one measured
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT_PATH = os.environ.get("SCALING_OUT", os.path.join(REPO, "BENCH_SCALING.json"))
 
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cpus, rows, parts, repeats = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4])
+sys.path.insert(0, sys.argv[5])
 from verdictdb_spark.session import get_spark
 from verdictdb_spark.datagen import code_files
 from verdictdb_spark.operators.distinct import approx_count_distinct_by
@@ -139,7 +141,7 @@ def mem_control(workers: int) -> float:
 def run_spark(cpus: int, rows: int) -> dict:
     env = dict(os.environ, SPARK_DRIVER_MEM="24g")
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cpus), str(rows), str(PARTITIONS), str(REPEATS)],
+        [sys.executable, "-c", WORKER, str(cpus), str(rows), str(PARTITIONS), str(REPEATS), REPO],
         capture_output=True, text=True, timeout=2700, env=env,
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]

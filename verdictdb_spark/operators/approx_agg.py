@@ -12,12 +12,20 @@ combined pairwise in arbitrary tree shapes
   per partition.  Hashing happens JVM-side (``xxhash64`` inside
   whole-stage codegen) before the Arrow boundary, so the Python side
   only does numpy array math.
-* **Merge** is a logarithmic tree of ``applyInPandas`` rounds
-  (north_rule: "per-partition partial sketches merged in a
+* **Merge** is a logarithmic tree of ``repartition`` + ``mapInPandas``
+  rounds (north_rule: "per-partition partial sketches merged in a
   logarithmic tree reduce").  Each round buckets partials by
   ``pmod(xxhash64(partition_id), width)`` so a group with millions of
   partials (the skew case — one mega-repo) never funnels into a
   single task until its partial count is below ``fanin``.
+* **Finish** runs inside the last merge round: given a finisher, that
+  round turns each group's merged state into its answer columns (an
+  estimate, quantiles, top-k rows) in the same Python pass, so a
+  sketch query is exactly two Python stages — build and
+  merge-and-finish — like the reference's partials, combiners and one
+  final query.  Without a finisher the last round emits the merged
+  state bytes (persisted sketch tables, incremental merge);
+  ``finalize`` answers such frames.
 * **Skew**: the build stage needs no salting at all (partials are
   per-partition, so a hot group just yields one partial per
   partition); the tree merge IS the salted two-stage combine.
@@ -220,12 +228,16 @@ def build_partials(
     return prepared.mapInPandas(build, out_schema)
 
 
+Finisher = tuple[list[T.StructField], Callable[[pd.DataFrame, list], pd.DataFrame]]
+
+
 def tree_merge(
     partials: DataFrame,
     sketch: Any,
     group_by: Sequence[str] = (),
     fanin: int = 64,
     n_partials_hint: int | None = None,
+    finish: Finisher | None = None,
 ) -> DataFrame:
     """Stage 2: logarithmic tree-reduce of partial states per group.
 
@@ -238,10 +250,16 @@ def tree_merge(
     to a handful of tasks even though the Python merge cost per byte
     is high.  Rounds bucket a hot group's partials by partition hash
     so skew spreads until the fan-in is small.
+
+    ``finish = (fields, fn)`` makes the last round emit answers instead
+    of states: ``fn(keys, states)`` gets the round's group-key frame
+    (the ``group_by`` columns, none when ungrouped) and the merged
+    states in key order, and returns the key columns plus ``fields``,
+    any number of rows per group.  The answer frame has no
+    ``GROUP_ALL`` column.
     """
     gnames = list(group_by) if group_by else [GROUP_ALL]
     gfields = [f for f in partials.schema.fields if f.name in gnames]
-    merged_schema = T.StructType(gfields + [T.StructField("state", T.BinaryType())])
     spark = partials.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
 
@@ -251,7 +269,7 @@ def tree_merge(
             return sketch.merge_many(states)
         return reduce_merge(sketch, states)
 
-    def make_merge_fn(extra: list[str]):
+    def make_merge_fn(extra: list[str], finish_fn=None):
         keycols = gnames + extra
 
         def merge_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -269,8 +287,11 @@ def tree_merge(
                     st = _fold(list(blobs[idx]))
                     k = uniq_rows[g]
                     acc[k] = sketch.merge(acc[k], st) if k in acc else st
-            rows = [list(k) + [sketch.to_bytes(st)] for k, st in acc.items()]
-            yield pd.DataFrame(rows, columns=keycols + ["state"])
+            keys = pd.DataFrame(list(acc), columns=keycols)
+            if finish_fn is None:
+                yield keys.assign(state=[sketch.to_bytes(st) for st in acc.values()])
+            elif acc:
+                yield finish_fn(keys.drop(columns=[GROUP_ALL], errors="ignore"), list(acc.values()))
 
         return merge_fn
 
@@ -287,9 +308,14 @@ def tree_merge(
         cur = cur.repartition(parallelism, *gnames, "part_id").mapInPandas(
             make_merge_fn(["part_id"]), round_schema
         )
-    return cur.repartition(parallelism, *gnames).mapInPandas(
-        make_merge_fn([]), merged_schema
-    )
+    if finish is None:
+        last_fn = make_merge_fn([])
+        last_schema = T.StructType(gfields + [T.StructField("state", T.BinaryType())])
+    else:
+        fields, finish_fn = finish
+        last_fn = make_merge_fn([], finish_fn)
+        last_schema = T.StructType((gfields if group_by else []) + list(fields))
+    return cur.repartition(parallelism, *gnames).mapInPandas(last_fn, last_schema)
 
 
 def sketch_agg(
@@ -299,10 +325,30 @@ def sketch_agg(
     group_by: Sequence[str] = (),
     input_kind: str = "hash",
     fanin: int = 64,
+    finish: Finisher | None = None,
 ) -> DataFrame:
-    """Build + tree-merge: one merged state row per group."""
+    """Build + tree-merge: one merged state row per group, or the
+    ``finish`` answer rows (see ``tree_merge``)."""
     partials = build_partials(df, sketch, value, group_by, input_kind)
-    return tree_merge(partials, sketch, group_by, fanin=fanin)
+    return tree_merge(partials, sketch, group_by, fanin=fanin, finish=finish)
+
+
+def estimates(sketch: Any, states: list, estimator: Callable[[Any, Any], Any] | None = None):
+    """The sketch's estimate of each decoded state, vectorized when the
+    sketch has ``estimate_many``."""
+    if estimator is None and hasattr(sketch, "estimate_many") and len(states):
+        return sketch.estimate_many(np.stack(states))
+    est = estimator or (lambda sk, st: sk.estimate(st))
+    return [est(sketch, st) for st in states]
+
+
+def estimate_finisher(sketch: Any, out_col: str, out_type: T.DataType) -> Finisher:
+    """``tree_merge`` finisher: one ``out_col`` estimate per group."""
+
+    def fn(keys: pd.DataFrame, states: list) -> pd.DataFrame:
+        return keys.assign(**{out_col: estimates(sketch, states)})
+
+    return [T.StructField(out_col, out_type)], fn
 
 
 def finalize(
@@ -312,15 +358,14 @@ def finalize(
     out_type: T.DataType,
     estimator: Callable[[Any, Any], Any] | None = None,
 ) -> DataFrame:
-    """Apply the sketch's estimator to each merged state (tiny data)."""
-    est = estimator or (lambda sk, st: sk.estimate(st))
+    """Apply the sketch's estimator to each merged state of a state
+    frame (a persisted sketch table, a resumed checkpoint); a one-shot
+    query gets the same estimates from ``estimate_finisher`` inside its
+    last merge round instead."""
 
     @F.pandas_udf(out_type)
     def _est(states: pd.Series) -> pd.Series:
-        decoded = [sketch.from_bytes(b) for b in states]
-        if estimator is None and hasattr(sketch, "estimate_many") and len(decoded):
-            return pd.Series(sketch.estimate_many(np.stack(decoded)))
-        return pd.Series([est(sketch, d) for d in decoded])
+        return pd.Series(estimates(sketch, [sketch.from_bytes(b) for b in states], estimator))
 
     out = merged.withColumn(out_col, _est(F.col("state"))).drop("state")
     if GROUP_ALL in out.columns:

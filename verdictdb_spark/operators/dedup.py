@@ -282,6 +282,7 @@ def lsh_candidate_pairs(
     min_est_jaccard: float = 0.0,
     num_hashes: int | None = None,
     hot_bucket_cap: int = 1024,
+    warn_hot_buckets: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
@@ -295,6 +296,9 @@ def lsh_candidate_pairs(
     signature.  Buckets larger than ``hot_bucket_cap`` are linked
     through their min-id representative instead of all-pairs — see
     ``_bucket_pairs`` — bounding per-bucket join output at scale.
+    ``warn_hot_buckets=False`` skips the fired-cap warning and the
+    bucket-statistics job behind it: pass it when the pairs only feed
+    ``connected_components``, whose clusters the cap cannot change.
     """
     if num_hashes is None:
         num_hashes = len(sig_df.select("sig").first()["sig"])
@@ -318,7 +322,8 @@ def lsh_candidate_pairs(
         ).alias("bb"),
     ).select("_id", "bb.band", "bb.bh")
     pairs = _bucket_pairs(
-        banded, ["band", "bh"], hot_bucket_cap, warn_op="lsh_candidate_pairs"
+        banded, ["band", "bh"], hot_bucket_cap,
+        warn_op="lsh_candidate_pairs" if warn_hot_buckets else None,
     )
     # attach signatures once per deduped pair to estimate jaccard
     sa = sig_df.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
@@ -385,7 +390,8 @@ def dedup_minhash(
         else minhash_signatures(df, id_col, text_col, num_hashes, shingle, mode)
     )
     pairs = lsh_candidate_pairs(
-        sig, id_col, bands, min_est_jaccard=threshold, num_hashes=num_hashes
+        sig, id_col, bands, min_est_jaccard=threshold, num_hashes=num_hashes,
+        warn_hot_buckets=False,
     )
     comp = connected_components(pairs, "id_a", "id_b")
     # rows whose id maps to a component keep only the representative
@@ -513,33 +519,38 @@ def simhash_near_duplicates(
 
 
 # ------------------------------------------------- connected components
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): for each node u, every strictly-larger
-    neighbor is re-pointed at min(N(u) + {u})."""
+def _neighbourhoods(e: DataFrame) -> DataFrame:
+    """Both directions of every edge, each row carrying its source's
+    neighbourhood minimum and maximum (``_mn``, ``_mx``) — one window
+    over the source, the aggregate both the large-star step and the
+    star-forest test read."""
     sym = e.unionAll(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    mins = sym.groupBy("s").agg(F.min("d").alias("_mn"))
-    mins = mins.select("s", F.least("s", "_mn").alias("_m"))
-    return (
-        sym.join(mins, "s")
-        .where(F.col("d") > F.col("s"))
-        .select(F.col("d").alias("s"), F.col("_m").alias("d"))
-        .distinct()
+    w = Window.partitionBy("s")
+    return sym.select(
+        "s", "d", F.min("d").over(w).alias("_mn"), F.max("d").over(w).alias("_mx")
+    )
+
+
+def _large_star(nb: DataFrame) -> DataFrame:
+    """Large-star round (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") over ``_neighbourhoods`` rows: for each node
+    u, every strictly-larger neighbor is re-pointed at min(N(u) + {u}).
+    May repeat an edge; ``_small_star`` deduplicates."""
+    return nb.where(F.col("d") > F.col("s")).select(
+        F.col("d").alias("s"), F.least("s", "_mn").alias("d")
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
     """Small-star round: orient edges large->small; every smaller
-    neighbor (and u itself) is pointed at the minimum."""
+    neighbor (and u itself) is pointed at the minimum, taken with a
+    window over the large end.  Output edges point large->small."""
     directed = e.select(
         F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
     ).where(F.col("s") != F.col("d"))
-    mins = directed.groupBy("s").agg(F.min("d").alias("_m"))
-    moved = (
-        directed.join(mins, "s")
-        .select(F.col("d").alias("s"), F.col("_m").alias("d"))
-    )
-    selfe = mins.select("s", F.col("_m").alias("d"))
+    m = directed.withColumn("_m", F.min("d").over(Window.partitionBy("s")))
+    moved = m.select(F.col("d").alias("s"), F.col("_m").alias("d"))
+    selfe = m.select("s", F.col("_m").alias("d"))
     return moved.unionAll(selfe).where(F.col("s") != F.col("d")).distinct()
 
 
@@ -556,61 +567,46 @@ def connected_components(
     per round and silently splits chains longer than max_iter).
 
     Returns (vertex, component) where component = min vertex id in the
-    cluster.  Each round localCheckpoints to cut lineage (at cluster
-    scale swap for a reliable checkpoint dir).  If max_iter rounds pass
-    without a fixed point, raises (or warns, ``on_nonconverged="warn"``)
-    instead of silently returning split components.
+    cluster.  Stops after the first round whose output is a star
+    forest: then every vertex with a smaller neighbour has exactly one
+    neighbour, each component is one star around its minimum, and
+    min(N(u) + {u}) labels every vertex u.  One tiny agg action per
+    round tests that on the windowed neighbourhoods the next
+    large-star step would read, which each round localCheckpoints to
+    cut lineage (at cluster scale swap for a reliable checkpoint dir);
+    the answer is a projection of the last one.  If max_iter rounds
+    pass without a star forest, raises (or warns,
+    ``on_nonconverged="warn"``) instead of silently returning split
+    components.
     """
+    # undirected and deduplicated, so each neighbour appears once per
+    # source row below
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col(src) != F.col(dst))
-        .distinct()
-        # the upstream DAG (MinHash/LSH) must not re-run per round;
-        # lazy — round 1's signature agg is the materializing action
-        .localCheckpoint(eager=False)
-    )
-    all_vertices = (
-        # lazy on purpose: read once by the final join, and it derives
-        # from the checkpointed edge set — an eager checkpoint here
-        # would only add a job
-        e.select(F.col("s").alias("vertex"))
-        .unionAll(e.select(F.col("d").alias("vertex")))
+        edges.select(
+            F.greatest(src, dst).alias("s"), F.least(src, dst).alias("d")
+        )
+        .where(F.col("s") != F.col("d"))
         .distinct()
     )
-    prev_sig = None
-    done = False
+    nb = _neighbourhoods(e)
+    # a vertex breaks the star shape iff it has a smaller neighbour and
+    # a second, distinct neighbour
+    bad = (F.col("_mn") < F.col("s")) & (F.col("_mn") != F.col("_mx"))
     for _ in range(max_iter):
-        # lazy checkpoint: the signature agg below materializes it —
-        # one action per round instead of checkpoint-job + agg-job
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # fixed point iff the edge multiset is unchanged: compare
-        # (count, order-invariant hash-sum) — one tiny agg action/round
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: ANSI-safe (a long sum of 64-bit hashes overflows)
-            F.sum(F.xxhash64("s", "d").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        sig = (row["n"], row["h"])
-        if sig == prev_sig:
-            done = True
+        # lazy checkpoint: the star test below materializes it — the
+        # upstream DAG (MinHash/LSH, earlier rounds) never re-runs
+        nb = _neighbourhoods(_small_star(_large_star(nb))).localCheckpoint(eager=False)
+        if nb.agg(F.count(F.when(bad, 1))).first()[0] == 0:
             break
-        prev_sig = sig
-    if not done:
+    else:
         msg = f"connected_components did not converge in {max_iter} rounds"
-        if on_nonconverged == "warn":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning)
-        else:
+        if on_nonconverged != "warn":
             raise RuntimeError(msg)
-    # at the fixed point every edge is (member -> root); roots map to
-    # themselves.  min-aggregate defensively: a warn-mode non-fixed-point
-    # edge set may still hold several candidate roots per vertex, and
-    # duplicate label rows would fan out every consumer's join
-    labels = (
-        e.groupBy(F.col("s").alias("vertex"))
-        .agg(F.min("d").alias("component"))
-    )
-    return all_vertices.join(labels, "vertex", "left").select(
-        "vertex", F.coalesce("component", "vertex").alias("component")
+        import warnings
+
+        warnings.warn(msg, RuntimeWarning)
+    # one row per vertex: its largest neighbour's row (edges are
+    # distinct, so that row is unique)
+    return nb.where(F.col("d") == F.col("_mx")).select(
+        F.col("s").alias("vertex"), F.least("s", "_mn").alias("component")
     )

@@ -1,12 +1,13 @@
 """Approximate frequency / heavy-hitter queries via count-min sketch.
 
 Answers ``SELECT v, COUNT(*) FROM t GROUP BY v ORDER BY 2 DESC LIMIT k``
-over high-cardinality keys without an exact global group-by:
+over high-cardinality keys without an exact global group-by.  Top-k's
+mergeable state per (partition x group) is a CMS plus candidates:
 
-1. map-side: per-partition CMS partials (mergeable) AND a per-partition
-   Misra-Gries summary of C counters as the candidate source.  The MG
-   guarantee (mergeable-summaries, Agarwal et al. 2013): a summary of
-   C counters over N_p rows undercounts any value by at most
+1. map-side, one fused pass per partition builds the CMS counters AND
+   a Misra-Gries summary of C counters as the candidate source.  The
+   MG guarantee (mergeable-summaries, Agarwal et al. 2013): a summary
+   of C counters over N_p rows undercounts any value by at most
    N_p/(C+1), so every value with true partition frequency
    > N_p/(C+1) survives — hence every value with GLOBAL frequency
    > N/(C+1) survives in at least one partition's summary (it must
@@ -14,17 +15,22 @@ over high-cardinality keys without an exact global group-by:
    top-k is recovered whenever the k-th heavy hitter holds > 1/(4k+1)
    of the mass; below that no candidate-based scheme distinguishes
    heavy from noise anyway.  Per-partition memory is O(C), never the
-   distinct-value count.
-2. tree-merge the CMS states;
-3. score the (few) candidates against the merged CMS and keep k
-   (CMS estimates are one-sided: overestimate <= eps*N w.p. 1-delta).
+   distinct-value count.  The survivors' (value, hash) pairs ride in
+   the state next to the counters.
+2. the tree merge adds the counters and unions the candidates
+   (deduplicated by hash);
+3. its last round scores each group's candidates against the merged
+   CMS and keeps k (CMS estimates are one-sided: overestimate
+   <= eps*N w.p. 1-delta).
 
-At 10^12 rows nothing but sketch states and <= partitions*C candidate
-rows ever shuffles.
+At 10^12 rows nothing but sketch states — counters plus <= C
+candidates per (partition x group) — ever shuffles.
 """
 
 from __future__ import annotations
 
+import struct
+from dataclasses import dataclass
 from typing import Sequence
 
 import numpy as np
@@ -34,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sketches.cms import CmsSketch
-from .approx_agg import GROUP_ALL, build_partials, tree_merge
+from .approx_agg import GROUP_ALL, Finisher, build_partials, factorize_keys, tree_merge
 
 
 def cms_sketch_table(
@@ -49,6 +55,48 @@ def cms_sketch_table(
     return tree_merge(partials, sk, group_by)
 
 
+@dataclass(frozen=True)
+class CmsCandidates:
+    """Top-k's mergeable state: ``(counters, hashes, values)`` — CMS
+    counters plus candidate values and their int64 hashes.  Merge adds
+    the counters and unions the candidates, keeping the first of each
+    hash; the hashes travel in the state's bytes, never through a
+    nullable (float-converted) pandas column."""
+
+    cms: CmsSketch
+
+    def merge(self, s1: tuple, s2: tuple) -> tuple:
+        return self.merge_many([s1, s2])
+
+    def merge_many(self, states: list) -> tuple:
+        hashes = np.concatenate([st[1] for st in states])
+        values = np.concatenate([st[2] for st in states])
+        _, first = np.unique(hashes, return_index=True)
+        first.sort()
+        return self.cms.merge_many([st[0] for st in states]), hashes[first], values[first]
+
+    def to_bytes(self, state: tuple) -> bytes:
+        counters, hashes, values = state
+        cms = self.cms.to_bytes(counters)
+        enc = [v.encode() for v in values]
+        lens = np.array([len(b) for b in enc], dtype=np.int64)
+        return (
+            struct.pack("<qq", len(cms), len(hashes))
+            + cms + hashes.tobytes() + lens.tobytes() + b"".join(enc)
+        )
+
+    def from_bytes(self, data: bytes) -> tuple:
+        n_cms, n = struct.unpack_from("<qq", data)
+        off = 16 + n_cms
+        counters = self.cms.from_bytes(data[16:off])
+        hashes = np.frombuffer(data, dtype=np.int64, count=n, offset=off).copy()
+        lens = np.frombuffer(data, dtype=np.int64, count=n, offset=off + 8 * n)
+        ends = off + 16 * n + np.cumsum(lens)
+        values = np.empty(n, dtype=object)
+        values[:] = [data[e - ln : e].decode() for e, ln in zip(ends.tolist(), lens.tolist())]
+        return counters, hashes, values
+
+
 def _fused_partials(
     df: DataFrame,
     col: str,
@@ -56,16 +104,13 @@ def _fused_partials(
     sk: CmsSketch,
     per_part: int,
 ) -> DataFrame:
-    """ONE pass over the input producing BOTH the per-(partition x
-    group) CMS partial states and the Misra-Gries candidate summaries
-    (two separate scans would read the whole input twice for one
-    query — at 100 TB, the dominant cost).  Output rows
-    are tagged by kind: state rows carry (group cols, state, part_id);
-    candidate rows carry (group cols, _value, _vh, _lcount); the other
-    columns are NULL.  Per-partition memory stays O(groups x CMS size
-    + groups x C counters) exactly as before."""
-    import pandas as pd  # noqa: F811 (local alias for closure pickling)
-
+    """ONE pass over the input producing one ``CmsCandidates`` state per
+    (partition x group): the CMS partial plus the partition's
+    Misra-Gries survivors (two separate scans would read the whole
+    input twice for one query — at 100 TB, the dominant cost).  Rows
+    are (group cols, state, part_id), the ``build_partials`` shape
+    ``tree_merge`` reads.  Per-partition memory stays O(groups x CMS
+    size + groups x C counters)."""
     gcols = list(group_by)
     cap = per_part * 4
     sel = gcols + [
@@ -73,7 +118,6 @@ def _fused_partials(
         F.xxhash64(F.col(col)).alias("_vh"),
     ]
     prepared = df.where(F.col(col).isNotNull()).select(*sel)
-    gnames = gcols if gcols else [GROUP_ALL]
     gfields = (
         [prepared.schema[g] for g in gcols]
         if gcols
@@ -84,12 +128,10 @@ def _fused_partials(
         + [
             T.StructField("state", T.BinaryType()),
             T.StructField("part_id", T.IntegerType()),
-            T.StructField("_value", T.StringType()),
-            T.StructField("_vh", T.LongType()),
-            T.StructField("_lcount", T.LongType()),
         ]
     )
     keycols = gcols + ["_value"]
+    state_sk = CmsCandidates(sk)
 
     def _mg_trim(acc: pd.DataFrame) -> pd.DataFrame:
         """Keep <= cap counters per group by the MG merge rule
@@ -114,25 +156,31 @@ def _fused_partials(
         acc = acc.assign(_lcount=acc["_lcount"] - thr)
         return acc[acc["_lcount"] > 0]
 
+    def _groups(pdf: pd.DataFrame):
+        """(group key, row positions) per group of ``pdf``.  A NULL key
+        comes out as None: pandas hands it back as None or as a fresh
+        NaN, and NaN keys never match in a dict."""
+        codes, uniq = factorize_keys(pdf, gcols)
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
+        for g, key in enumerate(uniq.itertuples(index=False, name=None)):
+            key = tuple(None if v is None or v != v else v for v in key)
+            yield key, order[bounds[g] : bounds[g + 1]]
+
     def fused(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        states: dict[tuple, "np.ndarray"] = {}
+        states: dict[tuple, np.ndarray] = {}
         acc: pd.DataFrame | None = None
         for pdf in batches:
             if not len(pdf):
                 continue
             vh = pdf["_vh"].to_numpy()
-            if gcols:
-                grouped = pdf.groupby(gcols, sort=False, dropna=False).indices
-            else:
-                grouped = {(0,): np.arange(len(pdf))}
-            for key, idx in grouped.items():
-                kk = key if isinstance(key, tuple) else (key,)
-                st = states.get(kk)
+            for key, idx in _groups(pdf):
+                st = states.get(key)
                 if st is None:
-                    st = states[kk] = sk.empty()
+                    st = states[key] = sk.empty()
                 sk.update(st, vh[idx])
             g = (
                 pdf.groupby(keycols if gcols else ["_value"], sort=False, dropna=False)
@@ -149,27 +197,41 @@ def _fused_partials(
                     .reset_index()
                 )
             acc = _mg_trim(acc)
-        cols = [f.name for f in out_schema.fields]
+        cands: dict[tuple, tuple] = {}
+        if acc is not None and len(acc):
+            hashes = acc["_vh"].to_numpy(dtype=np.int64)
+            values = acc["_value"].to_numpy(dtype=object)
+            cands = {key: (hashes[idx], values[idx]) for key, idx in _groups(acc)}
+        none = (np.empty(0, dtype=np.int64), np.empty(0, dtype=object))
         rows = [
-            list(kk) + [sk.to_bytes(st), pid, None, None, None]
+            list(kk) + [state_sk.to_bytes((st, *cands.get(kk, none))), pid]
             for kk, st in states.items()
         ]
-        out = pd.DataFrame(rows, columns=cols)
-        if acc is not None and len(acc):
-            cand = pd.DataFrame(
-                {
-                    **({g: acc[g] for g in gcols} if gcols else {GROUP_ALL: 0}),
-                    "state": None,
-                    "part_id": pid,
-                    "_value": acc["_value"],
-                    "_vh": acc["_vh"],
-                    "_lcount": acc["_lcount"],
-                }
-            )
-            out = pd.concat([out, cand], ignore_index=True)
-        yield out
+        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return prepared.mapInPandas(fused, out_schema)
+
+
+def _top_k_finisher(sk: CmsSketch, k: int, out_value: str, out_count: str) -> Finisher:
+    """``tree_merge`` finisher: each group's candidates scored against
+    its merged CMS, top k by count desc, then value asc."""
+    fields = [
+        T.StructField(out_value, T.StringType()),
+        T.StructField(out_count, T.LongType()),
+    ]
+
+    def fn(keys: pd.DataFrame, states: list) -> pd.DataFrame:
+        tops = [
+            pd.DataFrame({out_value: values, out_count: sk.query(counters, hashes)})
+            .sort_values([out_count, out_value], ascending=[False, True])
+            .head(k)
+            for counters, hashes, values in states
+        ]
+        rows = keys.loc[keys.index.repeat([len(t) for t in tops])].reset_index(drop=True)
+        body = pd.concat(tops, ignore_index=True)
+        return pd.concat([rows, body], axis=1)
+
+    return fields, fn
 
 
 def approx_top_k(
@@ -184,61 +246,14 @@ def approx_top_k(
 ) -> DataFrame:
     """Heavy hitters with CMS-estimated counts (overestimate <= eps*N w.p. 1-delta).
 
-    One fused pass builds the CMS partials and the Misra-Gries
-    candidates together (``_fused_partials``); the combined partial
-    frame — KBs per (partition x group) — is localCheckpointed so the
-    state and candidate branches read it without re-scanning the
-    source."""
+    Two Python stages: one fused pass builds a ``CmsCandidates`` state
+    per (partition x group) (``_fused_partials``), and the tree merge's
+    last round scores the merged candidates (``_top_k_finisher``).  A
+    group whose key is NULL is a group like any other."""
     sk = CmsSketch(eps=eps, delta=delta)
-    gcols = list(group_by)
-    gnames = gcols if gcols else [GROUP_ALL]
-    partials = _fused_partials(df, col, gcols, sk, per_part=k).localCheckpoint()
-    merged = tree_merge(
-        partials.where(F.col("state").isNotNull()).select(
-            *gnames, "state", "part_id"
-        ),
-        sk,
-        group_by,
-    )
-    cand = (
-        partials.where(F.col("_value").isNotNull())
-        .groupBy(*gnames, "_value", "_vh")
-        .agg(F.sum("_lcount").alias("_lb"))
-    )
-    # ONE row per group on each side of the join: candidates fold into
-    # an array first, so the ~MB CMS state is never replicated onto (and
-    # shuffled with) every candidate row
-    cand_agg = cand.groupBy(*gnames).agg(
-        F.collect_list(F.struct("_value", "_vh")).alias("_cands")
-    )
-    joined = merged.join(cand_agg, on=gnames, how="inner")
-
-    out_fields = [merged.schema[g] for g in gcols] + [
-        T.StructField(out_value, T.StringType()),
-        T.StructField(out_count, T.LongType()),
-    ]
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for _, row in pdf.iterrows():
-            state = sk.from_bytes(row["state"])
-            vals = np.array([c["_value"] for c in row["_cands"]], dtype=object)
-            vhs = np.array([c["_vh"] for c in row["_cands"]], dtype=np.int64)
-            est = sk.query(state, vhs)
-            # deterministic top-k: count desc, then value asc tie-break
-            out = (
-                pd.DataFrame({out_value: vals, out_count: est})
-                .sort_values([out_count, out_value], ascending=[False, True])
-                .head(k)
-            )
-            for g in gcols:
-                out.insert(0, g, row[g])
-            outs.append(out[gcols + [out_value, out_count]])
-        return pd.concat(outs) if outs else pd.DataFrame(
-            columns=gcols + [out_value, out_count]
-        )
-
-    return joined.groupBy(*gnames).applyInPandas(score, T.StructType(out_fields))
+    partials = _fused_partials(df, col, group_by, sk, per_part=k)
+    finish = _top_k_finisher(sk, k, out_value, out_count)
+    return tree_merge(partials, CmsCandidates(sk), group_by, finish=finish)
 
 
 def approx_frequency(

@@ -16,7 +16,24 @@ from pyspark.sql import types as T
 
 from ..sketches.kll import KllSketch
 from ..sketches.tdigest import TDigestSketch
-from .approx_agg import GROUP_ALL, sketch_agg
+from . import approx_agg  # build_partials/tree_merge looked up at call time
+from .approx_agg import GROUP_ALL, Finisher, sketch_agg
+
+
+def _quantile_finisher(sketch, probs: list[float], out_col: str, keep_state: bool = False) -> Finisher:
+    """``tree_merge`` finisher: each group's quantiles as an
+    array<double> ``out_col`` (plus its merged ``state`` bytes when
+    ``keep_state``, for a caller that merges more partials in later)."""
+    fields = [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
+    if keep_state:
+        fields.insert(0, T.StructField("state", T.BinaryType()))
+
+    def fn(keys: pd.DataFrame, states: list) -> pd.DataFrame:
+        cols = {"state": [sketch.to_bytes(st) for st in states]} if keep_state else {}
+        cols[out_col] = [list(sketch.quantiles(st, probs)) for st in states]
+        return keys.assign(**cols)
+
+    return fields, fn
 
 
 def _make_sketch(method: str, k: int, compression: float):
@@ -41,18 +58,13 @@ def approx_quantiles(
     """Grouped approximate quantiles -> array<double> column.
 
     Plan: numeric cast JVM-side -> map-side partial KLL/t-digest per
-    (partition x group) -> logarithmic tree merge -> interpolation.
+    (partition x group) -> logarithmic tree merge whose last round
+    also interpolates.
     """
     sketch = _make_sketch(method, k, compression)
     probs = [float(p) for p in probabilities]
-    merged = sketch_agg(df, sketch, col, group_by, input_kind="double", fanin=fanin)
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _q(states: pd.Series) -> pd.Series:
-        return pd.Series([list(sketch.quantiles(sketch.from_bytes(b), probs)) for b in states])
-
-    out = merged.withColumn(out_col, _q(F.col("state"))).drop("state")
-    return out.drop(GROUP_ALL) if not group_by else out
+    finish = _quantile_finisher(sketch, probs, out_col)
+    return sketch_agg(df, sketch, col, group_by, input_kind="double", fanin=fanin, finish=finish)
 
 
 def approx_quantiles_wide(
@@ -114,13 +126,14 @@ def progressive_quantiles(
     sketch is biased — those raise.
 
     Scale shape: each step scans ONLY the new blocks
-    (partition-pruned), the accumulated state is one KB-sized row per
-    group (localCheckpointed so prior blocks are never rescanned),
-    and the cross-step merge is a 2-way tree_merge round.
+    (partition-pruned) and merges their partials with the accumulated
+    per-group states in ONE merge round, which also interpolates; the
+    step's frame — one KB-sized state plus its quantiles per group —
+    is localCheckpointed, so prior blocks are never rescanned and the
+    step's answer is a plain read of that checkpoint.
     """
     from ..sampling.progressive import ProgressiveResult, _schedule
     from ..sampling.scramble import BLOCK_COL
-    from .approx_agg import sketch_agg, tree_merge
 
     if meta.method != "uniform":
         raise ValueError(
@@ -134,29 +147,30 @@ def progressive_quantiles(
         names = [f"q{round(p * 100):02d}" for p in probs]
     if len(names) != len(probs):
         raise ValueError("names must match probabilities")
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _q(states: pd.Series) -> pd.Series:
-        return pd.Series(
-            [list(sketch.quantiles(sketch.from_bytes(b), probs)) for b in states]
-        )
+    gcols = list(group_by)
+    finish = _quantile_finisher(sketch, probs, "_qarr", keep_state=True)
+    acc_keys = gcols or [F.lit(0).alias(GROUP_ALL)]
 
     acc: DataFrame | None = None
     for it, [(lo, hi)] in enumerate(_schedule([meta.nblocks], schedule)):
         batch = scramble.where(F.col(BLOCK_COL).between(lo, hi))
-        span = sketch_agg(batch, sketch, col, group_by, input_kind="double")
-        if acc is None:
-            merged = span
-        else:
-            both = acc.withColumn("part_id", F.lit(0)).unionByName(
-                span.withColumn("part_id", F.lit(1))
+        parts = approx_agg.build_partials(batch, sketch, col, gcols, input_kind="double").select(
+            *(gcols or [GROUP_ALL]), "state", "part_id"
+        )
+        if acc is not None:
+            # the accumulated states go LAST: a round folds each group's
+            # states in arrival order, so the span's partials fold
+            # together first and then merge with the accumulated state.
+            # KLL compacts as it merges, so fold order decides its bits;
+            # this order gives the bits of merging the span's own merged
+            # state into the accumulated one (KLL merge is commutative)
+            parts = parts.unionByName(
+                acc.select(*acc_keys, "state", F.lit(-1).alias("part_id"))
             )
-            merged = tree_merge(both, sketch, group_by, n_partials_hint=2)
         # materialize: per-group KB states only; prior blocks are done
-        acc = merged.localCheckpoint(eager=True)
-        out = acc.withColumn("_qarr", _q(F.col("state"))).select(
-            *list(group_by),
-            *[F.col("_qarr")[i].alias(n) for i, n in enumerate(names)],
+        acc = approx_agg.tree_merge(parts, sketch, gcols, finish=finish).localCheckpoint(eager=True)
+        out = acc.select(
+            *gcols, *[F.col("_qarr")[i].alias(n) for i, n in enumerate(names)]
         )
         cov = meta.coverage(hi, 0)
         yield ProgressiveResult(
