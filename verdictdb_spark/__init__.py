@@ -62,4 +62,8 @@ from .streaming import ResultStream, incremental_sketch_sink, read_sketch_state 
 from .metastore import MetaStore  # noqa: F401
 from .api import VerdictContext, approx_sql  # noqa: F401
 
+from .session import freeze_worker_zip_caches as _freeze_worker_zip_caches
+
 __version__ = "0.1.0"
+
+_freeze_worker_zip_caches()  # a no-op on the driver

@@ -424,15 +424,6 @@ class VerdictContext:
             transform=transform, early_stop=early_stop, **kwargs,
         )
 
-    def approx_df(self, *args, **kwargs) -> DataFrame:
-        """``approx`` with the estimates returned as a Spark DataFrame
-        (kept distributed when the Spark estimate engine produced
-        one — no driver round trip)."""
-        res = self.approx(*args, **kwargs)
-        if res.estimates_sdf is not None:
-            return res.estimates_sdf
-        return self.spark.createDataFrame(res.estimates)
-
     # ------------------------------------------------------------- sql
     def sql(
         self, query: str, early_stop: bool = True, with_errors: bool = False

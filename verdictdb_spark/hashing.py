@@ -80,23 +80,6 @@ def block_col(nblocks: int, *cols: str | Column) -> Column:
 # numpy-side hash families (derive k hashes from one 64-bit base hash)
 # ---------------------------------------------------------------------------
 
-def multiply_shift(h: np.ndarray, a: np.uint64, bits: int) -> np.ndarray:
-    """(a * h) >> (64 - bits) — universal-ish hash onto [0, 2^bits)."""
-    with np.errstate(over="ignore"):
-        return (h.astype(np.uint64, copy=False) * a) >> np.uint64(64 - bits)
-
-
-def hash_family(h: np.ndarray, n_hashes: int, bits: int, seed: int) -> np.ndarray:
-    """Return (n_hashes, len(h)) uint64 array of derived hashes on [0, 2^bits)."""
-    a = _odd_multipliers(n_hashes, seed)
-    out = np.empty((n_hashes, h.shape[0]), dtype=np.uint64)
-    hh = h.astype(np.uint64, copy=False)
-    with np.errstate(over="ignore"):
-        for i in range(n_hashes):
-            out[i] = (hh * a[i]) >> np.uint64(64 - bits)
-    return out
-
-
 def mod_index_family(hashes: np.ndarray, n: int, modulo: int, seed: int) -> np.ndarray:
     """(n, len(h)) int64 indices on [0, modulo) via multiply-shift —
     the ONE definition of the index derivation shared by the CMS and

@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import sys
 import tempfile
+import time
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +22,13 @@ def ship_package(spark: SparkSession) -> str:
     package must travel with the job.  Zips the package and
     ``addPyFile``s it — the local-mode equivalent of
     ``spark-submit --py-files verdictdb_spark.zip``.
+
+    Spark copies the zip into the executor's ``userFiles-*`` directory
+    and never rewrites that copy, so a worker that imported the package
+    from it stops re-reading it, and the archives under ``SPARK_HOME``,
+    on every task's ``importlib.invalidate_caches()`` (a CPython 3.11
+    cost that gh-103200 makes lazy in 3.12; see
+    :func:`freeze_worker_zip_caches`).
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     # per-process zip name: concurrent drivers on one machine must not
@@ -28,14 +39,94 @@ def ship_package(spark: SparkSession) -> str:
     return zip_path
 
 
+class _FrozenZipImporter(zipimport.zipimporter):
+    """A ``zipimporter`` over an archive that cannot change while the
+    worker lives: ``invalidate_caches`` keeps the directory it read."""
+
+    def invalidate_caches(self):
+        pass
+
+
+# (pid, monotonic ns) of the freeze in this worker process
+_WORKER_FREEZE: tuple[int, int] | None = None
+
+
+def freeze_worker_zip_caches() -> None:
+    """Stop a Python worker re-reading immutable zip archives per task.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``pyspark/worker_util.py``, ``setup_spark_files``).  Under
+    CPython 3.11 each cached ``zipimporter`` then re-reads its whole
+    archive directory; a worker holds a dozen over ``pyspark.zip`` alone,
+    which costs 0.17-0.33 s a task on 4 busy cores (CPython 3.12, gh-103200, makes the
+    re-read lazy).  This freezes, once per worker process, the importers
+    over archives that cannot change while it lives: those under
+    ``realpath(SPARK_HOME)`` (``pyspark.zip``, py4j, the spark-core jar)
+    and the exact zip this package was imported from (the ``userFiles``
+    copy of :func:`ship_package`'s zip).  Importers created later over
+    those archives are frozen too.  ``FileFinder`` objects and importers
+    over any other archive (a later ``addPyFile``) keep their per-task
+    refresh, which is what the call is there for.  Runs when the package
+    is imported; does nothing on the driver.
+    """
+    global _WORKER_FREEZE
+    try:
+        from pyspark.core.files import SparkFiles
+    except ImportError:
+        return
+    if not SparkFiles._is_running_on_worker or _WORKER_FREEZE is not None:
+        return
+    spark_home = os.environ.get("SPARK_HOME")
+    home = os.path.join(os.path.realpath(spark_home), "") if spark_home else None
+    own = getattr(sys.modules[__package__].__spec__.loader, "archive", None)
+    own = os.path.realpath(own) if own else None
+
+    def frozen(archive: str) -> bool:
+        real = os.path.realpath(archive)
+        return real == own or bool(home and real.startswith(home))
+
+    for finder in list(sys.path_importer_cache.values()):
+        if type(finder) is zipimport.zipimporter and frozen(finder.archive):
+            finder.__class__ = _FrozenZipImporter
+
+    # a package first imported after this (pyspark.testing, a jar's
+    # google/) gets a new importer over a frozen archive: freeze it too
+    def path_hook(path: str) -> zipimport.zipimporter:
+        importer = zipimport.zipimporter(path)
+        if frozen(importer.archive):
+            importer.__class__ = _FrozenZipImporter
+        return importer
+
+    sys.path_hooks[:] = [
+        path_hook if h is zipimport.zipimporter else h for h in sys.path_hooks
+    ]
+    _WORKER_FREEZE = (os.getpid(), time.monotonic_ns())
+
+
+# Spark's LOCAL_N_REGEX / LOCAL_N_FAILURES_REGEX (SparkMasterRegex)
+_LOCAL_MASTER = re.compile(r"local\[(\d+|\*)(?:\s*,\s*\d+)?\]")
+
+
+def master_cores(master: str) -> int:
+    """Task slots of a Spark master: N for ``local[N]`` and
+    ``local[N,maxFailures]``, 1 for ``local``, and the CPUs this process
+    may run on for ``local[*]`` or any master it cannot read."""
+    master = master.strip()
+    if master == "local":
+        return 1
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m and m.group(1) != "*":
+        return int(m.group(1))
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app: str = "verdictdb-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    cores = master.split("[")[-1].rstrip("]") if "[" in master else "32"
-    n = 32 if cores == "*" else int(cores)
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    n = master_cores(master)
     b = (
         SparkSession.builder.appName(app)
         .master(master)

@@ -114,10 +114,6 @@ class HllSketch:
         np.maximum.at(flat, codes.astype(np.int64) * self.m + reg, rho)
         return flat.reshape(n_groups, self.m)
 
-    def merge_rows(self, mat: np.ndarray, rows: np.ndarray, other: np.ndarray) -> None:
-        """mat[rows] = max(mat[rows], other) — batch merge into a matrix."""
-        mat[rows] = np.maximum(mat[rows], other)
-
     def merge(self, s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
         return np.maximum(s1, s2)
 

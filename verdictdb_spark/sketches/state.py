@@ -49,10 +49,6 @@ def check_header(kind: str, data: bytes) -> bytes:
     return data[4:]
 
 
-class SketchError(ValueError):
-    pass
-
-
 def reduce_merge(sketch: Any, states: list) -> Any:
     """Left-fold merge; associativity makes the fold shape irrelevant."""
     if not states:
