@@ -217,3 +217,28 @@ def test_broken_scramble_is_not_an_exact_fallback(spark, tmp_path, orders, query
         c.sql(query)
     with pytest.raises(FileNotFoundError):
         list(c.stream(query))
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT sum(o_totalprice) AS s FROM orders",
+        "SELECT percentile(o_totalprice, 0.5) AS m FROM orders",
+    ],
+    ids=["aggregate", "percentile"],
+)
+def test_corrupt_scramble_meta_is_not_an_exact_fallback(spark, tmp_path, orders, query):
+    # a truncated meta file is an error naming the file on every route,
+    # never a silent exact answer
+    from verdictdb_spark.sampling.scramble import ScrambleMetaError
+
+    path = tmp_path / "truncated"
+    path.mkdir()
+    (path / "_verdictdb_meta.json").write_text('{"method": "unif')
+    c = VerdictContext(spark, str(tmp_path / "root"))
+    c.metastore.register("scramble", "orders", str(path), "{}")
+    for run in (lambda: c.sql(query), lambda: list(c.stream(query))):
+        with pytest.raises(ScrambleMetaError) as err:
+            run()
+        assert not isinstance(err.value, ValueError)
+        assert str(path / "_verdictdb_meta.json") in str(err.value)

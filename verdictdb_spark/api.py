@@ -56,12 +56,13 @@ from .sampling.scramble import (
 from .sqlparse import (
     ParsedSelect,
     Unsupported,
-    _clauses,
-    _mask,
-    _split_top_level,
-    from_subquery_spans,
+    derived_tables,
     inline_ctes,
+    order_limit,
     parse_select,
+    reassemble,
+    split_union,
+    where_extent,
 )
 
 # ---- scramble DDL statements (reference grammar VerdictSQLParser.g4:
@@ -158,31 +159,6 @@ _ROUTES = (
 )
 
 
-def _derived_tables(query: str) -> tuple[dict, list] | None:
-    """``(clauses, [(start, end, inner SELECT)])`` of a SELECT's FROM
-    derived tables, or None when it has none (or its text does not
-    scan — exact Spark SQL reports that)."""
-    if not re.match(r"^\s*select\b", query, re.IGNORECASE):
-        return None
-    try:
-        cl = _clauses(query)
-        spans = from_subquery_spans(cl["FROM"])  # _clauses requires FROM
-    except Unsupported:
-        return None
-    return (cl, spans) if spans else None
-
-
-def _reassemble(cl: dict, new_from: str) -> str:
-    """Rebuild a SELECT statement from its `_clauses` map with a
-    rewritten FROM — faithful because `_clauses` enforces canonical
-    clause order."""
-    parts = ["SELECT " + cl["SELECT"], "FROM " + new_from]
-    for kw in ("WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT"):
-        if kw in cl:
-            parts.append(kw + " " + cl[kw])
-    return " ".join(parts)
-
-
 def _parse_create_options(rest: str) -> dict:
     """WHERE / METHOD / HASHCOLUMN|ON / SIZE|RATIO / BLOCKSIZE options
     of a CREATE SCRAMBLE statement (any order after FROM).
@@ -192,19 +168,11 @@ def _parse_create_options(rest: str) -> dict:
     inside a literal (``WHERE note = 'on time'``) or inside parens
     (``WHERE (size > 10)``) never truncates the predicate; leftover
     unrecognized text raises instead of being silently dropped."""
-    from .sqlparse import _mask
-
     opts: dict = {}
-    masked = _mask(rest, keep_depth0_only=True)
-    wm = re.search(r"\bWHERE\b", masked, re.IGNORECASE)
-    if wm:
-        after = masked[wm.end():]
-        em = re.search(rf"\b(?:{_OPT_KEYWORDS})\b", after, re.IGNORECASE)
-        wend = wm.end() + (em.start() if em else len(after))
-        opts["where"] = rest[wm.end():wend].strip()
-        remainder = rest[: wm.start()] + " " + rest[wend:]
-    else:
-        remainder = rest
+    remainder = rest
+    found = where_extent(rest, _OPT_KEYWORDS)
+    if found is not None:
+        opts["where"], remainder = found
 
     def take(pattern: str, cast=None):
         nonlocal remainder
@@ -599,45 +567,10 @@ class VerdictContext:
         widen to double, matching SQL union type promotion.  A side
         Spark or the engine rejects raises: the route walk then runs
         the whole statement exactly."""
-        masked0 = _mask(query)
-        if re.search(r"\b(EXCEPT|INTERSECT)\b", masked0, re.IGNORECASE):
+        split = split_union(query)
+        if split is None:
             return None
-        seps = list(re.finditer(r"\bUNION(\s+ALL)?\b", masked0, re.IGNORECASE))
-        if not seps or any(m.group(1) is None for m in seps):
-            return None  # a plain UNION breaks left-assoc flattening
-        parts, last = [], 0
-        for m in seps:
-            parts.append(query[last : m.start()].strip())
-            last = m.end()
-        parts.append(query[last:].strip())
-        if any(not re.match(r"^\s*select\b", p, re.IGNORECASE) for p in parts):
-            return None  # parenthesized blocks etc.
-        # a trailing ORDER BY/LIMIT in the LAST block scopes to the
-        # whole union in SQL (a side can carry its own only inside
-        # parens, which this path rejects) — strip it here and apply
-        # it to the concatenated frame below
-        tail_order: str | None = None
-        tail_limit: int | None = None
-        mo = re.search(r"\b(ORDER\s+BY|LIMIT)\b", _mask(parts[-1]), re.IGNORECASE)
-        if mo:
-            tail = parts[-1][mo.start() :]
-            mt = re.match(
-                r"^(?:ORDER\s+BY\s+(?P<ob>[\s\S]+?))?\s*"
-                r"(?:\bLIMIT\s+(?P<lim>\d+))?\s*;?\s*$",
-                tail,
-                re.IGNORECASE,
-            )
-            if not mt or (mt.group("ob") is None and mt.group("lim") is None):
-                return None  # unparseable tail — exact fallback
-            parts[-1] = parts[-1][: mo.start()].rstrip()
-            tail_order = mt.group("ob")
-            tail_limit = int(mt.group("lim")) if mt.group("lim") else None
-        for p in parts:
-            # ORDER BY/LIMIT on a NON-last side is a Spark parse error
-            # — the exact fallback is the honest answer (never
-            # fabricate a result for SQL Spark itself would reject)
-            if re.search(r"\b(ORDER\s+BY|LIMIT)\b", _mask(p), re.IGNORECASE):
-                return None
+        parts, tail = split
         # arity gate BEFORE running anything: ask Catalyst (analysis
         # only, no job) what each side's true column count is.
         # Comparing the executed frames would be fooled by
@@ -681,27 +614,19 @@ class VerdictContext:
                 ]
             )
             out = f if out is None else out.union(f)
-        if tail_order is not None:
-            items = []
-            for piece in _split_top_level(tail_order):
-                m2 = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
-                desc = bool(m2 and m2.group(1).upper() == "DESC")
-                expr = (piece[: m2.start()] if m2 else piece).strip()
-                if re.fullmatch(r"\d+", expr):
-                    idx = int(expr) - 1
-                    if not (0 <= idx < ncols):
-                        return None
-                    expr = base.columns[idx]
-                if expr not in base.columns:
-                    # union-scoped ORDER BY may only reference
-                    # output columns — anything else, exact fallback
-                    return None
-                items.append(
-                    F.col(expr).desc() if desc else F.col(expr).asc()
-                )
-            out = out.orderBy(*items)
-        if tail_limit is not None:
-            out = out.limit(tail_limit)
+        # the union-scoped ORDER BY may only reference output columns
+        try:
+            order_by, limit = order_limit(tail, base.columns)
+        except Unsupported:
+            return None
+        if any(o.expr not in base.columns for o in order_by):
+            return None
+        if order_by:
+            out = out.orderBy(
+                *[F.col(o.expr).desc() if o.desc else F.col(o.expr).asc() for o in order_by]
+            )
+        if limit is not None:
+            out = out.limit(limit)
         return out
 
     # ----------------------------------------- nested aggregation
@@ -728,7 +653,7 @@ class VerdictContext:
         error here (the reference's dependent nodes likewise surface
         only the final point estimate).  Returns None when nothing is
         substitutable."""
-        found = _derived_tables(query)
+        found = derived_tables(query)
         if found is None:
             return None
         cl, spans = found
@@ -762,7 +687,7 @@ class VerdictContext:
         query class.  Applies to a single FROM derived table that plans
         over a scramble; the inner is planned once and streamed through
         :meth:`_stream_plan`."""
-        found = _derived_tables(query)
+        found = derived_tables(query)
         if found is None or len(found[1]) != 1:
             return None
         cl, [(s, e, inner)] = found
@@ -809,7 +734,7 @@ class VerdictContext:
                 views.append(name)
                 pieces += [from_text[last:s], name]
                 last = e + 1
-            out = self.spark.sql(_reassemble(cl, "".join(pieces) + from_text[last:]))
+            out = self.spark.sql(reassemble(cl, "".join(pieces) + from_text[last:]))
             # force analysis NOW: classic spark.sql analyzes eagerly
             # anyway, but Spark Connect defers — without this probe a
             # Catalyst-rejected outer would surface at the caller's

@@ -463,11 +463,22 @@ def invalidate_scramble_cache(path: str | None = None) -> None:
         del _LOAD_CACHE[k]
 
 
+class ScrambleMetaError(RuntimeError):
+    """A scramble's meta file does not read as a ``ScrambleMeta``.  Not a
+    ``ValueError``: the front door answers a damaged scramble with this
+    error, never with a silent exact fallback."""
+
+
 def load_scramble(spark: SparkSession, path: str) -> tuple[DataFrame, ScrambleMeta]:
     key = (spark.sparkContext.applicationId, os.path.abspath(path))
     hit = _LOAD_CACHE.get(key)
     if hit is not None:
         return hit
-    with open(os.path.join(path, "_verdictdb_meta.json")) as f:
-        meta = ScrambleMeta.from_json(f.read())
+    meta_path = os.path.join(path, "_verdictdb_meta.json")
+    with open(meta_path) as f:
+        text = f.read()
+    try:
+        meta = ScrambleMeta.from_json(text)
+    except (ValueError, KeyError, TypeError, AttributeError) as e:
+        raise ScrambleMetaError(f"corrupt scramble meta {meta_path}: {e!r}") from e
     return _cache_put(_LOAD_CACHE, key, (spark.read.parquet(path), meta))

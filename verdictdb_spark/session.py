@@ -2,12 +2,13 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
-import shutil
 import sys
 import tempfile
 import time
+import zipfile
 import zipimport
 
 from pyspark.sql import SparkSession
@@ -31,10 +32,35 @@ def ship_package(spark: SparkSession) -> str:
     :func:`freeze_worker_zip_caches`).
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # per-process zip name: concurrent drivers on one machine must not
-    # rewrite a zip another session's executors are still fetching
-    out = os.path.join(tempfile.gettempdir(), f"verdictdb_spark_pkg_{os.getpid()}")
-    zip_path = shutil.make_archive(out, "zip", os.path.dirname(pkg_dir), "verdictdb_spark")
+    root = os.path.dirname(pkg_dir)
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(pkg_dir)
+        if "__pycache__" not in d
+        for f in names
+        if not f.endswith(".pyc")
+    )
+    digest = hashlib.sha256()
+    for rel in files:
+        with open(os.path.join(root, rel), "rb") as f:
+            digest.update(rel.encode() + b"\0" + f.read() + b"\0")
+    # named by content: every driver shipping this package version
+    # shares one zip, which is never rewritten once in place, so no
+    # session's executors can fetch a half-written file
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"verdictdb_spark_pkg_{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=os.path.dirname(zip_path))
+        try:
+            with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
+                for rel in files:
+                    z.write(os.path.join(root, rel), rel)
+            os.chmod(tmp, 0o644)  # mkstemp's 0600 would lock out other users
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     spark.sparkContext.addPyFile(zip_path)
     return zip_path
 

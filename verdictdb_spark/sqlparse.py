@@ -12,16 +12,27 @@ parser cannot shape is not an error: the caller falls back to exact
 ``spark.sql`` (the reference's pass-through contract,
 ``SelectQueryCoordinator.java:118-171``).
 
-No regexes over whole statements: a character scan masks string
-literals / quoted identifiers / parenthesized subexpressions so
+No regexes over whole statements: a character scan (``_mask``) blanks
+string literals / quoted identifiers / parenthesized subexpressions so
 top-level keywords (FROM, WHERE, GROUP BY, HAVING, ORDER BY, LIMIT,
-JOIN, ON, AND) are located structurally.  This is what fixes the
+JOIN, ON, AND, UNION) are located structurally.  This is what fixes the
 round-2 crash where a lazy regex swallowed ``ORDER BY`` into the
-GROUP BY list.
+GROUP BY list.  This module is the front door's only reader of SQL
+text, and each concept is read in one place:
+
+* the call locator, ``_calls``: name and span of every call to a named
+  function (aggregates, the variance family, percentiles);
+* the select-list reader, ``_select_items``: items, aliases,
+  qualifier-free expressions and GROUP BY ordinals;
+* the ORDER BY/LIMIT reader, ``order_limit``, for aggregate,
+  percentile and UNION ALL statements;
+* the FROM derived-table locator, ``from_subquery_spans``, for table
+  references and the nested route.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 
@@ -54,6 +65,9 @@ _TWO_ARG_STATS = {"covar_pop", "covar_samp", "corr"}
 class Unsupported(Exception):
     """Statement shape outside the rewritable surface — callers fall
     back to exact ``spark.sql`` (never user-visible)."""
+
+
+_SELECT_HEAD = re.compile(r"\s*select\b", re.IGNORECASE)
 
 
 # ------------------------------------------------------------- scanning
@@ -104,26 +118,66 @@ def _matching_paren(masked: str, open_idx: int) -> int:
     return -1
 
 
+@functools.lru_cache(maxsize=None)
+def _call_re(funcs: tuple[str, ...]) -> re.Pattern:
+    return re.compile(rf"\b({'|'.join(funcs)})\s*\(", re.IGNORECASE)
+
+
+def _calls(text: str, funcs: tuple[str, ...]) -> list[tuple[str, int, int, int]]:
+    """Every call in ``text`` to one of ``funcs``, outermost first and
+    non-overlapping: ``(lowercased name, name start, open paren, close
+    paren)``.  Located on the literal-masked text, so call text inside
+    a string is never seen and a ``)`` in a string never closes one."""
+    masked = _mask(text, keep_depth0_only=False)
+    out: list[tuple[str, int, int, int]] = []
+    pos = 0
+    for m in _call_re(funcs).finditer(masked):
+        if m.start() < pos:
+            continue  # nested inside the previous call
+        close = _matching_paren(masked, m.end() - 1)
+        if close < 0:
+            raise Unsupported(f"unbalanced call to {m.group(1)}")
+        out.append((m.group(1).lower(), m.start(), m.end() - 1, close))
+        pos = close + 1
+    return out
+
+
+def _whole_call(text: str, funcs: tuple[str, ...]) -> tuple[str, str] | None:
+    """``(name, argument text)`` when ``text`` is exactly one call to
+    one of ``funcs`` (``sum(x)``, not ``sum(x) + 1``); else None."""
+    calls = _calls(text, funcs)
+    if calls:
+        name, start, open_, close = calls[0]
+        if not text[:start].strip() and not text[close + 1 :].strip():
+            return name, text[open_ + 1 : close]
+    return None
+
+
+def _paren_groups(masked: str) -> list[tuple[int, int]]:
+    """``(open, close)`` of each top-level paren group of masked text —
+    parens survive masking at EVERY depth, so a nested subquery or
+    function call cannot confuse the balance."""
+    groups = []
+    i = masked.find("(")
+    while i >= 0:
+        close = _matching_paren(masked, i)
+        if close < 0:
+            raise Unsupported("unbalanced parentheses")
+        groups.append((i, close))
+        i = masked.find("(", close + 1)
+    return groups
+
+
 def from_subquery_spans(text: str) -> list[tuple[int, int, str]]:
     """Top-level ``(SELECT ...)`` groups in a FROM-clause text:
     ``[(open_idx, close_idx, inner_text), ...]``.  Depth is tracked on
     the literal-masked text so a ``)`` inside a string never closes a
     group; non-SELECT paren groups (join grouping) are skipped."""
-    masked = _mask(text, keep_depth0_only=False)
-    spans: list[tuple[int, int, str]] = []
-    i = 0
-    while i < len(masked):
-        if masked[i] == "(":
-            close = _matching_paren(masked, i)
-            if close < 0:
-                raise Unsupported("unbalanced parentheses in FROM")
-            inner = text[i + 1 : close]
-            if re.match(r"^\s*select\b", inner, re.IGNORECASE):
-                spans.append((i, close, inner.strip()))
-            i = close + 1
-        else:
-            i += 1
-    return spans
+    return [
+        (i, close, text[i + 1 : close].strip())
+        for i, close in _paren_groups(_mask(text, keep_depth0_only=False))
+        if _SELECT_HEAD.match(text[i + 1 : close])
+    ]
 
 
 def _split_top_level(s: str, sep_pattern: str = ",") -> list[str]:
@@ -224,33 +278,135 @@ _CLAUSE_RE = re.compile(
     r"\b(FROM|WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT)\b", re.IGNORECASE
 )
 _CANON = {"GROUP": "GROUP BY", "ORDER": "ORDER BY"}
+_CLAUSE_ORDER = ("FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT")
+
+
+def _clause_map(s: str) -> dict[str, str]:
+    """Text of each top-level clause of ``s`` by keyword, which must
+    come in canonical order; ``""`` keys the text before the first."""
+    found = [
+        (_CANON.get(m.group(1).split()[0].upper(), m.group(1).upper()), m.start(), m.end())
+        for m in _CLAUSE_RE.finditer(_mask(s))
+    ]
+    out = {"": s[: found[0][1]] if found else s}
+    seen_rank = -1
+    for i, (kw, _, end) in enumerate(found):
+        rank = _CLAUSE_ORDER.index(kw)
+        if rank <= seen_rank:
+            raise Unsupported(f"clause {kw} out of order or repeated")
+        seen_rank = rank
+        out[kw] = s[end : found[i + 1][1] if i + 1 < len(found) else len(s)].strip()
+    return out
 
 
 def _clauses(sql: str) -> dict[str, str]:
     s = sql.strip().rstrip(";").strip()
     if not re.match(r"^select\s", s, re.IGNORECASE):
         raise Unsupported("not a SELECT statement")
-    masked = _mask(s)
-    found: list[tuple[str, int, int]] = []
-    for m in _CLAUSE_RE.finditer(masked):
-        kw = _CANON.get(m.group(1).split()[0].upper(), m.group(1).upper())
-        found.append((kw, m.start(), m.end()))
-    order = ["FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT"]
-    seen_rank = -1
-    out: dict[str, str] = {}
-    bounds = found + [("<END>", len(s), len(s))]
-    # SELECT text runs to the first keyword
-    first = bounds[0][1]
-    out["SELECT"] = s[len("select") : first].strip()
-    for i, (kw, st, en) in enumerate(found):
-        rank = order.index(kw)
-        if rank <= seen_rank or kw in out:
-            raise Unsupported(f"clause {kw} out of order or repeated")
-        seen_rank = rank
-        out[kw] = s[en : bounds[i + 1][1]].strip()
+    out = _clause_map(s)
+    out["SELECT"] = out.pop("")[len("select") :].strip()
     if "FROM" not in out:
         raise Unsupported("no FROM clause")
     return out
+
+
+def reassemble(cl: dict[str, str], new_from: str) -> str:
+    """Rebuild a SELECT statement from its clause map with a rewritten
+    FROM — faithful because the map holds clauses in canonical order."""
+    parts = ["SELECT " + cl["SELECT"], "FROM " + new_from]
+    for kw in _CLAUSE_ORDER[1:]:
+        if kw in cl:
+            parts.append(kw + " " + cl[kw])
+    return " ".join(parts)
+
+
+def derived_tables(query: str) -> tuple[dict[str, str], list] | None:
+    """``(clause map, [(start, end, inner SELECT)])`` of a SELECT's FROM
+    derived tables, with offsets into ``clause map["FROM"]``; None when
+    it has none (or its text does not scan — exact Spark SQL reports
+    that)."""
+    try:
+        cl = _clauses(query)
+        spans = from_subquery_spans(cl["FROM"])
+    except Unsupported:
+        return None
+    return (cl, spans) if spans else None
+
+
+def order_limit(
+    cl: dict[str, str], outputs: list[str]
+) -> tuple[list[OrderItem], int | None]:
+    """The ORDER BY items and LIMIT of a clause map.  Each item's
+    ASC/DESC is split off and an ordinal is resolved to its name in
+    ``outputs`` (sorting by the literal int would silently no-op);
+    LIMIT must be an integer literal.  Raises ``Unsupported``
+    otherwise.  Callers map the remaining expressions to their own
+    output names."""
+    order_by: list[OrderItem] = []
+    for piece in _split_top_level(cl["ORDER BY"]) if "ORDER BY" in cl else []:
+        m = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
+        expr = (piece[: m.start()] if m else piece).strip()
+        if re.fullmatch(r"\d+", expr):
+            idx = int(expr) - 1
+            if not 0 <= idx < len(outputs):
+                raise Unsupported("ORDER BY ordinal out of range")
+            expr = outputs[idx]
+        order_by.append(OrderItem(expr, desc=bool(m) and m.group(1).upper() == "DESC"))
+    limit = cl.get("LIMIT")
+    if limit is not None and not re.fullmatch(r"\d+", limit.strip()):
+        raise Unsupported(f"unparseable LIMIT {limit!r}")
+    return order_by, None if limit is None else int(limit)
+
+
+_ORDER_OR_LIMIT = re.compile(r"\b(ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
+
+
+def split_union(query: str) -> tuple[list[str], dict[str, str]] | None:
+    """A chain of plain SELECT blocks joined by ``UNION ALL``:
+    ``(blocks, tail)``, where ``tail`` is the clause map of the ORDER BY
+    / LIMIT written after the last block (it scopes to the whole union;
+    read it with :func:`order_limit`) and the last block no longer
+    carries it.  None for any other statement: a plain UNION (it breaks
+    left-assoc flattening), EXCEPT / INTERSECT, a parenthesized block,
+    ORDER BY / LIMIT on a non-last block (a Spark parse error), or a
+    tail that does not scan."""
+    masked = _mask(query)
+    if re.search(r"\b(EXCEPT|INTERSECT)\b", masked, re.IGNORECASE):
+        return None
+    seps = list(re.finditer(r"\bUNION(\s+ALL)?\b", masked, re.IGNORECASE))
+    if not seps or any(m.group(1) is None for m in seps):
+        return None
+    cuts = [0] + [i for m in seps for i in m.span()] + [len(query)]
+    blocks = [query[a:b].strip() for a, b in zip(cuts[::2], cuts[1::2])]
+    if not all(_SELECT_HEAD.match(b) for b in blocks):
+        return None
+    tail: dict[str, str] = {}
+    m = _ORDER_OR_LIMIT.search(_mask(blocks[-1]))
+    if m:
+        try:
+            tail = _clause_map(blocks[-1][m.start() :].rstrip().rstrip(";"))
+        except Unsupported:
+            return None
+        del tail[""]
+        blocks[-1] = blocks[-1][: m.start()].rstrip()
+    if any(_ORDER_OR_LIMIT.search(_mask(b)) for b in blocks):
+        return None
+    return blocks, tail
+
+
+def where_extent(text: str, stop: str) -> tuple[str, str] | None:
+    """``(predicate, text without the WHERE clause)`` for the top-level
+    ``WHERE`` of ``text``, which runs to the first top-level keyword
+    matching the regex alternation ``stop``; None without a WHERE.  A
+    keyword inside a literal (``'on time'``) or parentheses never ends
+    the predicate."""
+    masked = _mask(text)
+    wm = re.search(r"\bWHERE\b", masked, re.IGNORECASE)
+    if wm is None:
+        return None
+    em = re.compile(rf"\b(?:{stop})\b", re.IGNORECASE).search(masked, wm.end())
+    end = em.start() if em else len(text)
+    return text[wm.end() : end].strip(), text[: wm.start()] + " " + text[end:]
 
 
 # ---------------------------------------------------------------- FROM
@@ -270,16 +426,13 @@ def _parse_table_ref(text: str) -> TableRef:
         # 242-345 lifts these into dependent plan nodes; here the inner
         # text is either row-local — planned into the per-block
         # transform — or opaque, executed exactly as a dimension)
-        masked = _mask(text, keep_depth0_only=False)
-        close = _matching_paren(masked, 0)
-        if close < 0:
-            raise Unsupported("unbalanced derived table")
-        inner = text[1:close].strip()
+        spans = from_subquery_spans(text)
+        if not spans or spans[0][0] != 0:
+            raise Unsupported("non-SELECT derived table")
+        _, close, inner = spans[0]
         m = re.fullmatch(r"(?:AS\s+)?(\w+)", text[close + 1 :].strip(), re.IGNORECASE)
         if not m:
             raise Unsupported("derived table requires an alias")
-        if not re.match(r"^\s*select\b", inner, re.IGNORECASE):
-            raise Unsupported("non-SELECT derived table")
         parsed_inner = None
         try:
             parsed_inner = parse_simple_inner(inner)
@@ -316,21 +469,18 @@ def parse_simple_inner(inner: str) -> tuple[str, list[tuple[str, str]] | None, s
     for k in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT"):
         if k in cl:
             raise Unsupported(f"derived table with {k}")
-    sel = cl["SELECT"].strip()
-    if re.match(r"^\s*DISTINCT\b", sel, re.IGNORECASE):
+    if re.match(r"^\s*DISTINCT\b", cl["SELECT"], re.IGNORECASE):
         raise Unsupported("derived table with DISTINCT")
     tables, joins = _parse_from(cl["FROM"])
     if joins or tables[0].subquery is not None:
         raise Unsupported("derived table must scan a single base table")
     quals = [tables[0].alias, tables[0].name]
     items: list[tuple[str, str]] | None = None
-    if sel != "*":
+    if cl["SELECT"] != "*":
         items = []
-        for it in _split_top_level(sel):
-            expr, alias = _split_alias(it)
-            if _contains_agg_call(_mask(expr, keep_depth0_only=False)):
+        for _, alias, sexpr in _select_items(cl, quals)[0]:
+            if _calls(sexpr, AGG_FUNCS):
                 raise Unsupported("aggregate inside derived table")
-            sexpr = strip_qualifiers(expr, quals)
             name = alias or (sexpr if re.fullmatch(r"\w+", sexpr) else None)
             if name is None:
                 raise Unsupported("derived-table select item needs an alias")
@@ -464,72 +614,27 @@ def _expand_stats(text: str) -> str:
     through the existing composite-aggregate machinery: each sum/count
     becomes a (hidden, deduped) partial and the identity is evaluated
     as a residual over the estimate frame."""
-    masked = _mask(text, keep_depth0_only=False)
     out, pos = [], 0
-    for m in re.finditer(
-        rf"\b({'|'.join(STAT_FUNCS)})\s*\(", masked, re.IGNORECASE
-    ):
-        if m.start() < pos:
-            continue
-        depth, i = 0, m.end() - 1
-        while i < len(masked):
-            ch = masked[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if i >= len(masked) or depth != 0:
-            raise Unsupported("unbalanced variance-family aggregate call")
-        op = m.group(1).lower()
-        inner = text[m.end() : i]
+    for op, start, open_, close in _calls(text, STAT_FUNCS):
+        inner = text[open_ + 1 : close]
         if re.match(r"\s*DISTINCT\s+", inner, re.IGNORECASE):
             raise Unsupported(f"{op}(DISTINCT ...) is not rewritable")
         args = [a for a in _split_top_level(inner) if a]
-        out.append(text[pos : m.start()])
-        out.append(f"({_stat_identity(op, args)})")
-        pos = i + 1
-    if not out:
-        return text
-    out.append(text[pos:])
-    return "".join(out)
+        out += [text[pos:start], f"({_stat_identity(op, args)})"]
+        pos = close + 1
+    return "".join(out) + text[pos:] if out else text
 
 
-def _find_agg_call(expr: str) -> tuple[str, str, bool] | None:
-    """If ``expr`` is exactly one top-level aggregate call, return
-    (op, inner_text, distinct); else None."""
-    m = re.match(r"\s*(\w+)\s*\(", expr)
-    if not m or m.group(1).lower() not in AGG_FUNCS:
-        return None
-    # the matching close paren must end the expression
-    depth, start = 0, expr.index("(", m.end(1))
-    in_str: str | None = None
-    for i in range(start, len(expr)):
-        ch = expr[i]
-        if in_str is not None:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                if expr[i + 1 :].strip():
-                    return None  # e.g. sum(x) + 1 — composite expression
-                inner = expr[start + 1 : i]
-                break
-    else:
-        return None
-    op = m.group(1).lower()
-    dm = re.match(r"\s*DISTINCT\s+", inner, re.IGNORECASE)
-    distinct = dm is not None
-    if distinct:
-        inner = inner[dm.end() :]
-    return op, inner.strip(), distinct
+def _agg_call(name: str, args: str) -> tuple[str, str, bool]:
+    """``(op, argument, DISTINCT)`` of one call to an ``AGG_FUNCS``
+    aggregate: COUNT(DISTINCT x) and approx_count_distinct(x) are the
+    one ``countdistinct`` op; DISTINCT on any other aggregate is not
+    rewritable (duplicates across blocks)."""
+    m = re.match(r"\s*DISTINCT\s+", args, re.IGNORECASE)
+    if m and name not in ("count", "approx_count_distinct"):
+        raise Unsupported(f"{name}(DISTINCT ...) is not rewritable")
+    op = "countdistinct" if m or name == "approx_count_distinct" else name
+    return op, args[m.end() if m else 0 :].strip(), m is not None
 
 
 # words that legally trail an expression and must never be read as an
@@ -600,10 +705,26 @@ def strip_qualifiers(text: str, aliases: list[str]) -> str:
     return "".join(out)
 
 
-def _contains_agg_call(masked_text: str) -> bool:
-    return bool(
-        re.search(rf"\b({'|'.join(AGG_FUNCS)})\s*\(", masked_text, re.IGNORECASE)
-    )
+def _select_items(
+    cl: dict[str, str], aliases: list[str]
+) -> tuple[list[tuple[str, str | None, str]], list[str]]:
+    """The select list of a clause map as ``(expr, alias or None, expr
+    without qualifiers)`` per item, and the GROUP BY expressions without
+    qualifiers, an ordinal resolved to its select item's expression."""
+    items = []
+    for item in _split_top_level(cl["SELECT"]):
+        expr, alias = _split_alias(item)
+        items.append((expr, alias, strip_qualifiers(expr, aliases)))
+    groups: list[str] = []
+    for g in _split_top_level(cl["GROUP BY"]) if "GROUP BY" in cl else []:
+        if re.fullmatch(r"\d+", g):
+            idx = int(g) - 1
+            if not 0 <= idx < len(items):
+                raise Unsupported("GROUP BY ordinal out of range")
+            groups.append(items[idx][2])
+        else:
+            groups.append(strip_qualifiers(g, aliases))
+    return items, groups
 
 
 def _extract_where_subqs(
@@ -637,25 +758,11 @@ def _extract_where_subqs(
             keep.append(c)
             continue
         masked = _mask(c)  # depth-0 only: subquery body blanked, parens kept
-        # the conjunct must END with the subquery's balanced paren
-        # group: walk back from the final ')' to its matching '(' —
-        # parens survive masking at EVERY depth, so a nested inner
-        # subquery or function call cannot confuse the balance
-        tail = masked.rstrip()
-        if not tail.endswith(")"):
+        # the conjunct must END with the subquery's balanced paren group
+        groups = _paren_groups(masked)
+        if not groups or masked[groups[-1][1] + 1 :].strip():
             raise Unsupported(f"non-rewritable subquery conjunct {c.strip()[:60]!r}")
-        close = len(tail) - 1
-        depth, op = 0, -1
-        for i in range(close, -1, -1):
-            if masked[i] == ")":
-                depth += 1
-            elif masked[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    op = i
-                    break
-        if op < 0:
-            raise Unsupported(f"unbalanced WHERE conjunct {c.strip()[:60]!r}")
+        op, close = groups[-1]
         # what precedes the parens must be `[lhs] [NOT] IN|EXISTS`
         # or a scalar comparison `lhs COMP`
         m = re.search(
@@ -815,137 +922,74 @@ def parse_select(sql: str) -> ParsedSelect:
             for l, r in j.pairs
         ]
 
+    select_items, groups = _select_items(cl, aliases)
     group_items: list[GroupItem] = []
-    select_items = _split_top_level(cl["SELECT"])
-    raw_groups = (
-        _split_top_level(cl["GROUP BY"]) if "GROUP BY" in cl else []
-    )
-    # resolve GROUP BY ordinals against the select list
-    resolved_groups: list[str] = []
-    for g in raw_groups:
-        if re.fullmatch(r"\d+", g):
-            idx = int(g) - 1
-            if not (0 <= idx < len(select_items)):
-                raise Unsupported("GROUP BY ordinal out of range")
-            expr, _ = _split_alias(select_items[idx])
-            resolved_groups.append(expr)
-        else:
-            resolved_groups.append(g)
-
     agg_items: list[AggItem] = []
     select_order: list[str] = []
     composites: list[tuple[str, str]] = []
-    norm_groups = {norm_expr(strip_qualifiers(g, aliases)) for g in resolved_groups}
+    norm_groups = {norm_expr(g) for g in groups}
     agg_by_norm: dict[str, AggItem] = {}
 
-    def rewrite_aggs(text: str, where: str) -> str:
-        """Replace aggregate calls in select/HAVING/ORDER BY text with
-        select aliases, adding hidden aggregates for calls not
-        selected.  Calls are LOCATED on the string-masked text (the
+    def rewrite_aggs(text: str) -> str:
+        """Replace aggregate calls in qualifier-free select/HAVING/ORDER
+        BY text with select aliases, adding hidden aggregates for calls
+        not selected.  Calls are LOCATED on the string-masked text (the
         module's masking invariant) so agg-call text inside a literal
         — ``HAVING g = 'sum(a)'`` — is never rewritten; replacements
         are spliced into the original text by position."""
-        masked_text = _mask(text, keep_depth0_only=False)
         out, pos = [], 0
-        for m in re.finditer(
-            rf"\b({'|'.join(AGG_FUNCS)})\s*\(", masked_text, re.IGNORECASE
-        ):
-            if m.start() < pos:
-                continue
-            # matching close paren on the masked text (parens survive
-            # masking; literal contents don't, so no in-string state)
-            depth, i = 0, m.end() - 1
-            while i < len(masked_text):
-                ch = masked_text[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            call = text[m.start() : i + 1]
-            parsed = _find_agg_call(strip_qualifiers(call, aliases))
-            if parsed is None:
-                raise Unsupported(f"unparseable aggregate in {where}: {call!r}")
-            key = norm_expr(strip_qualifiers(call, aliases))
+        for name, start, open_, close in _calls(text, AGG_FUNCS):
+            key = norm_expr(text[start : close + 1])
             it = agg_by_norm.get(key)
             if it is None:
-                op, inner, distinct = parsed
-                if distinct and op not in ("count", "approx_count_distinct"):
-                    raise Unsupported(f"{op}(DISTINCT ...) in {where}")
-                if op == "count" and distinct:
-                    op = "countdistinct"
-                elif op == "approx_count_distinct":
-                    op = "countdistinct"
+                op, arg, _ = _agg_call(name, text[open_ + 1 : close])
                 it = AggItem(
                     op=op,
-                    expr=None if (op == "count" and inner == "*") else inner,
+                    expr=None if (op == "count" and arg == "*") else arg,
                     alias=f"_vdb_h{len(agg_items)}",
                     hidden=True,
                 )
                 agg_items.append(it)
                 agg_by_norm[key] = it
-            out.append(text[pos : m.start()])
-            out.append(it.alias)
-            pos = i + 1
-        out.append(text[pos:])
-        return "".join(out)
+            out += [text[pos:start], it.alias]
+            pos = close + 1
+        return "".join(out) + text[pos:]
 
-    for item in select_items:
-        expr, alias = _split_alias(item)
-        expanded = _expand_stats(expr)
-        if expanded != expr:
+    for expr, alias, sexpr in select_items:
+        expanded = _expand_stats(sexpr)
+        if expanded != sexpr:
             # variance-family call (possibly inside a larger
             # expression): the decomposed text is a composite over
             # sum/count partials; the display name comes from the
             # ORIGINAL text so `var_pop(x)` shows as var_pop_x
-            name = alias or re.sub(
-                r"\W+", "_", strip_qualifiers(expr, aliases)
-            ).strip("_")[:48].lower()
-            composites.append(
-                (name, rewrite_aggs(strip_qualifiers(expanded, aliases), "SELECT"))
-            )
+            name = alias or re.sub(r"\W+", "_", sexpr).strip("_")[:48].lower()
+            composites.append((name, rewrite_aggs(expanded)))
             select_order.append(name)
             continue
-        agg = _find_agg_call(expr)
-        if agg is not None:
-            op, inner, distinct = agg
-            inner = strip_qualifiers(inner, aliases) if inner != "*" else inner
-            if op == "count" and inner == "*":
-                inner_arg = None
-            elif inner == "*":
-                raise Unsupported(f"{op}(*)")
-            else:
-                inner_arg = inner
-            if op == "count" and distinct:
-                op = "countdistinct"
-            elif op == "approx_count_distinct":
-                op = "countdistinct"
-            elif distinct:
-                # sum/avg/min/max DISTINCT: the scramble rewrite would be
-                # WRONG (duplicates across blocks) — exact fallback
-                raise Unsupported(f"{op}(DISTINCT ...) is not rewritable")
-            name = alias or re.sub(r"\W+", "_", f"{op}_{inner_arg or 'star'}").strip("_")
-            it = AggItem(op=op, expr=inner_arg, alias=name, distinct=distinct)
+        call = _whole_call(sexpr, AGG_FUNCS)
+        if call is not None:
+            op, arg, distinct = _agg_call(*call)
+            if arg == "*" and call[0] != "count":
+                raise Unsupported(f"{call[0]}(*)")
+            arg = None if arg == "*" else arg
+            name = alias or re.sub(r"\W+", "_", f"{op}_{arg or 'star'}").strip("_")
+            it = AggItem(op=op, expr=arg, alias=name, distinct=distinct)
             agg_items.append(it)
-            agg_by_norm[norm_expr(strip_qualifiers(expr, aliases))] = it
+            agg_by_norm[norm_expr(sexpr)] = it
             select_order.append(name)
-            continue
-        sexpr = strip_qualifiers(expr, aliases)
-        if norm_expr(sexpr) in norm_groups:
+        elif norm_expr(sexpr) in norm_groups:
             name = alias or (sexpr if re.fullmatch(r"\w+", sexpr) else None)
             gi = GroupItem(expr=sexpr, alias=name or f"_vdb_g{len(group_items)}")
             group_items.append(gi)
             select_order.append(gi.alias)
-        elif _contains_agg_call(_mask(expr, keep_depth0_only=False)):
+        elif _calls(sexpr, AGG_FUNCS):
             # composite aggregate expression — sum(a)/sum(b), 100*avg(x),
             # sum(x)+1: decompose every top-level agg call to a (hidden)
             # partial alias and evaluate the residual over the estimate
             # frame (the reference rebuilds arbitrary expressions around
             # decomposed partials, replaceColumnWithAggMeta:565-639)
             name = alias or re.sub(r"\W+", "_", sexpr).strip("_")[:48].lower()
-            composites.append((name, rewrite_aggs(sexpr, "SELECT")))
+            composites.append((name, rewrite_aggs(sexpr)))
             select_order.append(name)
         else:
             raise Unsupported(
@@ -955,11 +999,10 @@ def parse_select(sql: str) -> ParsedSelect:
     # SQL semantics project them away, which the executor honors by
     # grouping on them but excluding them from the output
     norm_selected = {norm_expr(g.expr) for g in group_items}
-    for g in resolved_groups:
-        sg = strip_qualifiers(g, aliases)
-        if norm_expr(sg) not in norm_selected:
+    for g in groups:
+        if norm_expr(g) not in norm_selected:
             group_items.append(
-                GroupItem(expr=sg, alias=f"_vdb_gx{len(group_items)}")
+                GroupItem(expr=g, alias=f"_vdb_gx{len(group_items)}")
             )
     if len(select_order) != len(set(select_order)):
         # pandas/Spark estimate frames key columns by name — a repeated
@@ -969,42 +1012,20 @@ def parse_select(sql: str) -> ParsedSelect:
 
     having = None
     if "HAVING" in cl:
-        having = rewrite_aggs(
-            _expand_stats(strip_qualifiers(cl["HAVING"], aliases)), "HAVING"
-        )
+        having = rewrite_aggs(_expand_stats(strip_qualifiers(cl["HAVING"], aliases)))
 
-    order_by: list[OrderItem] = []
-    if "ORDER BY" in cl:
-        for piece in _split_top_level(cl["ORDER BY"]):
-            m = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
-            desc = bool(m and m.group(1).upper() == "DESC")
-            expr = (piece[: m.start()] if m else piece).strip()
-            if re.fullmatch(r"\d+", expr):
-                # positional ORDER BY: resolve against the select list
-                # (sorting by the literal int would silently no-op)
-                idx = int(expr) - 1
-                if not (0 <= idx < len(select_order)):
-                    raise Unsupported("ORDER BY ordinal out of range")
-                expr = select_order[idx]
-            expr = rewrite_aggs(
-                _expand_stats(strip_qualifiers(expr, aliases)), "ORDER BY"
-            )
-            # map group expressions to their output aliases
-            for gi in group_items:
-                if norm_expr(expr) == norm_expr(gi.expr):
-                    expr = gi.alias
-                    break
-            order_by.append(OrderItem(expr=expr, desc=desc))
+    order_by, limit = order_limit(cl, select_order)
+    for o in order_by:
+        o.expr = rewrite_aggs(_expand_stats(strip_qualifiers(o.expr, aliases)))
+        # map group expressions to their output aliases
+        for gi in group_items:
+            if norm_expr(o.expr) == norm_expr(gi.expr):
+                o.expr = gi.alias
+                break
 
     if not agg_items:
         # (checked after HAVING/ORDER BY, which may add hidden aggs)
         raise Unsupported("no aggregates — nothing to approximate")
-
-    limit = None
-    if "LIMIT" in cl:
-        if not re.fullmatch(r"\d+", cl["LIMIT"].strip()):
-            raise Unsupported(f"unparseable LIMIT {cl['LIMIT']!r}")
-        limit = int(cl["LIMIT"].strip())
 
     return ParsedSelect(
         tables=tables,
@@ -1047,15 +1068,17 @@ class PercentileSelect:
 
 def parse_percentile_select(sql: str) -> PercentileSelect | None:
     try:
-        cl = _clauses(sql)
-        if re.match(r"^\s*DISTINCT\b", cl["SELECT"], re.IGNORECASE):
-            return None
-        tables, joins = _parse_from(cl["FROM"])
+        return _parse_percentile(sql)
     except Unsupported:
         return None
-    if joins or len(tables) != 1 or tables[0].subquery is not None:
+
+
+def _parse_percentile(sql: str) -> PercentileSelect | None:
+    cl = _clauses(sql)
+    if re.match(r"^\s*DISTINCT\b", cl["SELECT"], re.IGNORECASE) or "HAVING" in cl:
         return None
-    if "HAVING" in cl:
+    tables, joins = _parse_from(cl["FROM"])
+    if joins or len(tables) != 1 or tables[0].subquery is not None:
         return None
     aliases = [tables[0].alias, tables[0].name]
     where = cl.get("WHERE")
@@ -1063,38 +1086,28 @@ def parse_percentile_select(sql: str) -> PercentileSelect | None:
         where = strip_qualifiers(where, aliases)
         if re.search(r"\bselect\b", _mask(where, keep_depth0_only=False), re.IGNORECASE):
             return None  # WHERE subqueries stay on the main planner path
-    group_exprs = [
-        strip_qualifiers(g, aliases)
-        for g in (_split_top_level(cl["GROUP BY"]) if "GROUP BY" in cl else [])
-    ]
+    select_items, group_exprs = _select_items(cl, aliases)
     if any(not re.fullmatch(r"\w+", g) for g in group_exprs):
         return None  # sketch group keys must be plain columns
     norm_g = {norm_expr(g) for g in group_exprs}
     items: list[tuple[str, str, float]] = []
     group_out: list[tuple[str, str]] = []
     select_order: list[str] = []
-    for item in _split_top_level(cl["SELECT"]):
-        expr, alias = _split_alias(item)
-        sexpr = strip_qualifiers(expr, aliases)
-        mm = re.match(r"\s*(\w+)\s*\(", sexpr)
-        if mm and mm.group(1).lower() in PCT_FUNCS:
-            masked = _mask(sexpr, keep_depth0_only=False)
-            open_idx = sexpr.index("(", mm.end(1))
-            close = _matching_paren(masked, open_idx)
-            if close < 0 or sexpr[close + 1 :].strip():
-                return None  # percentile embedded in a larger expression
-            args = _split_top_level(sexpr[open_idx + 1 : close])
-            if mm.group(1).lower() == "median":
+    for _, alias, sexpr in select_items:
+        call = _whole_call(sexpr, PCT_FUNCS)
+        if call is not None:
+            args = _split_top_level(call[1])
+            if call[0] == "median":
                 # median(x) == percentile(x, 0.5)
                 if len(args) != 1:
                     return None
-                col, p = args[0].strip(), 0.5
+                col, p = args[0], 0.5
             else:
                 if len(args) != 2:
                     return None
-                col, ptxt = args[0].strip(), args[1].strip()
+                col = args[0]
                 try:
-                    p = float(ptxt)
+                    p = float(args[1])
                 except ValueError:
                     return None
                 if not (0.0 < p < 1.0):
@@ -1105,6 +1118,7 @@ def parse_percentile_select(sql: str) -> PercentileSelect | None:
             items.append((name, col, p))
             select_order.append(name)
         elif norm_expr(sexpr) in norm_g:
+            # (a percentile inside a larger expression lands here too)
             name = alias or (sexpr if re.fullmatch(r"\w+", sexpr) else None)
             if name is None:
                 return None
@@ -1120,30 +1134,15 @@ def parse_percentile_select(sql: str) -> PercentileSelect | None:
         g for g in group_exprs if norm_expr(g) not in selected
     ]
 
-    order_by: list[OrderItem] = []
-    if "ORDER BY" in cl:
-        for piece in _split_top_level(cl["ORDER BY"]):
-            m = re.search(r"\s+(ASC|DESC)\s*$", piece, re.IGNORECASE)
-            desc = bool(m and m.group(1).upper() == "DESC")
-            expr = strip_qualifiers((piece[: m.start()] if m else piece).strip(), aliases)
-            if re.fullmatch(r"\d+", expr):
-                idx = int(expr) - 1
-                if not (0 <= idx < len(select_order)):
-                    return None
-                expr = select_order[idx]
-            for src, out_name in group_out:
-                if norm_expr(expr) == norm_expr(src):
-                    expr = out_name
-                    break
-            if expr not in select_order:
-                return None
-            order_by.append(OrderItem(expr=expr, desc=desc))
-
-    limit = None
-    if "LIMIT" in cl:
-        if not re.fullmatch(r"\d+", cl["LIMIT"].strip()):
+    order_by, limit = order_limit(cl, select_order)
+    for o in order_by:
+        o.expr = strip_qualifiers(o.expr, aliases)
+        for src, out_name in group_out:
+            if norm_expr(o.expr) == norm_expr(src):
+                o.expr = out_name
+                break
+        if o.expr not in select_order:
             return None
-        limit = int(cl["LIMIT"].strip())
 
     return PercentileSelect(
         table=tables[0].name,
