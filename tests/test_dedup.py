@@ -204,3 +204,11 @@ def test_connected_components_random_sparse_graphs(spark):
         linked = {x for a, b in edges if a != b for x in (a, b)}
         want = {v: c for v, c in _union_find_components(edges).items() if v in linked}
         assert _components(spark, edges) == want
+
+
+def test_lsh_bands_must_divide_num_hashes(spark):
+    # a ValueError, not an assert: under ``python -O`` an assert is
+    # gone and the tail hashes past the last whole band are dropped
+    sig = spark.createDataFrame([(1, [0] * 16)], "doc_id long, sig array<long>")
+    with pytest.raises(ValueError, match="divide"):
+        lsh_candidate_pairs(sig, "doc_id", bands=5, num_hashes=16)

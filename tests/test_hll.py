@@ -102,3 +102,33 @@ def test_partition_order_invariance(spark, files_df):
         pdf = finalize(merged, sk, "ndv", "double").toPandas().set_index("lang")["ndv"]
         results.append(pdf)
     assert (results[0].sort_index() == results[1].sort_index()).all()
+
+
+def test_hll_partials_match_a_per_group_build_across_arrow_batches(spark):
+    # 16-row Arrow batches: each (partition, group) partial accumulates
+    # over many batches, and its state and lineage must equal a build
+    # over that group's rows of the partition, checksum by a plain loop
+    import operator
+    from functools import reduce
+
+    df = spark.range(400).select(
+        (F.col("id") % 7).alias("g"), (F.col("id") * 31 % 101).alias("v")
+    ).repartition(3, "v")
+    want: dict = {}
+    rows = df.select("g", F.spark_partition_id().alias("pid"), F.xxhash64("v").alias("h"))
+    for r in rows.collect():
+        want.setdefault((r["pid"], r["g"]), []).append(r["h"])
+    sk = HllSketch(p=8)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        got = build_partials(df, sk, "v", ["g"]).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert {(r["part_id"], r["g"]) for r in got} == set(want)
+    for r in got:
+        hs = want[(r["part_id"], r["g"])]
+        assert r["n_rows"] == len(hs)
+        assert r["checksum"] == reduce(operator.xor, hs, 0)
+        assert bytes(r["state"]) == sk.to_bytes(sk.build(np.array(hs, dtype=np.int64)))

@@ -159,3 +159,38 @@ def test_top_k_multi_round_merge_matches_single_round(spark, files_df):
     )
     assert many == one
     assert rows(approx_top_k(files_df, "lang", k=2, group_by=["repo"], eps=1.0 / (1 << 12))) == one
+
+
+def test_approx_frequency_grouped_null_key_and_miscast(spark):
+    # a NULL group key is a group like any other; "abc" cannot occur in
+    # an int column, so it reports 0 instead of the count at the hash
+    # of NULL
+    rows = [(1, 5)] * 3 + [(1, 7)] + [(None, 5)] * 2 + [(2, 7)] * 4
+    df = spark.createDataFrame(rows, "g int, v int")
+    got = approx_frequency(df, "v", [5, 7, "abc"], ["g"]).collect()
+    assert {(r["g"], r["item"]): r["est_count"] for r in got} == {
+        (1, "5"): 3, (1, "7"): 1, (1, "abc"): 0,
+        (None, "5"): 2, (None, "7"): 0, (None, "abc"): 0,
+        (2, "5"): 0, (2, "7"): 4, (2, "abc"): 0,
+    }
+
+
+def test_approx_frequency_no_items_is_empty_with_schema(spark):
+    df = spark.createDataFrame([(1, 5), (None, 7)], "g int, v int")
+    grouped = approx_frequency(df, "v", [], ["g"])
+    assert grouped.dtypes == [("g", "int"), ("item", "string"), ("est_count", "bigint")]
+    assert grouped.count() == 0
+    assert approx_frequency(df, "v", []).columns == ["item", "est_count"]
+
+
+def test_group_rows_keeps_each_key_on_one_row_across_batches():
+    import pandas as pd
+
+    from verdictdb_spark.operators.approx_agg import GroupRows
+
+    groups = GroupRows(["k"], acc=((2,), np.int64, -1), n=((), np.int64, 0))
+    assert groups.rows(pd.DataFrame({"k": ["a", "b", "a"]})).tolist() == [0, 1, 0]
+    assert groups.rows(pd.DataFrame({"k": ["c", "a"]})).tolist() == [2, 0]
+    assert groups.index == {("a",): 0, ("b",): 1, ("c",): 2}
+    assert groups.arrays["acc"].shape == (3, 2) and (groups.arrays["acc"] == -1).all()
+    assert groups.arrays["n"].tolist() == [0, 0, 0]

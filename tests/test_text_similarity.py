@@ -136,6 +136,25 @@ def test_embedding_near_dups_and_dedup(spark, emb):
     assert out.where(F.col("vec_id") >= 100_000).count() == 0
 
 
+def test_embedding_ops_skip_null_vectors(spark):
+    # one NULL vector among 20: it gets no bucket key, pairs with
+    # nothing, is never probed, and dedup keeps its row
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((10, 8)).astype(np.float32)
+    near = base[:9] + np.float32(1e-3) * rng.standard_normal((9, 8)).astype(np.float32)
+    rows = [(i, v.tolist()) for i, v in enumerate(base)]
+    rows += [(100 + i, v.tolist()) for i, v in enumerate(near)] + [(999, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    lsh = dict(threshold=0.99, planes=4, bands=4)
+    pairs = embedding_near_duplicates(df, "vec_id", "embedding", **lsh).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(i, 100 + i) for i in range(9)}
+    kept = dedup_embeddings(df, "vec_id", "embedding", **lsh).collect()
+    assert {r["vec_id"] for r in kept} == set(range(10)) | {999}
+    top = ann_top_k(df, "embedding", base[0].tolist(), 3, planes=2, probe_bits=2, id_col="vec_id")
+    ids = [r["vec_id"] for r in top.collect()]
+    assert ids[:2] in ([0, 100], [100, 0]) and 999 not in ids
+
+
 def test_embedding_near_dups_hot_bucket(spark):
     """5k co-located (identical) vectors must route through the
     representative-star path: O(m) verified edges, no O(m^2) gram

@@ -99,6 +99,40 @@ def factorize_keys(pdf: pd.DataFrame, gcols: list[str]) -> tuple[np.ndarray, pd.
     return codes, pdf.iloc[rep][gcols].reset_index(drop=True)
 
 
+class GroupRows:
+    """Per-partition group -> accumulator row map across Arrow batches.
+
+    ``rows(pdf)`` factorizes the batch's group keys (``factorize_keys``)
+    and returns each record's row, giving an unseen key the next free
+    row; every array named in ``arrays`` (``name=(row shape, dtype,
+    fill)``) then has a row per key seen so far, so a caller scatters
+    each batch straight into ``self.arrays[name]``.  ``self.index``
+    maps each key tuple to its row, in row order."""
+
+    def __init__(self, gcols: list[str], **arrays: tuple) -> None:
+        self.gcols = gcols
+        self.index: dict[tuple, int] = {}
+        self.spec = arrays
+        self.arrays = {
+            name: np.full((0, *shape), fill, dtype=dtype)
+            for name, (shape, dtype, fill) in arrays.items()
+        }
+
+    def rows(self, pdf: pd.DataFrame) -> np.ndarray:
+        codes, uniq = factorize_keys(pdf, self.gcols)
+        index = self.index
+        rows = np.array(
+            [index.setdefault(k, len(index)) for k in uniq.itertuples(index=False, name=None)],
+            dtype=np.int64,
+        )
+        for name, (shape, dtype, fill) in self.spec.items():
+            have = len(self.arrays[name])
+            if len(index) > have:
+                pad = np.full((len(index) - have, *shape), fill, dtype=dtype)
+                self.arrays[name] = np.concatenate([self.arrays[name], pad])
+        return rows[codes]
+
+
 def _value_column(col: str | Column, input_kind: str) -> Column:
     """JVM-side value preparation: hash or numeric cast, never Python."""
     c = F.col(col) if isinstance(col, str) else col
@@ -141,20 +175,19 @@ def build_partials(
 
     grouped_fast = hasattr(sketch, "update_grouped") and hasattr(sketch, "state_size")
 
-    def _factorize(pdf: pd.DataFrame) -> tuple[np.ndarray, pd.DataFrame]:
-        return factorize_keys(pdf, gcols)
-
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         t0 = time.monotonic()
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         # vectorized-across-groups accumulators
-        key_rows: dict[tuple, int] = {}
-        keys_df: list[pd.DataFrame] = []
-        mat: Any = None
-        nrows_v: list[int] = []
-        cksum_v: list[int] = []
+        if grouped_fast:
+            groups = GroupRows(
+                gcols,
+                state=((sketch.state_size,), sketch.state_dtype, 0),
+                n_rows=((), np.int64, 0),
+                checksum=((), np.int64, 0),
+            )
         # generic per-group accumulators
         acc: dict[tuple, Any] = {}
         nrows: dict[tuple, int] = {}
@@ -165,35 +198,14 @@ def build_partials(
                 continue
             v_all = pdf["_v"].to_numpy()
             if grouped_fast:
-                codes, uniq = _factorize(pdf)
-                n_new = len(uniq)
-                # map batch-local codes -> global accumulator rows
-                rows = np.empty(n_new, dtype=np.int64)
-                for i, key in enumerate(uniq.itertuples(index=False, name=None)):
-                    r = key_rows.get(key)
-                    if r is None:
-                        r = len(key_rows)
-                        key_rows[key] = r
-                        nrows_v.append(0)
-                        cksum_v.append(0)
-                    rows[i] = r
-                width = sketch.state_size
-                if mat is None:
-                    mat = np.zeros(0, dtype=sketch.state_dtype)
-                if len(key_rows) * width > mat.size:
-                    mat = np.concatenate(
-                        [mat, np.zeros(len(key_rows) * width - mat.size, dtype=sketch.state_dtype)]
-                    )
+                rows = groups.rows(pdf)
                 # single scatter per batch straight into the accumulator
                 # (no per-batch group matrices — keeps memory traffic
                 # O(rows) so many concurrent workers don't thrash DRAM)
-                sketch.update_grouped(mat, rows[codes], v_all)
-                cnt = np.bincount(codes, minlength=n_new)
-                xo = np.zeros(n_new, dtype=np.int64)
-                np.bitwise_xor.at(xo, codes, v_all.astype(np.int64, copy=False))
-                for i in range(n_new):
-                    nrows_v[rows[i]] += int(cnt[i])
-                    cksum_v[rows[i]] ^= int(xo[i])
+                arr = groups.arrays
+                sketch.update_grouped(arr["state"].reshape(-1), rows, v_all)
+                arr["n_rows"] += np.bincount(rows, minlength=len(groups.index))
+                np.bitwise_xor.at(arr["checksum"], rows, v_all.astype(np.int64, copy=False))
             else:
                 if gcols:
                     grouped = pdf.groupby(gcols, sort=False, dropna=False).indices
@@ -209,18 +221,20 @@ def build_partials(
                     cksum[k] = cksum.get(k, 0) ^ int(x)
 
         wall = (time.monotonic() - t0) * 1e3
-        rows_out = []
-        if grouped_fast and mat is not None:
-            per = wall / max(len(key_rows), 1)
-            mat2 = mat.reshape(-1, sketch.state_size)
-            for key, r in key_rows.items():
-                rows_out.append(
-                    list(key) + [sketch.to_bytes(mat2[r]), pid, nrows_v[r], cksum_v[r], per]
-                )
-        else:
-            per = wall / max(len(acc), 1)
-            for k, st in acc.items():
-                rows_out.append(list(k) + [sketch.to_bytes(st), pid, nrows[k], cksum[k], per])
+        if grouped_fast:
+            arr = groups.arrays
+            yield pd.DataFrame(list(groups.index), columns=gnames).assign(
+                state=[sketch.to_bytes(st) for st in arr["state"]],
+                part_id=pid,
+                n_rows=arr["n_rows"],
+                checksum=arr["checksum"],
+                wall_ms=wall / max(len(groups.index), 1),
+            )
+            return
+        per = wall / max(len(acc), 1)
+        rows_out = [
+            list(k) + [sketch.to_bytes(st), pid, nrows[k], cksum[k], per] for k, st in acc.items()
+        ]
         yield pd.DataFrame(
             rows_out, columns=gnames + ["state", "part_id", "n_rows", "checksum", "wall_ms"]
         )
@@ -331,6 +345,31 @@ def sketch_agg(
     ``finish`` answer rows (see ``tree_merge``)."""
     partials = build_partials(df, sketch, value, group_by, input_kind)
     return tree_merge(partials, sketch, group_by, fanin=fanin, finish=finish)
+
+
+def merge_with_states(
+    partials: DataFrame,
+    states: DataFrame | None,
+    sketch: Any,
+    group_by: Sequence[str] = (),
+    finish: Finisher | None = None,
+) -> DataFrame:
+    """Tree-merge new ``build_partials`` rows with previously merged
+    ``states`` (group cols + state: a progressive step's accumulated
+    states, a persisted state table; None on the first merge).
+
+    The states go LAST, as ``part_id`` -1: a round folds each group's
+    states in arrival order, so the new partials fold together first
+    and then merge with the accumulated state.  KLL compacts as it
+    merges, so fold order decides its bits; this order gives the bits
+    of merging the new partials' own merged state into the accumulated
+    one (KLL merge is commutative)."""
+    gcols = list(group_by)
+    parts = partials.select(*(gcols or [GROUP_ALL]), "state", "part_id")
+    if states is not None:
+        keys = gcols or [F.lit(0).alias(GROUP_ALL)]
+        parts = parts.unionByName(states.select(*keys, "state", F.lit(-1).alias("part_id")))
+    return tree_merge(parts, sketch, group_by, finish=finish)
 
 
 def estimates(sketch: Any, states: list, estimator: Callable[[Any, Any], Any] | None = None):

@@ -11,6 +11,14 @@ Design rules at 10^12-row scale:
 * candidate generation is a shuffle on (band, band_hash) buckets,
   never an all-pairs join, and buckets above a cap link members to a
   representative instead of emitting O(m^2) pairs;
+* every banded operator (MinHash-LSH, SimHash, the embedding near-dups
+  in ``similarity.py``) runs one pipeline, ``_banded_pairs``: band keys
+  -> (band, key) buckets -> ``_bucket_pairs`` -> both sides' payload
+  joined back -> pair score and filter.  An operator supplies only its
+  keys and its score; one keep step (``_keep_representatives``) turns
+  pairs into the kept rows;
+* MinHash and SimHash share one per-doc build (``_doc_hash_build``):
+  JVM token hashes, one numpy scatter per Arrow batch;
 * clustering is alternating large-star/small-star connected
   components (Kiveris et al. 2014) with localCheckpoint per round to
   cut lineage; converges in O(log^2 |V|) rounds independent of graph
@@ -23,7 +31,7 @@ multiplies.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Any, Callable, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -119,63 +127,70 @@ def minhash_signatures(
     (A pure-JVM 128-column min-aggregate version was 3-4x slower: 128
     aggregate buffers per row defeats codegen.)
     """
-    import pandas as pd
-
     from ..hashing import _odd_multipliers
-    from .approx_agg import factorize_keys
 
-    # Repartition the COMPACT base rows by id BEFORE the explode: the
-    # shingle/hash work then runs at full parallelism even when the
-    # source has few files, and — because explode/select are narrow —
-    # every doc's shingles already share a partition, so no second
-    # shuffle of the (much larger) exploded pairs is needed.
-    spark_parallelism = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        df.repartition(spark_parallelism, id_col)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.explode(shingles_col(text_col, shingle, mode)).alias("_s"),
-        )
-        .select("_id", F.xxhash64("_s").alias("_h"))
-    )
-    out_schema = T.StructType(
-        [df.schema[id_col], T.StructField("sig", T.ArrayType(T.LongType()))]
-    )
     k = num_hashes
     a_mults = _odd_multipliers(k, 0x31415926)
 
-    def build_sigs(batches):
-        key_rows: dict = {}
-        flat = np.full(0, np.iinfo(np.uint64).max, dtype=np.uint64)
-        j_off = np.arange(k, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, uniq = factorize_keys(pdf, ["_id"])
-            rows = np.empty(len(uniq), dtype=np.int64)
-            for i, key in enumerate(uniq["_id"]):
-                r = key_rows.get(key)
-                if r is None:
-                    r = len(key_rows)
-                    key_rows[key] = r
-                rows[i] = r
-            if len(key_rows) * k > flat.size:
-                flat = np.concatenate(
-                    [flat, np.full(len(key_rows) * k - flat.size, np.iinfo(np.uint64).max, dtype=np.uint64)]
-                )
-            h = pdf["_h"].to_numpy().astype(np.uint64)
-            gcodes = rows[codes]
-            with np.errstate(over="ignore"):
-                for j in range(k):
-                    np.minimum.at(flat, gcodes * k + j, h * a_mults[j])
-        if not key_rows:
-            yield pd.DataFrame({out_schema[0].name: [], "sig": []})
-            return
-        mat = flat.reshape(-1, k).astype(np.int64)  # wraps to signed — fine, deterministic
-        ids = list(key_rows.keys())
-        yield pd.DataFrame({out_schema[0].name: ids, "sig": [r.tolist() for r in mat]})
+    def scatter_min(sig: np.ndarray, rows: np.ndarray, h: np.ndarray) -> None:
+        flat = sig.reshape(-1)
+        with np.errstate(over="ignore"):
+            for j in range(k):
+                np.minimum.at(flat, rows * k + j, h * a_mults[j])
 
-    return sh.mapInPandas(build_sigs, out_schema)
+    return _doc_hash_build(
+        df, id_col, shingles_col(text_col, shingle, mode),
+        T.StructField("sig", T.ArrayType(T.LongType())),
+        acc=((k,), np.uint64, np.iinfo(np.uint64).max),
+        scatter=scatter_min,
+        # wraps to signed — fine, deterministic
+        finish=lambda sig: [r.tolist() for r in sig.astype(np.int64)],
+    )
+
+
+def _doc_hash_build(
+    df: DataFrame,
+    id_col: str,
+    tokens: Column,
+    out: T.StructField,
+    acc: tuple,
+    scatter: Callable[[np.ndarray, np.ndarray, np.ndarray], None],
+    finish: Callable[[np.ndarray], Any],
+) -> DataFrame:
+    """(id, ``out``) per doc from the ``xxhash64`` of each of its
+    ``tokens`` (an array Column): the hashing stays JVM-side, then ONE
+    numpy pass per partition — ``scatter(matrix, rows, hashes)`` folds
+    each Arrow batch into the docs' rows of a ``GroupRows`` matrix
+    (``acc`` = (row shape, dtype, fill)) and ``finish(matrix)`` turns
+    it into the ``out`` values.
+
+    The COMPACT base rows are repartitioned by id BEFORE the explode:
+    the token/hash work then runs at full parallelism even when the
+    source has few files, and — because explode/select are narrow —
+    every doc's tokens already share a partition, so no second shuffle
+    of the (much larger) exploded pairs is needed."""
+    import pandas as pd
+
+    from .approx_agg import GroupRows
+
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    hashed = (
+        df.repartition(parallelism, id_col)
+        .select(F.col(id_col).alias("_id"), F.explode(tokens).alias("_t"))
+        .select("_id", F.xxhash64("_t").alias("_h"))
+    )
+    schema = T.StructType([df.schema[id_col], out])
+
+    def build(batches):
+        docs = GroupRows(["_id"], acc=acc)
+        for pdf in batches:
+            if len(pdf):
+                rows = docs.rows(pdf)
+                scatter(docs.arrays["acc"], rows, pdf["_h"].to_numpy().astype(np.uint64))
+        ids = [key for key, in docs.index]
+        yield pd.DataFrame({schema[0].name: ids, out.name: finish(docs.arrays["acc"])})
+
+    return hashed.mapInPandas(build, schema)
 
 
 def _materialized(df: DataFrame) -> bool:
@@ -275,6 +290,46 @@ def _bucket_pairs(
     return pairs_small.unionAll(pairs_hot).dropDuplicates(["id_a", "id_b"])
 
 
+def _banded_pairs(
+    sig: DataFrame,
+    id_col: str,
+    keys: Column,
+    payload: str,
+    score: Callable[[Column, Column], Column],
+    keep: Column | None,
+    hot_bucket_cap: int,
+    warn_op: str | None,
+) -> DataFrame:
+    """The candidate-pair pipeline every banded operator runs.
+
+    ``keys`` (array<long>: one bucket key per band, NULL for a row that
+    joins no bucket) is added to the signature frame ``sig``, which is
+    then localCheckpointed unless already materialized: banding and
+    both payload joins read it.  The keys posexplode into (band, key)
+    buckets, ``_bucket_pairs`` pairs the ids, each pair gets both
+    sides' ``payload`` back and is scored by ``score(a, b)`` (an
+    aliased Column), and pairs failing ``keep`` drop.  Returns
+    (id_a, id_b, score)."""
+    keyed = sig.withColumn("_keys", keys)
+    if not _materialized(sig):
+        keyed = keyed.localCheckpoint()
+    banded = keyed.select(F.col(id_col).alias("_id"), F.posexplode("_keys").alias("band", "key"))
+    pairs = _bucket_pairs(banded, ["band", "key"], hot_bucket_cap, warn_op)
+    out = _join_sides(pairs, keyed, id_col, payload)
+    out = out.select("id_a", "id_b", score(F.col("_pa"), F.col("_pb")))
+    return out if keep is None else out.where(keep)
+
+
+def _join_sides(pairs: DataFrame, frame: DataFrame, id_col: str, payload: str) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) plus each side's ``payload`` from
+    ``frame``, as ``_pa`` and ``_pb``."""
+
+    def side(s: str) -> DataFrame:
+        return frame.select(F.col(id_col).alias(f"id_{s}"), F.col(payload).alias(f"_p{s}"))
+
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str,
@@ -302,45 +357,27 @@ def lsh_candidate_pairs(
     """
     if num_hashes is None:
         num_hashes = len(sig_df.select("sig").first()["sig"])
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
+    if num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     r = num_hashes // bands
-    if not _materialized(sig_df):
-        sig_df = sig_df.localCheckpoint()  # reused three times below
-    # slim banding rows: the self-join and the pair-dedup shuffle carry
-    # only (id, band, hash) — the 1KB signature arrays would otherwise
-    # be replicated x bands through the shuffle
-    banded = sig_df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(F.slice("sig", b * r + 1, r)).alias("bh"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bh")
-    pairs = _bucket_pairs(
-        banded, ["band", "bh"], hot_bucket_cap,
+
+    def est_jaccard(a: Column, b: Column) -> Column:
+        agree = F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x == y).cast("int")), F.lit(0), lambda acc, v: acc + v
+        )
+        return (agree.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard")
+
+    # only the band hashes go through the bucketing shuffles: the 1KB
+    # signature arrays would otherwise be replicated x bands
+    return _banded_pairs(
+        sig_df, id_col,
+        keys=F.array(*[F.xxhash64(F.slice("sig", b * r + 1, r)) for b in range(bands)]),
+        payload="sig",
+        score=est_jaccard,
+        keep=F.col("est_jaccard") >= min_est_jaccard if min_est_jaccard > 0 else None,
+        hot_bucket_cap=hot_bucket_cap,
         warn_op="lsh_candidate_pairs" if warn_hot_buckets else None,
     )
-    # attach signatures once per deduped pair to estimate jaccard
-    sa = sig_df.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig_df.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    joined = pairs.join(sa, "id_a").join(sb, "id_b")
-    est = (
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    ).alias("est_jaccard")
-    out = joined.select("id_a", "id_b", est)
-    if min_est_jaccard > 0:
-        out = out.where(F.col("est_jaccard") >= min_est_jaccard)
-    return out
 
 
 def exact_jaccard(
@@ -353,16 +390,10 @@ def exact_jaccard(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification
     stage — only runs on the candidate set, never all pairs)."""
-    sh = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(shingles_col(text_col, shingle, mode)).alias("_set"),
-    )
-    j = (
-        pairs.join(sh.withColumnRenamed("_id", "id_a").withColumnRenamed("_set", "set_a"), "id_a")
-        .join(sh.withColumnRenamed("_id", "id_b").withColumnRenamed("_set", "set_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size(F.array_union("set_a", "set_b")).cast("double")
+    sets = df.select(id_col, F.array_distinct(shingles_col(text_col, shingle, mode)).alias("_set"))
+    j = _join_sides(pairs, sets, id_col, "_set")
+    inter = F.size(F.array_intersect("_pa", "_pb")).cast("double")
+    union = F.size(F.array_union("_pa", "_pb")).cast("double")
     return j.select("id_a", "id_b", "est_jaccard", (inter / union).alias("jaccard"))
 
 
@@ -393,8 +424,13 @@ def dedup_minhash(
         sig, id_col, bands, min_est_jaccard=threshold, num_hashes=num_hashes,
         warn_hot_buckets=False,
     )
+    return _keep_representatives(df, id_col, pairs)
+
+
+def _keep_representatives(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """``df`` minus every row whose id is in a cluster of ``pairs``
+    (id_a, id_b) but is not that cluster's min-id representative."""
     comp = connected_components(pairs, "id_a", "id_b")
-    # rows whose id maps to a component keep only the representative
     joined = df.join(comp, df[id_col] == comp["vertex"], "left")
     return joined.where(
         F.col("vertex").isNull() | (F.col(id_col) == F.col("component"))
@@ -414,56 +450,23 @@ def simhash_col_df(
     (which defeats whole-stage codegen).  Bit i of the fingerprint is
     1 iff the vote sum for bit i is >= 0.
     """
-    import pandas as pd
-
-    from .approx_agg import factorize_keys
-
-    # repartition compact base rows by id before the explode (see
-    # minhash_signatures): full-parallel tokenization, no post-explode
-    # shuffle — narrow ops preserve the id partitioning
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    tok = (
-        df.repartition(parallelism, id_col)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_t"),
-        )
-        .select("_id", F.xxhash64("_t").alias("_h"))
-    )
-    out_schema = T.StructType(
-        [df.schema[id_col], T.StructField("simhash", T.LongType())]
-    )
     shifts = np.arange(bits, dtype=np.uint64)
 
-    def build_simhash(batches):
-        key_rows: dict = {}
-        votes = np.zeros((0, bits), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, uniq = factorize_keys(pdf, ["_id"])
-            rows = np.empty(len(uniq), dtype=np.int64)
-            for i, key in enumerate(uniq["_id"]):
-                r = key_rows.get(key)
-                if r is None:
-                    r = len(key_rows)
-                    key_rows[key] = r
-                rows[i] = r
-            if len(key_rows) > votes.shape[0]:
-                votes = np.vstack(
-                    [votes, np.zeros((len(key_rows) - votes.shape[0], bits), dtype=np.int64)]
-                )
-            h = pdf["_h"].to_numpy().astype(np.uint64)
-            b = (((h[:, None] >> shifts) & np.uint64(1)).astype(np.int64) * 2) - 1
-            np.add.at(votes, rows[codes], b)
-        if not key_rows:
-            yield pd.DataFrame({out_schema[0].name: [], "simhash": []})
-            return
-        sign_bits = (votes >= 0).astype(np.uint64)
-        packed = (sign_bits << shifts).sum(axis=1, dtype=np.uint64).view(np.int64)
-        yield pd.DataFrame({out_schema[0].name: list(key_rows.keys()), "simhash": packed})
+    def scatter_votes(votes: np.ndarray, rows: np.ndarray, h: np.ndarray) -> None:
+        b = (((h[:, None] >> shifts) & np.uint64(1)).astype(np.int64) * 2) - 1
+        np.add.at(votes, rows, b)
 
-    return tok.mapInPandas(build_simhash, out_schema)
+    def pack(votes: np.ndarray) -> np.ndarray:
+        sign_bits = (votes >= 0).astype(np.uint64)
+        return (sign_bits << shifts).sum(axis=1, dtype=np.uint64).view(np.int64)
+
+    return _doc_hash_build(
+        df, id_col, F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+        T.StructField("simhash", T.LongType()),
+        acc=((bits,), np.int64, 0),
+        scatter=scatter_votes,
+        finish=pack,
+    )
 
 
 def simhash_near_duplicates(
@@ -485,36 +488,18 @@ def simhash_near_duplicates(
             f"(got max_hamming={max_hamming}, chunks={chunks}): a pair "
             "with one differing bit per chunk would never share a bucket"
         )
-    sig = simhash_col_df(df, id_col, text_col).localCheckpoint()
     width = 64 // chunks
-    banded = sig.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("chunk"),
-                    F.shiftrightunsigned(F.col("simhash"), c * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("key"),
-                )
-                for c in range(chunks)
-            ])
-        ).alias("cc"),
-    ).select("_id", "cc.chunk", "cc.key")
-    pairs = _bucket_pairs(
-        banded, ["chunk", "key"], hot_bucket_cap, warn_op="simhash_near_duplicates"
-    )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sha"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_shb"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("_sha").bitwiseXOR(F.col("_shb"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+    return _banded_pairs(
+        simhash_col_df(df, id_col, text_col), id_col,
+        keys=F.array(*[
+            F.shiftrightunsigned("simhash", c * width).bitwiseAND(F.lit((1 << width) - 1))
+            for c in range(chunks)
+        ]),
+        payload="simhash",
+        score=lambda a, b: F.bit_count(a.bitwiseXOR(b)).alias("hamming"),
+        keep=F.col("hamming") <= max_hamming,
+        hot_bucket_cap=hot_bucket_cap,
+        warn_op="simhash_near_duplicates",
     )
 
 

@@ -139,22 +139,16 @@ def _fused_partials(
         largest count from all and drop the non-positive — the total
         undercount stays <= N_p/(cap+1).  MG counts are lower bounds;
         the final ranking uses the CMS."""
-        if gcols:
-            def trim(g: pd.DataFrame) -> pd.DataFrame:
-                if len(g) <= cap:
-                    return g
-                thr = g["_lcount"].nlargest(cap + 1).iloc[-1]
-                g = g.assign(_lcount=g["_lcount"] - thr)
-                return g[g["_lcount"] > 0]
+        def trim(g: pd.DataFrame) -> pd.DataFrame:
+            if len(g) <= cap:
+                return g
+            thr = g["_lcount"].nlargest(cap + 1).iloc[-1]
+            g = g.assign(_lcount=g["_lcount"] - thr)
+            return g[g["_lcount"] > 0]
 
-            return acc.groupby(
-                gcols, sort=False, dropna=False, group_keys=False
-            ).apply(trim)
-        if len(acc) <= cap:
-            return acc
-        thr = acc["_lcount"].nlargest(cap + 1).iloc[-1]
-        acc = acc.assign(_lcount=acc["_lcount"] - thr)
-        return acc[acc["_lcount"] > 0]
+        if not gcols:
+            return trim(acc)
+        return acc.groupby(gcols, sort=False, dropna=False, group_keys=False).apply(trim)
 
     def _groups(pdf: pd.DataFrame):
         """(group key, row positions) per group of ``pdf``.  A NULL key
@@ -256,6 +250,23 @@ def approx_top_k(
     return tree_merge(partials, CmsCandidates(sk), group_by, finish=finish)
 
 
+def _points_finisher(
+    sk: CmsSketch, items: list[str], hashes: np.ndarray, miscast: np.ndarray
+) -> Finisher:
+    """``tree_merge`` finisher: each item's point estimate against each
+    group's merged CMS, one row per (group, item) in item order; a
+    miscast item (one that cannot occur in the column) reports 0."""
+    fields = [T.StructField("item", T.StringType()), T.StructField("est_count", T.LongType())]
+
+    def fn(keys: pd.DataFrame, states: list) -> pd.DataFrame:
+        est = np.array([sk.query(st, hashes) for st in states], dtype=np.int64)
+        est[:, miscast] = 0
+        rows = keys.loc[keys.index.repeat(len(items))].reset_index(drop=True)
+        return rows.assign(item=items * len(states), est_count=est.reshape(-1))
+
+    return fields, fn
+
+
 def approx_frequency(
     df: DataFrame,
     col: str,
@@ -264,44 +275,27 @@ def approx_frequency(
     eps: float = 1.0 / (1 << 14),
     delta: float = 0.01,
 ) -> DataFrame:
-    """CMS point-estimates for explicit items, per group."""
+    """CMS point-estimates for explicit items, per group.
+
+    Each item's hash is the JVM ``xxhash64`` of the item cast to the
+    column's type — the hash the build applied to the data; the tree
+    merge's last round scores the items against each group's merged
+    CMS (``_points_finisher``)."""
     sk = CmsSketch(eps=eps, delta=delta)
-    spark = df.sparkSession
-    merged = cms_sketch_table(df, col, group_by, eps, delta)
-    gcols = list(group_by)
-    gnames = gcols if gcols else [GROUP_ALL]
     coltype = dict(df.dtypes)[col] if isinstance(col, str) else "string"
     cast = F.col("item").try_cast(coltype)  # ANSI-safe: malformed -> NULL
-    items_df = spark.createDataFrame([(str(i),) for i in items], ["item"]).select(
-        "item",
-        F.xxhash64(cast).alias("_vh"),
+    points = (
+        df.sparkSession.createDataFrame([(str(i),) for i in items], "item string")
         # a value that doesn't cast to the column's type can't occur in
         # the data: report 0, never the garbage at xxhash64(NULL)
-        cast.isNull().alias("_miscast"),
+        .select("item", F.xxhash64(cast).alias("_vh"), cast.isNull().alias("_miscast"))
+        .collect()
     )
-    # all items fold into one array row; each group's state travels once
-    items_agg = items_df.agg(
-        F.collect_list(F.struct("item", "_vh", "_miscast")).alias("_items")
+    finish = _points_finisher(
+        sk,
+        [r["item"] for r in points],
+        np.array([r["_vh"] for r in points], dtype=np.int64),
+        np.array([r["_miscast"] for r in points], dtype=bool),
     )
-    joined = merged.crossJoin(F.broadcast(items_agg))
-    out_fields = [merged.schema[g] for g in gnames] + [
-        T.StructField("item", T.StringType()),
-        T.StructField("est_count", T.LongType()),
-    ]
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for _, row in pdf.iterrows():
-            state = sk.from_bytes(row["state"])
-            its = row["_items"]
-            vhs = np.array([i["_vh"] if i["_vh"] is not None else 0 for i in its], dtype=np.int64)
-            est = sk.query(state, vhs)
-            est = np.where([i["_miscast"] for i in its], 0, est)
-            out = pd.DataFrame({"item": [i["item"] for i in its], "est_count": est})
-            for g in gnames:
-                out.insert(0, g, row[g])
-            outs.append(out)
-        return pd.concat(outs) if outs else pd.DataFrame(columns=gnames + ["item", "est_count"])
-
-    res = joined.groupBy(*gnames).applyInPandas(score, T.StructType(out_fields))
-    return res.drop(GROUP_ALL) if not gcols else res
+    partials = build_partials(df, sk, col, group_by, input_kind="hash")
+    return tree_merge(partials, sk, group_by, finish=finish)

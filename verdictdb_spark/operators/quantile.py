@@ -16,8 +16,8 @@ from pyspark.sql import types as T
 
 from ..sketches.kll import KllSketch
 from ..sketches.tdigest import TDigestSketch
-from . import approx_agg  # build_partials/tree_merge looked up at call time
-from .approx_agg import GROUP_ALL, Finisher, sketch_agg
+from . import approx_agg  # build_partials/merge_with_states looked up at call time
+from .approx_agg import Finisher, sketch_agg
 
 
 def _quantile_finisher(sketch, probs: list[float], out_col: str, keep_state: bool = False) -> Finisher:
@@ -149,26 +149,14 @@ def progressive_quantiles(
         raise ValueError("names must match probabilities")
     gcols = list(group_by)
     finish = _quantile_finisher(sketch, probs, "_qarr", keep_state=True)
-    acc_keys = gcols or [F.lit(0).alias(GROUP_ALL)]
 
     acc: DataFrame | None = None
     for it, [(lo, hi)] in enumerate(_schedule([meta.nblocks], schedule)):
         batch = scramble.where(F.col(BLOCK_COL).between(lo, hi))
-        parts = approx_agg.build_partials(batch, sketch, col, gcols, input_kind="double").select(
-            *(gcols or [GROUP_ALL]), "state", "part_id"
-        )
-        if acc is not None:
-            # the accumulated states go LAST: a round folds each group's
-            # states in arrival order, so the span's partials fold
-            # together first and then merge with the accumulated state.
-            # KLL compacts as it merges, so fold order decides its bits;
-            # this order gives the bits of merging the span's own merged
-            # state into the accumulated one (KLL merge is commutative)
-            parts = parts.unionByName(
-                acc.select(*acc_keys, "state", F.lit(-1).alias("part_id"))
-            )
+        parts = approx_agg.build_partials(batch, sketch, col, gcols, input_kind="double")
         # materialize: per-group KB states only; prior blocks are done
-        acc = approx_agg.tree_merge(parts, sketch, gcols, finish=finish).localCheckpoint(eager=True)
+        acc = approx_agg.merge_with_states(parts, acc, sketch, gcols, finish=finish)
+        acc = acc.localCheckpoint(eager=True)
         out = acc.select(
             *gcols, *[F.col("_qarr")[i].alias(n) for i, n in enumerate(names)]
         )

@@ -5,6 +5,16 @@ hyperplane LSH-bucketed variant as the scale path (buckets prune the
 candidate set; multi-probe widens recall).  Embedding-cosine near-
 duplicate pairs for dedup pipelines.
 
+One hyperplane signer: ``_planes`` draws the (dim x bands*planes)
+float32 planes from ``default_rng(seed)`` and ``_plane_keys`` packs
+the sign bits of each band's planes into an int64 key.  The row
+signers (``band_signatures``, and ``hyperplane_signature``, its one-band
+case) and ``ann_top_k``'s query bucket all use it, so a query lands
+in exactly the bucket ids its rows get.  A NULL vector gets NULL keys:
+it joins no bucket, pairs with nothing and is never probed.  The
+near-duplicate pairs run ``dedup._banded_pairs``, the pipeline the
+MinHash and SimHash operators share.
+
 JVM vs Python split: dot products over a whole partition are one
 numpy matrix multiply inside a Pandas UDF (Arrow-batched) — this
 beats per-element ``F.aggregate``/``zip_with`` expression trees for
@@ -29,6 +39,13 @@ def _normalize(v: np.ndarray) -> np.ndarray:
     return v / n if n > 0 else v
 
 
+def _row_norms(m: np.ndarray, keepdims: bool = False) -> np.ndarray:
+    """Row L2 norms of ``m``, 1 for a zero row (dividing leaves it zero)."""
+    n = np.linalg.norm(m, axis=1, keepdims=keepdims)
+    n[n == 0] = 1.0
+    return n
+
+
 def cosine_scores(vec_col: str, query: Sequence[float]):
     """Column of cosine similarities vs a fixed query vector.
 
@@ -39,9 +56,7 @@ def cosine_scores(vec_col: str, query: Sequence[float]):
     @F.pandas_udf(T.DoubleType())
     def _cos(vs: pd.Series) -> pd.Series:
         m = np.vstack(vs.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0] = 1.0
-        return pd.Series((m @ q) / norms)
+        return pd.Series((m @ q) / _row_norms(m))
 
     return _cos(F.col(vec_col))
 
@@ -65,21 +80,42 @@ def cosine_top_k(
     return scored.orderBy(*order).limit(k)
 
 
-def hyperplane_signature(vec_col: str, dim: int, planes: int = 16, seed: int = _PLANE_SEED):
-    """Column: LSH bucket id = sign bits of dot with random hyperplanes."""
-    rng = np.random.default_rng(seed)
-    H = rng.standard_normal((dim, planes)).astype(np.float32)
+def _planes(dim: int, n: int, seed: int) -> np.ndarray:
+    """The (dim x n) float32 random hyperplanes every signer draws."""
+    return np.random.default_rng(seed).standard_normal((dim, n)).astype(np.float32)
 
-    @F.pandas_udf(T.LongType())
+
+def _plane_keys(m: np.ndarray, H: np.ndarray, planes: int) -> np.ndarray:
+    """Bucket keys of the vectors in ``m`` (rows of a matrix, or one
+    vector): band b's key packs the sign bits of the dots with H's
+    columns b*planes .. (b+1)*planes-1, bit j for the band's j-th
+    plane.  Shape (rows, bands), or (bands,) for one vector.  The
+    product runs in ``m``'s dtype, so callers fix it: rows keep their
+    column's dtype, a query is cast to float32."""
+    bits = (m @ H) >= 0
+    bits = bits.reshape(*bits.shape[:-1], -1, planes)
+    return (bits * (1 << np.arange(planes, dtype=np.int64))).sum(axis=-1)
+
+
+def band_signatures(vec_col: str, dim: int, bands: int, planes: int, seed: int = _PLANE_SEED):
+    """Column: array<long> of per-band hyperplane bucket keys
+    (``_plane_keys``) — one (dim x bands*planes) matmul per Arrow
+    batch.  A NULL vector gets NULL keys: it joins no bucket."""
+    H = _planes(dim, bands * planes, seed)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(vs: pd.Series) -> pd.Series:
-        m = np.vstack(vs.to_numpy())
-        bits = (m @ H) >= 0
-        out = np.zeros(len(m), dtype=np.int64)
-        for j in range(planes):
-            out |= bits[:, j].astype(np.int64) << j
-        return pd.Series(out)
+        ok = vs.notna().to_numpy()
+        keys = iter(_plane_keys(np.vstack(vs[ok].to_numpy()), H, planes) if ok.any() else ())
+        return pd.Series([next(keys) if o else None for o in ok])
 
     return _sig(F.col(vec_col))
+
+
+def hyperplane_signature(vec_col: str, dim: int, planes: int = 16, seed: int = _PLANE_SEED):
+    """Column: LSH bucket id = sign bits of dot with random hyperplanes
+    (band 0 of a one-band ``band_signatures``; NULL for a NULL vector)."""
+    return band_signatures(vec_col, dim, 1, planes, seed)[0]
 
 
 def ann_top_k(
@@ -97,16 +133,11 @@ def ann_top_k(
     multi-probe: also visits buckets within ``probe_bits`` bit flips
     of the query bucket (recall/latency knob).  At scale, store the
     signature column at write time (partition/z-order by it) so this
-    becomes a partition-pruned scan.
+    becomes a partition-pruned scan.  A NULL vector is in no bucket.
     """
     dim = len(query)
-    rng = np.random.default_rng(seed)
-    H = rng.standard_normal((dim, planes)).astype(np.float32)
     q = np.asarray(query, dtype=np.float32)
-    qsig = 0
-    bits = (q @ H) >= 0
-    for j in range(planes):
-        qsig |= int(bits[j]) << j
+    qsig = int(_plane_keys(q, _planes(dim, planes, seed), planes)[0])
     probes = {qsig}
     if probe_bits >= 1:
         for j in range(planes):
@@ -151,9 +182,7 @@ def ivf_assign(
         .limit(int(sample_rows))
     )
     samp = np.vstack(samp_df.toPandas()["_v"].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(samp, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    samp = samp / norms
+    samp = samp / _row_norms(samp, keepdims=True)
     k = min(n_centroids, len(samp))
     rng = np.random.default_rng(seed)
     cent = samp[rng.choice(len(samp), size=k, replace=False)]
@@ -172,9 +201,8 @@ def ivf_assign(
     @F.pandas_udf(T.IntegerType())
     def _assign(vs: pd.Series) -> pd.Series:
         m = np.vstack(vs.to_numpy()).astype(np.float32)
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return pd.Series(np.argmax((m / n) @ C.T, axis=1).astype(np.int32))
+        unit = m / _row_norms(m, keepdims=True)
+        return pd.Series(np.argmax(unit @ C.T, axis=1).astype(np.int32))
 
     return df.withColumn(cluster_col, _assign(F.col(vec_col))), cent
 
@@ -197,26 +225,6 @@ def ivf_top_k(
     order = np.argsort(-(centroids @ q))[: int(n_probes)]
     probed = indexed.where(F.col(cluster_col).isin([int(c) for c in order]))
     return cosine_top_k(probed.drop(cluster_col), vec_col, query, k, id_col)
-
-
-def band_signatures(vec_col: str, dim: int, bands: int, planes: int, seed: int = _PLANE_SEED):
-    """Column: array<long> of per-band hyperplane bucket keys.
-
-    One (dim x bands*planes) matmul per Arrow batch; band b's key is
-    the packed sign bits of its ``planes`` hyperplanes.
-    """
-    rng = np.random.default_rng(seed)
-    H = rng.standard_normal((dim, bands * planes)).astype(np.float32)
-    weights = (1 << np.arange(planes, dtype=np.int64))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(vs: pd.Series) -> pd.Series:
-        m = np.vstack(vs.to_numpy())
-        bits = ((m @ H) >= 0).reshape(len(m), bands, planes)
-        keys = (bits * weights).sum(axis=2)  # (n, bands) int64
-        return pd.Series(list(keys))
-
-    return _sig(F.col(vec_col))
 
 
 def _lsh_params(n: int, threshold: float, collisions_per_row: float = 1.0) -> tuple[int, int]:
@@ -287,7 +295,7 @@ def embedding_near_duplicates(
 
     Pass ``n_rows`` if known to skip the sizing count.
     """
-    from .dedup import _bucket_pairs
+    from .dedup import _banded_pairs
 
     first = df.select(vec_col).where(F.col(vec_col).isNotNull()).first()
     if first is None:  # empty input: empty pair set, not a crash
@@ -308,36 +316,22 @@ def embedding_near_duplicates(
         planes, _ = _lsh_params(n, threshold, collisions_per_row)
     elif bands is None:  # planes given: bands must match THAT geometry
         bands = _bands_for(planes, threshold)
-    sigged = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .withColumn("_sig", band_signatures("_v", dim, bands, planes, seed))
-        .localCheckpoint()  # reused: banding + two verify joins
-    )
-    banded = sigged.select(
-        "_id", F.posexplode("_sig").alias("band", "key")
-    )
-    pairs = _bucket_pairs(
-        banded, ["band", "key"], hot_bucket_cap, warn_op="embedding_near_duplicates"
-    )
-    # exact-cosine verification of candidates only
-    va = sigged.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
-    vb = sigged.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    joined = pairs.join(va, "id_a").join(vb, "id_b")
 
     @F.pandas_udf(T.DoubleType())
     def _pair_cos(a: pd.Series, b: pd.Series) -> pd.Series:
         ma = np.vstack(a.to_numpy()).astype(np.float64)
         mb = np.vstack(b.to_numpy()).astype(np.float64)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        na[na == 0] = 1.0
-        nb[nb == 0] = 1.0
-        return pd.Series((ma * mb).sum(axis=1) / (na * nb))
+        return pd.Series((ma * mb).sum(axis=1) / (_row_norms(ma) * _row_norms(mb)))
 
-    return (
-        joined.withColumn("cosine", _pair_cos("_va", "_vb"))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    # exact-cosine verification of candidates only
+    return _banded_pairs(
+        df.select(id_col, vec_col), id_col,
+        keys=band_signatures(vec_col, dim, bands, planes, seed),
+        payload=vec_col,
+        score=lambda a, b: _pair_cos(a, b).alias("cosine"),
+        keep=F.col("cosine") >= threshold,
+        hot_bucket_cap=hot_bucket_cap,
+        warn_op="embedding_near_duplicates",
     )
 
 
@@ -348,12 +342,9 @@ def dedup_embeddings(
     threshold: float = 0.95,
     **kwargs,
 ) -> DataFrame:
-    """Drop near-duplicate embeddings, keeping the min-id representative."""
-    from .dedup import connected_components
+    """Drop near-duplicate embeddings, keeping the min-id representative
+    (a row with a NULL vector pairs with nothing and stays)."""
+    from . import dedup
 
     pairs = embedding_near_duplicates(df, id_col, vec_col, threshold, **kwargs)
-    comp = connected_components(pairs, "id_a", "id_b")
-    joined = df.join(comp, df[id_col] == comp["vertex"], "left")
-    return joined.where(
-        F.col("vertex").isNull() | (F.col(id_col) == F.col("component"))
-    ).drop("vertex", "component")
+    return dedup._keep_representatives(df, id_col, pairs)

@@ -33,9 +33,8 @@ import shutil
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.approx_agg import GROUP_ALL, build_partials, tree_merge
+from ..operators.approx_agg import build_partials, merge_with_states
 
 
 MARKER = "_VDB_BATCH"  # underscore prefix: invisible to parquet listing
@@ -70,18 +69,9 @@ def _merge_into_state(
     # gone but the previous state survives in _prev
     if not os.path.exists(cur_path) and os.path.exists(bak):
         os.rename(bak, cur_path)
-    sel = list(group_by) if group_by else [GROUP_ALL]
-    if os.path.exists(cur_path):
-        # old states join the merge as just another set of partials
-        old = (
-            spark.read.parquet(cur_path)
-            .select(*sel, "state")
-            .withColumn("part_id", F.lit(-1).cast("int"))
-        )
-        allp = new_partials.select(*sel, "state", "part_id").unionByName(old)
-    else:
-        allp = new_partials.select(*sel, "state", "part_id")
-    merged = tree_merge(allp, sketch, group_by)
+    # old states join the merge as just another set of partials
+    old = spark.read.parquet(cur_path) if os.path.exists(cur_path) else None
+    merged = merge_with_states(new_partials, old, sketch, group_by)
     tmp = os.path.join(state_path, "_next")
     merged.write.mode("overwrite").parquet(tmp)
     # stage the batch marker INSIDE the new state dir: the swap rename
