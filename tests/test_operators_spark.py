@@ -194,3 +194,27 @@ def test_group_rows_keeps_each_key_on_one_row_across_batches():
     assert groups.index == {("a",): 0, ("b",): 1, ("c",): 2}
     assert groups.arrays["acc"].shape == (3, 2) and (groups.arrays["acc"] == -1).all()
     assert groups.arrays["n"].tolist() == [0, 0, 0]
+
+
+def test_null_group_key_keeps_one_partial_across_arrow_batches(spark):
+    # 200 rows in one partition arrive as ten 20-row Arrow batches; the
+    # NULL int key must land on one accumulator row, not one per batch
+    from verdictdb_spark.operators.approx_agg import build_partials
+    from verdictdb_spark.sketches.hll import HllSketch
+
+    df = spark.range(200).repartition(1).select(
+        F.when(F.col("id") % 4 != 0, (F.col("id") % 3).cast("int")).alias("g"),
+        F.col("id").cast("string").alias("v"),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "20")
+    try:
+        rows = build_partials(df, HllSketch(p=10), "v", ["g"]).collect()
+    finally:
+        spark.conf.set(key, old)
+    counts = {}
+    for r in rows:
+        counts[r["g"]] = counts.get(r["g"], 0) + 1
+    assert counts == {None: 1, 0: 1, 1: 1, 2: 1}
+    assert sum(r["n_rows"] for r in rows if r["g"] is None) == 50

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from verdictdb_spark.sampling import AggSpec, create_scramble, progressive_agg
@@ -55,6 +56,14 @@ def test_until_converged_keeps_spark_snapshots_distributed(spark, sf_dir):
         r.estimates_sdf is not None and r._pdf is None for r in stream.history
     )
 
+
+def test_result_stream_of_nothing_raises_value_error():
+    # an empty source is an error on both consumers, and not an assert
+    # that ``python -O`` strips
+    with pytest.raises(ValueError, match="empty stream"):
+        ResultStream(iter([]), [], ["aq"]).each(lambda r: None)
+    with pytest.raises(ValueError, match="empty stream"):
+        ResultStream(iter([]), [], ["aq"]).until_converged()
 
 def test_incremental_sketch_sink(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -109,6 +109,11 @@ def test_cosine_top_k_matches_numpy(spark, emb):
     np.testing.assert_allclose(np.sort(got["cosine"])[::-1], np.sort(cos)[::-1][:5], rtol=1e-5)
 
 
+def test_cosine_top_k_scores_null_vector_null_and_last(spark):
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, None)], "vec_id long, embedding array<float>")
+    rows = cosine_top_k(df, "embedding", [1.0, 0.0], k=2, id_col="vec_id").collect()
+    assert [(r["vec_id"], r["cosine"]) for r in rows] == [(1, pytest.approx(1.0)), (2, None)]
+
 def test_ann_recall(spark, emb):
     pdf = emb.toPandas()
     hits = 0

@@ -7,11 +7,18 @@ prints one canonical JSON line per op, sorted by op name:
 ``{"op": name, "rows": [...]}`` with the answer's rows as dicts, sorted,
 binary values as their sha256, or ``{"op": name, "raises": <exception
 class>}``.  The ops cover HLL (the build's partial states with their
-``n_rows``/``checksum`` lineage, and the estimates), top-k, KLL,
+``n_rows``/``checksum`` lineage, also over a NULL-bearing int key in
+500-row Arrow batches, and the estimates), top-k, KLL,
 t-digest, progressive quantiles, the incremental state merge,
 ``approx_frequency``, ``hll_overlap``, ``dedup_minhash``, LSH, SimHash
 and embedding pairs, ``dedup_embeddings``, ``ann_top_k`` and
 ``cosine_top_k``; the ``*_null_vector`` ops add one NULL embedding row.
+The ``fold_*`` ops print where a progressive run stopped — its
+``iteration``, ``blocks_covered`` and estimates (floats to 12
+significant digits, NaN as null) — on seeded scrambles: ``approx_agg``
+on the driver and the pinned Spark engine under ``doubling`` and
+``linear`` and over a NULL-only block prefix, a ``sql()`` percentile
+with early stop, and ``ResultStream.until_converged``.
 
     python tools/op_dump.py [--repo DIR] [--messages] > ops.jsonl
 
@@ -50,6 +57,94 @@ def _rows(df, drop=()):
         for c in drop:
             r.pop(c, None)
     return sorted(rows, key=lambda r: json.dumps(r, sort_keys=True))
+
+
+def _num(value):
+    if isinstance(value, float):
+        return None if value != value else float(f"{value:.12g}")
+    return value
+
+
+def _fold(res, answer=None) -> dict:
+    """Where a progressive run stopped, and what it answered (``answer``,
+    a pandas frame, or else the snapshot's estimates)."""
+    answer = res.estimates if answer is None else answer
+    rows = [{k: _num(v) for k, v in r.items()} for r in answer.to_dict("records")]
+    return {
+        "iteration": res.iteration,
+        "blocks_covered": res.blocks_covered,
+        "estimates": sorted(rows, key=lambda r: json.dumps(r, sort_keys=True)),
+    }
+
+
+def folds(spark, tmp: str) -> dict:
+    """Op name -> a no-argument callable returning a ``_fold``: the
+    early-stop runs of every progressive consumer on seeded scrambles."""
+    from pyspark.sql import functions as F
+
+    from verdictdb_spark.api import VerdictContext
+    from verdictdb_spark.operators import quantile
+    from verdictdb_spark.sampling import AggSpec, ScrambleMeta, approx_agg, create_scramble
+    from verdictdb_spark.sampling import progressive_agg
+    from verdictdb_spark.sampling.scramble import BLOCK_COL, TIER_COL
+    from verdictdb_spark.streaming import ResultStream
+
+    n = 40_000
+    df = spark.range(n).select(
+        "id", (F.col("id") % 3).alias("g"), (F.col("id") % 11).cast("double").alias("v")
+    )
+    sdf, meta = create_scramble(df, method="uniform", nblocks=32, seed=5, nrows=n)
+    sdf = sdf.cache()
+    aggs = [AggSpec("avg", "v", "a"), AggSpec("count", None, "c"), AggSpec("sum", "v", "s")]
+    # blocks 0-2 hold only NULL x
+    block = (F.col("id") % 8).cast("int")
+    nulls = spark.range(4000).select(
+        F.when(block >= 3, F.lit(1.0)).alias("x"), F.lit(0).alias(TIER_COL), block.alias(BLOCK_COL)
+    )
+
+    def agg(schedule, engine):
+        return lambda: _fold(approx_agg(sdf, meta, aggs, ["g"], schedule=schedule, engine=engine))
+
+    def null_prefix(engine):
+        return lambda: _fold(approx_agg(
+            nulls, ScrambleMeta(method="uniform", nblocks=8, original_count=4000),
+            [AggSpec("sum", "x", "s")], [], schedule="linear", engine=engine,
+        ))
+
+    def percentile():
+        ctx = VerdictContext(spark, os.path.join(tmp, "fold_scrambles"))
+        ctx.create_scramble("fold_t", df, method="uniform", nblocks=16, seed=5, nrows=n)
+        steps = []
+        orig = quantile.progressive_quantiles
+
+        def recorded(*args, **kwargs):
+            for res in orig(*args, **kwargs):
+                steps.append(res)
+                yield res
+
+        quantile.progressive_quantiles = recorded
+        try:
+            out = ctx.sql("SELECT g, percentile(id, 0.5) AS med FROM fold_t GROUP BY g").toPandas()
+        finally:
+            quantile.progressive_quantiles = orig
+        return _fold(steps[-1], out)
+
+    def until_converged():
+        stream = ResultStream(
+            progressive_agg(sdf, meta, aggs[:2], ["g"], schedule="linear"), ["g"], ["a", "c"]
+        )
+        return _fold(stream.until_converged())
+
+    return {
+        "fold_driver_doubling": agg("doubling", "driver"),
+        "fold_driver_linear": agg("linear", "driver"),
+        "fold_spark_doubling": agg("doubling", "spark"),
+        "fold_spark_linear": agg("linear", "spark"),
+        "fold_null_prefix_driver": null_prefix("driver"),
+        "fold_null_prefix_spark": null_prefix("spark"),
+        "fold_sql_percentile": percentile,
+        "fold_until_converged": until_converged,
+    }
 
 
 def inputs(spark):
@@ -117,6 +212,16 @@ def ops(spark, tmp: str) -> dict:
             _merge_into_state(nums.where(F.col("v") % 3 == b), cms, "v", ["g"], state, b)
         return _rows(read_sketch_state(spark, state))
 
+    def small_batches(build):
+        """``build()`` with 500-row Arrow batches: several per partition."""
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "500")
+        try:
+            return build()
+        finally:
+            spark.conf.set(key, old)
+
     sig = dedup.minhash_signatures(docs, "id", "content", num_hashes=64)
     return {
         "hll_partials": lambda: _rows(
@@ -126,6 +231,9 @@ def ops(spark, tmp: str) -> dict:
         "hll_partials_ungrouped": lambda: _rows(
             approx_agg.build_partials(corpus, HllSketch(p=10), "content"), drop=["wall_ms"]
         ),
+        "hll_partials_null_key": lambda: small_batches(lambda: _rows(
+            approx_agg.build_partials(nums, HllSketch(p=10), "v", ["g"]), drop=["wall_ms"]
+        )),
         "hll": lambda: _rows(vs.approx_count_distinct_by(corpus, "content", ["repo", "lang"])),
         "hll_overlap": lambda: _rows(vs.hll_overlap(
             corpus.where(F.col("id") % 2 == 0), corpus.where(F.col("id") % 3 == 0),
@@ -175,6 +283,9 @@ def ops(spark, tmp: str) -> dict:
         "dedup_embeddings_null_vector": lambda: _rows(similarity.dedup_embeddings(
             emb_null, "vec_id", "embedding", threshold=0.95, planes=4, bands=2
         ).select("vec_id")),
+        "cosine_top_k_null_vector": lambda: _rows(
+            similarity.cosine_top_k(emb_null, "embedding", q, 20, id_col="vec_id")
+        ),
         "ann_top_k_null_vector": lambda: _rows(
             similarity.ann_top_k(emb_null, "embedding", q, 5, planes=3, id_col="vec_id")
         ),
@@ -198,7 +309,7 @@ def main(argv: list[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         with tempfile.TemporaryDirectory() as tmp:
-            table = ops(spark, tmp)
+            table = ops(spark, tmp) | folds(spark, tmp)
             for name in sorted(table):
                 try:
                     line = {"op": name, "rows": table[name]()}

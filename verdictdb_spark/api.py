@@ -803,11 +803,11 @@ class VerdictContext:
         progressive sum/count machinery — quantiles are not
         H-T-scalable sums.  With ``early_stop=True`` over a multi-block
         uniform scramble (one input expression) the sketch builds
-        progressively and stops when consecutive quantile frames agree
-        within the configured thresholds (the ``converged`` rule of the
-        sum/count engine) — the sampling speedup the engine exists
-        for; otherwise one full sketch pass per distinct input
-        expression."""
+        progressively and ``fold_progressive`` stops it when consecutive
+        quantile frames agree within the configured thresholds (the
+        sum/count engine's ``converged`` rule) — the sampling speedup
+        the engine exists for; otherwise one full sketch pass per
+        distinct input expression."""
         src = self._percentile_source(query)
         if src is None:
             return None
@@ -815,27 +815,21 @@ class VerdictContext:
         renames = {s: n for s, n in p.group_out if n != s}
         keys = [renames.get(g, g) for g in p.group_cols]
         if early_stop and steps is not None and meta.nblocks > 1:
-            from .sampling.progressive import converged
+            from .sampling.progressive import fold_progressive
+
+            def collected():
+                for res in steps:
+                    # the step's O(groups) frame, collected once: the
+                    # stop rule reads it on the driver
+                    _ = res.estimates
+                    yield res
 
             kw = self._exec_kwargs()
-            names = [n for n, _, _ in p.items]
-            prev = None
-            for res in steps:
-                cur = res.estimates  # O(groups) rows
-                # progressive_quantiles yields even when the accumulated
-                # sketch frame is still empty (unlike progressive_agg's
-                # have_rows skip): an empty or all-NaN frame must not arm
-                # the stop rule — two such frames "agree" vacuously, and a
-                # selective WHERE whose matches live in later blocks would
-                # return an empty/NULL result despite matching rows
-                if not len(cur) or cur[names].isna().all().all():
-                    continue
-                if prev is not None and converged(
-                    prev, cur, keys, names,
-                    kw["value_threshold"], kw["group_threshold"],
-                ):
-                    break
-                prev = cur
+            res = fold_progressive(
+                collected(), [n for n, _, _ in p.items], keys,
+                value_threshold=kw["value_threshold"],
+                group_threshold=kw["group_threshold"],
+            )
             pieces = [res.estimates_sdf]
         else:
             from .operators.quantile import approx_quantiles_wide
@@ -1746,7 +1740,7 @@ class VerdictContext:
         try:
             res = fold_progressive(
                 self._progression(plan, final_only=final_only),
-                plan.aggs, plan.group_cols,
+                [a.alias for a in plan.aggs], plan.group_cols,
                 early_stop=early_stop,
                 value_threshold=kw["value_threshold"],
                 group_threshold=kw["group_threshold"],

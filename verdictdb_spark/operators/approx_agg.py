@@ -69,7 +69,8 @@ def _group_schema(df: DataFrame, group_by: Sequence[str]) -> list[T.StructField]
 
 
 def factorize_keys(pdf: pd.DataFrame, gcols: list[str]) -> tuple[np.ndarray, pd.DataFrame]:
-    """(codes, unique-key frame in code order) — C-speed, multi-column.
+    """(codes, unique-key frame in code order) — C-speed, multi-column;
+    a NULL key is None in the frame.
 
     Group handling inside Arrow batches must never loop Python over
     rows; factorize gives integer codes so all downstream work is
@@ -96,7 +97,15 @@ def factorize_keys(pdf: pd.DataFrame, gcols: list[str]) -> tuple[np.ndarray, pd.
     # representative row per unique code (first occurrence)
     rep = np.empty(int(codes.max()) + 1, dtype=np.int64)
     rep[codes[::-1]] = np.arange(len(codes))[::-1]
-    return codes, pdf.iloc[rep][gcols].reset_index(drop=True)
+    uniq = pdf.iloc[rep][gcols].reset_index(drop=True)
+    for g in gcols:
+        # a NULL key comes back as None or as a fresh NaN per batch, and
+        # NaN keys never match in a dict: every caller keys dicts by
+        # these rows, so NULL is None
+        na = uniq[g].isna()
+        if na.any():
+            uniq[g] = uniq[g].astype(object).where(~na, None)
+    return codes, uniq
 
 
 class GroupRows:

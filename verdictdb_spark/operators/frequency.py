@@ -151,14 +151,12 @@ def _fused_partials(
         return acc.groupby(gcols, sort=False, dropna=False, group_keys=False).apply(trim)
 
     def _groups(pdf: pd.DataFrame):
-        """(group key, row positions) per group of ``pdf``.  A NULL key
-        comes out as None: pandas hands it back as None or as a fresh
-        NaN, and NaN keys never match in a dict."""
+        """(group key, row positions) per group of ``pdf``; a NULL key
+        is None (``factorize_keys``)."""
         codes, uniq = factorize_keys(pdf, gcols)
         order = np.argsort(codes, kind="stable")
         bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
         for g, key in enumerate(uniq.itertuples(index=False, name=None)):
-            key = tuple(None if v is None or v != v else v for v in key)
             yield key, order[bounds[g] : bounds[g + 1]]
 
     def fused(batches):

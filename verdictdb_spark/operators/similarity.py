@@ -49,14 +49,19 @@ def _row_norms(m: np.ndarray, keepdims: bool = False) -> np.ndarray:
 def cosine_scores(vec_col: str, query: Sequence[float]):
     """Column of cosine similarities vs a fixed query vector.
 
-    One numpy matvec per Arrow batch; NaN-safe for zero vectors.
+    One numpy matvec per Arrow batch; NaN-safe for zero vectors.  A
+    NULL vector scores NULL.
     """
     q = _normalize(np.asarray(query, dtype=np.float64))
 
     @F.pandas_udf(T.DoubleType())
     def _cos(vs: pd.Series) -> pd.Series:
-        m = np.vstack(vs.to_numpy()).astype(np.float64)
-        return pd.Series((m @ q) / _row_norms(m))
+        ok = vs.notna().to_numpy()
+        out = np.full(len(vs), np.nan)
+        if ok.any():
+            m = np.vstack(vs[ok].to_numpy()).astype(np.float64)
+            out[ok] = (m @ q) / _row_norms(m)
+        return pd.Series(out)  # NaN goes out as NULL
 
     return _cos(F.col(vec_col))
 
@@ -73,7 +78,7 @@ def cosine_top_k(
     Spark's orderBy+limit compiles to TakeOrderedAndProject: each
     partition keeps only its local top-k, the driver merges — no
     global sort, no full shuffle.  This is the 100 TB-safe exact
-    baseline.
+    baseline.  A NULL vector's NULL score ranks after every scored row.
     """
     scored = df.withColumn("cosine", cosine_scores(vec_col, query))
     order = [F.desc("cosine")] + ([F.col(id_col)] if id_col else [])

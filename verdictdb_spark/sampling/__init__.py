@@ -14,8 +14,6 @@ from .progressive import (  # noqa: F401
     ProgressiveResult,
     approx_agg,
     converged,
-    converged_result,
-    converged_sdf,
     progressive_agg,
 )
 from .join import (  # noqa: F401

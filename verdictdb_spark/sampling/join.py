@@ -140,7 +140,8 @@ def approx_join_agg(
             scramble1, meta1, scramble2, meta2, on, aggs, group_by, transform,
             engine=engine, engine_threshold=engine_threshold, schedule=schedule,
         ),
-        aggs, group_by, early_stop, value_threshold, group_threshold,
+        [a.alias for a in aggs], group_by, early_stop, value_threshold,
+        group_threshold,
         empty_message=(
             "no block pairs produced rows (empty scrambles or an "
             "everything-filtering transform) — nothing to estimate"
@@ -204,6 +205,7 @@ def approx_multi_join_agg(
             engine=engine, engine_threshold=engine_threshold,
             schedule=schedule,
         ),
-        aggs, group_by, early_stop, value_threshold, group_threshold,
+        [a.alias for a in aggs], group_by, early_stop, value_threshold,
+        group_threshold,
         empty_message="no block tuples produced rows — nothing to estimate",
     )

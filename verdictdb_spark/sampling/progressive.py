@@ -294,20 +294,26 @@ def _estimate(
         [divmod(int(k), m) for k in keys], meta, hi_block
     )
     scale, invp = np.take(scale, codes), np.take(invp, codes)
+    # pandas sums only-NaN to 0; K_ counts the non-NULL partials of a
+    # sum with NULLs, so an all-NULL group's SUM is NULL, as in Spark
+    holes = [c for c in sums if acc[c].isna().any()]
     per = (
         acc[group_by + [BLOCK_COL]]
         .assign(
             **{f"S_{c}": acc[c].to_numpy() * scale for c in sums},
             **{f"V_{c}": acc[c].to_numpy() * invp for c in sums},
             **{f"V_{c}": acc[c] for c in exts},
+            **{f"K_{c}": acc[c].notna() for c in holes},
         )
         .groupby(group_by + [BLOCK_COL], dropna=False, sort=False)
         .agg({f"S_{c}": "sum" for c in sums} | {f"V_{c}": "sum" for c in sums}
-             | {f"V_{c}": how for c, how in exts.items()})
+             | {f"V_{c}": how for c, how in exts.items()}
+             | {f"K_{c}": "sum" for c in holes})
         .reset_index()
     )
     table = _agg_table(aggs)
     named = {c: (f"S_{c}", "sum") for c in sums}
+    named |= {f"K_{c}": (f"K_{c}", "sum") for c in holes}
     named |= {c: (f"V_{c}", how) for c, how in exts.items()}
     for alias, srcs, kind in table if nb > 1 else ():
         if kind == "closed":
@@ -327,6 +333,8 @@ def _estimate(
         )
     else:
         final = pd.DataFrame({k: [per[c].agg(how)] for k, (c, how) in named.items()})
+    for c in holes:
+        final[c] = final[c].where(final[f"K_{c}"] > 0)
     # an ungrouped answer is one row of scalars: the estimates share the
     # partial row's one dtype, and the errors are floats
     tot = final if group_by else final[sums + list(exts)].iloc[0].to_frame().T
@@ -435,84 +443,6 @@ def _lift_partials(spark, pdfs: list[pd.DataFrame], template: DataFrame) -> Data
             sdf[c].try_cast(by_name[c]).alias(c) if c in by_name else sdf[c]
             for c in sdf.columns
         ]
-    )
-
-
-def converged_sdf(
-    prev: DataFrame,
-    cur: DataFrame,
-    group_by: Sequence[str],
-    value_cols: Sequence[str],
-    value_threshold: float = 0.02,
-    group_threshold: float = 0.05,
-) -> bool:
-    """Spark-side difference-based stop rule — ONE action over a
-    null-safe full-outer join of the two estimate frames (the driver
-    never materializes either side)."""
-    gb = list(group_by)
-    p = prev.select(
-        *gb, *[F.col(v).alias(f"{v}_p") for v in value_cols]
-    ).withColumn("_pm", F.lit(1))
-    c = cur.select(
-        *[F.col(g).alias(f"{g}_c") for g in gb],
-        *[F.col(v).alias(f"{v}_c") for v in value_cols],
-    ).withColumn("_cm", F.lit(1))
-    if gb:
-        cond = None
-        for g in gb:
-            e = p[g].eqNullSafe(c[f"{g}_c"])
-            cond = e if cond is None else cond & e
-        m = p.join(c, cond, "full_outer")
-    else:
-        m = p.crossJoin(c)
-    viol = None
-    for v in value_cols:
-        rel = F.abs(F.col(f"{v}_c") - F.col(f"{v}_p")) / F.greatest(
-            F.abs(F.col(f"{v}_p")), F.lit(1e-12)
-        )
-        x = F.max(F.when(rel > value_threshold, 1).otherwise(0))
-        viol = x if viol is None else F.greatest(viol, x)
-    row = m.agg(
-        F.sum("_pm").alias("np"),
-        F.sum("_cm").alias("nc"),
-        F.sum(F.col("_pm") * F.col("_cm")).alias("nm"),
-        viol.alias("viol"),
-    ).first()
-    np_, nc_, nm_ = (int(row[k] or 0) for k in ("np", "nc", "nm"))
-    if np_ == 0 or nc_ == 0:
-        # no rows (or no groups) yet on either side — "nothing changed
-        # between two empty estimates" is NOT convergence
-        return False
-    if abs(nc_ - np_) > group_threshold * max(np_, 1):
-        return False
-    if gb and nm_ < max(np_, nc_) * (1 - group_threshold):
-        return False
-    return int(row["viol"] or 0) == 0
-
-
-def converged_result(
-    prev: ProgressiveResult,
-    res: ProgressiveResult,
-    group_by: Sequence[str],
-    value_cols: Sequence[str],
-    value_threshold: float = 0.02,
-    group_threshold: float = 0.05,
-) -> bool:
-    """Engine-aware convergence between two progressive snapshots:
-    Spark-side when both are Spark frames, pandas when both are
-    driver frames; the auto-engine transition iteration never counts
-    as converged (comparing across engines would materialize the big
-    frame on the driver)."""
-    if res.estimates_sdf is not None and prev.estimates_sdf is not None:
-        return converged_sdf(
-            prev.estimates_sdf, res.estimates_sdf, group_by, value_cols,
-            value_threshold, group_threshold,
-        )
-    if res.estimates_sdf is not None or prev.estimates_sdf is not None:
-        return False
-    return converged(
-        prev.estimates, res.estimates, group_by, value_cols,
-        value_threshold, group_threshold,
     )
 
 
@@ -709,12 +639,11 @@ def _progress(
         meta = _BlockSpaceMeta(metas, his[1:], aligned)
         cov = meta.coverage(his[0], 0)
         if use_spark:
-            # no partials yet -> no estimate (as on the driver): an
-            # empty partial frame would yield an empty (or all-NULL
-            # scalar) estimate that the stop rule could spuriously
-            # accept.  The isEmpty probe runs on the checkpointed frame
-            # and stops at the first non-empty step (rows only
-            # accumulate).
+            # no partials yet -> no estimate (as on the driver), so a
+            # run whose blocks all came up empty raises the fold's
+            # empty message on both engines.  The isEmpty probe runs on
+            # the checkpointed frame and stops at the first non-empty
+            # step (rows only accumulate).
             if acc_sdf is None or (not have_rows and acc_sdf.isEmpty()):
                 continue
             have_rows = True
@@ -779,54 +708,113 @@ def progressive_agg(
     )
 
 
+def _stop_counts(
+    prev: pd.DataFrame, cur: pd.DataFrame, gb: list[str], value_cols: list[str]
+) -> tuple:
+    """The stop rule's counts from two driver frames."""
+    if gb:
+        m = prev.merge(cur, on=gb, suffixes=("_p", "_c"))
+    else:
+        m = pd.concat(
+            [prev.add_suffix("_p").reset_index(drop=True), cur.add_suffix("_c").reset_index(drop=True)],
+            axis=1,
+        )
+    move = 0.0
+    for v in value_cols:
+        p, c = m[f"{v}_p"].astype(float), m[f"{v}_c"].astype(float)
+        rel = np.abs(c - p) / np.maximum(np.abs(p), 1e-12)
+        move = np.fmax.reduce(rel.to_numpy(), initial=move)  # NULLs never move
+    live = all(f[value_cols].notna().to_numpy().any() for f in (prev, cur))
+    return len(prev), len(cur), len(m), move, live
+
+
+def _stop_counts_sdf(
+    prev: DataFrame, cur: DataFrame, gb: list[str], value_cols: list[str]
+) -> tuple:
+    """The stop rule's counts from two Spark frames, in ONE action over a
+    null-safe full-outer join (the driver never holds either side)."""
+    p = prev.select(*gb, *[F.col(v).alias(f"{v}_p") for v in value_cols], F.lit(1).alias("_pm"))
+    c = cur.select(
+        *[F.col(g).alias(f"{g}_c") for g in gb],
+        *[F.col(v).alias(f"{v}_c") for v in value_cols],
+        F.lit(1).alias("_cm"),
+    )
+    if gb:
+        cond = None
+        for g in gb:
+            e = p[g].eqNullSafe(c[f"{g}_c"])
+            cond = e if cond is None else cond & e
+        m = p.join(c, cond, "full_outer")
+    else:
+        m = p.crossJoin(c)
+    rel = [
+        F.abs(F.col(f"{v}_c") - F.col(f"{v}_p"))
+        / F.greatest(F.abs(F.col(f"{v}_p")), F.lit(1e-12))
+        for v in value_cols
+    ]
+
+    def set_rows(side: str):  # rows holding some non-NULL estimate
+        return F.count(F.coalesce(*[F.col(f"{v}_{side}") for v in value_cols], F.lit(None)))
+
+    row = m.agg(
+        F.sum("_pm"), F.sum("_cm"), F.sum(F.col("_pm") * F.col("_cm")),
+        F.max(F.greatest(*rel, F.lit(0.0))), set_rows("p"), set_rows("c"),
+    ).first()
+    n_prev, n_cur, n_matched = (int(x or 0) for x in row[:3])
+    return n_prev, n_cur, n_matched, row[3] or 0.0, row[4] > 0 and row[5] > 0
+
+
 def converged(
-    prev: pd.DataFrame,
-    cur: pd.DataFrame,
+    prev: ProgressiveResult,
+    cur: ProgressiveResult,
     group_by: Sequence[str],
     value_cols: Sequence[str],
     value_threshold: float = 0.02,
     group_threshold: float = 0.05,
 ) -> bool:
     """The reference's difference-based stop rule
-    (QueryResultAccuracyEstimatorFromDifference.java:126-217)."""
-    if abs(len(cur) - len(prev)) > group_threshold * max(len(prev), 1):
+    (QueryResultAccuracyEstimatorFromDifference.java:126-217) between
+    two snapshots: the group count moved under ``group_threshold``,
+    as many groups matched, and no matched estimate moved more than
+    ``value_threshold`` (relative).  Only its counts depend on where
+    the snapshots live: read on the driver when both hold a driver
+    frame, else in one Spark action.  A pair across an engine switch
+    never converges (comparing them would pull the big frame to the
+    driver), nor does a pair with an empty or all-NULL side: two
+    snapshots that estimate nothing agree vacuously."""
+    if (prev.estimates_sdf is None) != (cur.estimates_sdf is None):
         return False
-    gb = list(group_by)
-    if gb:
-        m = prev.merge(cur, on=gb, suffixes=("_p", "_c"))
-        if len(m) < max(len(prev), len(cur)) * (1 - group_threshold):
-            return False
+    gb, vals = list(group_by), list(value_cols)
+    if prev._pdf is not None and cur._pdf is not None:
+        counts = _stop_counts(prev._pdf, cur._pdf, gb, vals)
     else:
-        m = pd.concat(
-            [prev.add_suffix("_p").reset_index(drop=True), cur.add_suffix("_c").reset_index(drop=True)],
-            axis=1,
-        )
-    for v in value_cols:
-        p, c = m[f"{v}_p"].astype(float), m[f"{v}_c"].astype(float)
-        denom = np.maximum(np.abs(p), 1e-12)
-        if (np.abs(c - p) / denom > value_threshold).any():
-            return False
-    return True
+        counts = _stop_counts_sdf(prev.estimates_sdf, cur.estimates_sdf, gb, vals)
+    n_prev, n_cur, n_matched, move, live = counts
+    if not live or abs(n_cur - n_prev) > group_threshold * max(n_prev, 1):
+        return False
+    if gb and n_matched < max(n_prev, n_cur) * (1 - group_threshold):
+        return False
+    return move <= value_threshold
 
 
 def fold_progressive(
     results: Iterator[ProgressiveResult],
-    aggs: Sequence[AggSpec],
+    value_cols: Sequence[str],
     group_by: Sequence[str],
     early_stop: bool = True,
     value_threshold: float = 0.02,
     group_threshold: float = 0.05,
     empty_message: str = "no blocks produced rows — nothing to estimate",
 ) -> ProgressiveResult:
-    """Fold a progressive iterator to its final snapshot: stop at the
-    difference-based rule (engine-aware) or run to exhaustion.  The
-    single folding loop shared by every approx_* driver and the SQL
-    front door."""
+    """Fold a progressive iterator to its final snapshot: the first one
+    ``converged`` with its predecessor, or the last.  The one folding
+    loop of every progressive consumer: the approx_* drivers, the SQL
+    front door (aggregate and percentile routes) and
+    ``ResultStream.until_converged``."""
     prev: ProgressiveResult | None = None
-    aliases = [a.alias for a in aggs]
     for res in results:
-        if early_stop and prev is not None and converged_result(
-            prev, res, group_by, aliases, value_threshold, group_threshold
+        if early_stop and prev is not None and converged(
+            prev, res, group_by, value_cols, value_threshold, group_threshold
         ):
             return res
         prev = res
@@ -861,7 +849,8 @@ def approx_agg(
             scramble, meta, aggs, group_by, schedule, transform,
             engine=engine, engine_threshold=engine_threshold,
         ),
-        aggs, group_by, early_stop, value_threshold, group_threshold,
+        [a.alias for a in aggs], group_by, early_stop, value_threshold,
+        group_threshold,
         empty_message=(
             "no blocks produced rows (empty scramble, or transform/where "
             "filtered out everything) — nothing to estimate"

@@ -15,7 +15,10 @@ from __future__ import annotations
 
 from typing import Callable, Iterator, Sequence
 
-from ..sampling.progressive import ProgressiveResult, converged_result
+from ..sampling import progressive
+from ..sampling.progressive import ProgressiveResult
+
+_EMPTY = "empty stream: the source yielded no result"
 
 
 class ResultStream:
@@ -52,25 +55,16 @@ class ResultStream:
         for res in self:
             callback(res)
             last = res
-        assert last is not None
+        if last is None:
+            raise ValueError(_EMPTY)
         return last
 
     def until_converged(self) -> ProgressiveResult:
         """Stop at the reference's accuracy rule
-        (QueryResultAccuracyEstimatorFromDifference.java:35-40), checked
-        where the snapshots live: Spark-engine estimates are compared
-        Spark-side, never pulled to the driver."""
-        prev: ProgressiveResult | None = None
-        for res in self:
-            if prev is not None and converged_result(
-                prev,
-                res,
-                self.group_by,
-                self.value_cols,
-                self.value_threshold,
-                self.group_threshold,
-            ):
-                return res
-            prev = res
-        assert prev is not None, "empty stream"
-        return prev
+        (QueryResultAccuracyEstimatorFromDifference.java:35-40) through
+        the one fold, ``progressive.fold_progressive``: Spark-engine
+        estimates are compared Spark-side, never pulled to the driver."""
+        return progressive.fold_progressive(
+            self, self.value_cols, self.group_by, True,
+            self.value_threshold, self.group_threshold, empty_message=_EMPTY,
+        )
