@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,8 +15,36 @@ from verdictdb_spark.operators.dedup import (
     exact_jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingles_col,
     simhash_near_duplicates,
 )
+
+# connected_components labels an edge set under Spark's broadcast
+# threshold on the driver and runs star rounds above it
+CC_PATHS = ("driver", "distributed")
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def _threshold(spark, value):
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+@contextmanager
+def _cc_path(spark, path):
+    """Pin ``connected_components`` to one path: the driver finish under
+    the default threshold, the star rounds with it at -1 ("never
+    broadcast")."""
+    if path == "driver":
+        yield
+    else:
+        with _threshold(spark, "-1"):
+            yield
 
 
 @pytest.fixture(scope="module")
@@ -83,10 +114,12 @@ def test_connected_components(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)], ["id_a", "id_b"]
     )
-    comp = connected_components(edges).toPandas().set_index("vertex")["component"]
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[10] == comp[11] == 10
-    assert comp[20] == comp[21] == comp[22] == comp[23] == 20
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            comp = connected_components(edges).toPandas().set_index("vertex")["component"]
+        assert comp[1] == comp[2] == comp[3] == 1
+        assert comp[10] == comp[11] == 10
+        assert comp[20] == comp[21] == comp[22] == comp[23] == 20
 
 
 def test_connected_components_long_chain(spark):
@@ -94,9 +127,11 @@ def test_connected_components_long_chain(spark):
     rounds; large-star/small-star must converge in O(log^2 n)."""
     n = 200
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], ["id_a", "id_b"])
-    comp = connected_components(edges, max_iter=20).toPandas()
-    assert (comp["component"] == 0).all()
-    assert len(comp) == n + 1
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            comp = connected_components(edges, max_iter=20).toPandas()
+        assert (comp["component"] == 0).all()
+        assert len(comp) == n + 1
 
 
 def test_lsh_hot_bucket_cap(spark):
@@ -170,15 +205,18 @@ def test_connected_components_two_stars_after_round_one(spark):
     e = spark.createDataFrame(edges, ["s", "d"])
     round_one = dedup._small_star(dedup._large_star(dedup._neighbourhoods(e)))
     assert sorted(map(tuple, round_one.collect())) == [(2, 0), (2, 1), (3, 1), (4, 0)]
-    got = _components(spark, edges)
-    assert got == _union_find_components(edges)
-    assert set(got.values()) == {0}
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            got = _components(spark, edges)
+        assert got == _union_find_components(edges)
+        assert set(got.values()) == {0}
 
 
 def test_connected_components_star_forest_input_stops_after_one_round(spark, monkeypatch):
     """An input that already is a star forest (either edge orientation)
     stays one through a round, and the stop rule ends there — no
-    confirming round."""
+    confirming round.  Counts star rounds, so runs on the distributed
+    path."""
     from verdictdb_spark.operators import dedup
 
     rounds = []
@@ -190,7 +228,8 @@ def test_connected_components_star_forest_input_stops_after_one_round(spark, mon
 
     monkeypatch.setattr(dedup, "_small_star", counted)
     edges = [(1, 5), (7, 1), (1, 9), (3, 2), (20, 11)]
-    assert _components(spark, edges) == _union_find_components(edges)
+    with _cc_path(spark, "distributed"):
+        assert _components(spark, edges) == _union_find_components(edges)
     assert len(rounds) == 1
 
 
@@ -203,7 +242,77 @@ def test_connected_components_random_sparse_graphs(spark):
         # a vertex with only a self-loop has no component row
         linked = {x for a, b in edges if a != b for x in (a, b)}
         want = {v: c for v, c in _union_find_components(edges).items() if v in linked}
-        assert _components(spark, edges) == want
+        for path in CC_PATHS:
+            with _cc_path(spark, path):
+                assert _components(spark, edges) == want
+
+
+def test_connected_components_string_ids(spark):
+    """String ids: components are the lexicographic min id, typed as
+    the edge columns, on both paths."""
+    edges = [("b", "a"), ("c", "b"), ("x", "y"), ("q", "p"), ("p", "r"), ("zz", "zz")]
+    want = {v: c for v, c in _union_find_components(edges).items() if v != "zz"}
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            df = spark.createDataFrame(edges, "id_a string, id_b string")
+            comp = connected_components(df)
+            assert comp.schema["component"].dataType.simpleString() == "string"
+            assert dict(map(tuple, comp.collect())) == want
+
+
+def test_connected_components_switches_paths_at_the_edge_cap(spark, monkeypatch):
+    """With the threshold at 16 bytes x 4 edges, four distinct edges are
+    labelled on the driver and five run star rounds; both answer the
+    same.  Reversed and repeated edges count once."""
+    from verdictdb_spark.operators import dedup
+
+    rounds = []
+    small_star = dedup._small_star
+
+    def counted(e):
+        rounds.append(1)
+        return small_star(e)
+
+    monkeypatch.setattr(dedup, "_small_star", counted)
+    at_cap = [(1, 2), (2, 1), (3, 4), (4, 5), (9, 7), (7, 9)]
+    over_cap = at_cap + [(5, 6)]
+    with _threshold(spark, str(16 * 4)):
+        assert _components(spark, at_cap) == _union_find_components(at_cap)
+        assert not rounds
+        assert _components(spark, over_cap) == _union_find_components(over_cap)
+        assert rounds
+
+
+def test_shingles_col_matches_python_reference(spark):
+    """Word shingles split the trimmed, lower-cased text on whitespace
+    runs; char shingles slide over the lower-cased text.  A text shorter
+    than n is one shingle; NULL and empty text give one empty shingle
+    (word mode) or one NULL / empty one (char mode)."""
+
+    def words(t, n):
+        w = re.split(r"\s+", ("" if t is None else t).strip(" ").lower())
+        return [" ".join(w[i:i + n]) for i in range(max(len(w) - n + 1, 1))]
+
+    def chars(t, n):
+        if t is None:
+            return [None]
+        t = t.lower()
+        return [t[i:i + n] for i in range(max(len(t) - n + 1, 1))]
+
+    texts = [
+        None, "", " ", "Hi", "The Quick  brown\tFOX\n jumps", "  lead and trail  ",
+        "a b c d e f g", "MiXeD CaSe MiXeD case", "abcdefgh",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, t string")
+    for n in (1, 3, 5):
+        got = df.select(
+            "id", shingles_col("t", n, "word").alias("w"), shingles_col(F.col("t"), n, "char").alias("c")
+        ).orderBy("id").collect()
+        for r, t in zip(got, texts):
+            assert r["w"] == words(t, n), (t, n)
+            assert r["c"] == chars(t, n), (t, n)
+    with pytest.raises(ValueError, match="shingle mode"):
+        shingles_col("t", 3, "byte")
 
 
 def test_lsh_bands_must_divide_num_hashes(spark):

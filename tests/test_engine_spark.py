@@ -187,6 +187,35 @@ def test_spark_engine_errors_match_driver_scalar(lineitem):
         assert (np.isnan(dv) and np.isnan(sv)) or dv == pytest.approx(sv, rel=1e-9), col
 
 
+@pytest.mark.parametrize("engine", ["driver", "spark"])
+def test_all_null_sum_has_null_error(spark, engine):
+    """A SUM that has seen only NULL values is NULL, and so is its error
+    bar: a 0.0 would claim a certain estimate.  Group 0 is NULL in
+    every block, group 1 in blocks 0-2 only, and the ungrouped sum in
+    blocks 0-2 only."""
+    from verdictdb_spark.sampling import ScrambleMeta
+    from verdictdb_spark.sampling.scramble import BLOCK_COL, TIER_COL
+
+    block = (F.col("id") % 8).cast("int")
+    g = (F.col("id") / 8).cast("long") % 2
+    df = spark.range(4000).select(
+        g.alias("g"), F.when((g == 1) & (block >= 3), F.lit(1.0)).alias("x"),
+        F.lit(0).alias(TIER_COL), block.alias(BLOCK_COL),
+    )
+    meta = ScrambleMeta(method="uniform", nblocks=8, original_count=4000)
+    seen = []
+    for gb in (["g"], []):
+        for r in progressive_agg(
+            df, meta, [AggSpec("sum", "x", "s")], gb, schedule="linear", engine=engine
+        ):
+            est = r.estimates
+            if "s_err" in est:
+                assert (est["s"].isna() == est["s_err"].isna()).all(), (gb, r.blocks_covered)
+                seen += [(bool(gb), null) for null in est["s"].isna()]
+    # both shapes showed NULL and non-NULL estimates with error bars
+    assert set(seen) == {(True, True), (True, False), (False, True), (False, False)}
+
+
 def test_auto_switch_nullable_int_group(spark):
     """Review regression: the auto driver->Spark switch must survive a
     NULL-bearing bigint group column (the pandas round-trip coerced it

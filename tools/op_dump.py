@@ -11,8 +11,12 @@ class>}``.  The ops cover HLL (the build's partial states with their
 500-row Arrow batches, and the estimates), top-k, KLL,
 t-digest, progressive quantiles, the incremental state merge,
 ``approx_frequency``, ``hll_overlap``, ``dedup_minhash``, LSH, SimHash
-and embedding pairs, ``dedup_embeddings``, ``ann_top_k`` and
+and embedding pairs, ``exact_jaccard`` over the LSH pairs, char-mode
+MinHash signatures, ``dedup_embeddings``, ``ann_top_k`` and
 ``cosine_top_k``; the ``*_null_vector`` ops add one NULL embedding row.
+The ``components_*`` ops run ``connected_components`` on a 200-hop
+chain, a random sparse graph and the same graph with string ids, each
+on the driver finish and on the distributed star rounds.
 The ``fold_*`` ops print where a progressive run stopped — its
 ``iteration``, ``blocks_covered`` and estimates (floats to 12
 significant digits, NaN as null) — on seeded scrambles: ``approx_agg``
@@ -184,6 +188,7 @@ def inputs(spark):
 
 def ops(spark, tmp: str) -> dict:
     """Op name -> a no-argument callable returning the rows to print."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     import verdictdb_spark as vs
@@ -212,18 +217,45 @@ def ops(spark, tmp: str) -> dict:
             _merge_into_state(nums.where(F.col("v") % 3 == b), cms, "v", ["g"], state, b)
         return _rows(read_sketch_state(spark, state))
 
-    def small_batches(build):
-        """``build()`` with 500-row Arrow batches: several per partition."""
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    def with_conf(key, value, build):
+        """``build()`` with one Spark conf set, restored after."""
         old = spark.conf.get(key)
-        spark.conf.set(key, "500")
+        spark.conf.set(key, value)
         try:
             return build()
         finally:
             spark.conf.set(key, old)
 
+    def small_batches(build):
+        """``build()`` with 500-row Arrow batches: several per partition."""
+        return with_conf("spark.sql.execution.arrow.maxRecordsPerBatch", "500", build)
+
     sig = dedup.minhash_signatures(docs, "id", "content", num_hashes=64)
+    rng = np.random.default_rng(5)
+    sparse = rng.integers(0, 400, size=(300, 2)).tolist()
+    graphs = {
+        "chain": spark.createDataFrame([(i, i + 1) for i in range(200)], "id_a long, id_b long"),
+        "sparse": spark.createDataFrame(sparse, "id_a long, id_b long"),
+        "strings": spark.createDataFrame(
+            [(f"v{a}", f"v{b}") for a, b in sparse], "id_a string, id_b string"
+        ),
+    }
+
+    def components(graph, path):
+        """``connected_components`` of one graph on one path: the driver
+        finish under the default broadcast threshold, star rounds at -1."""
+        def build():
+            return _rows(dedup.connected_components(graphs[graph]))
+
+        if path == "driver":
+            return build
+        return lambda: with_conf("spark.sql.autoBroadcastJoinThreshold", "-1", build)
+
     return {
+        **{
+            f"components_{graph}_{path}": components(graph, path)
+            for graph in graphs for path in ("driver", "distributed")
+        },
         "hll_partials": lambda: _rows(
             approx_agg.build_partials(corpus, HllSketch(p=12), "content", ["repo", "lang"]),
             drop=["wall_ms"],
@@ -258,6 +290,12 @@ def ops(spark, tmp: str) -> dict:
             vs.dedup_minhash(docs, "id", "content", threshold=0.8).select("id")
         ),
         "lsh_pairs": lambda: _rows(dedup.lsh_candidate_pairs(sig, "id", bands=16)),
+        "exact_jaccard": lambda: _rows(dedup.exact_jaccard(
+            docs, dedup.lsh_candidate_pairs(sig, "id", bands=16), "id", "content"
+        )),
+        "minhash_char": lambda: _rows(
+            dedup.minhash_signatures(docs, "id", "content", num_hashes=16, shingle=4, mode="char")
+        ),
         "lsh_pairs_min_jaccard": lambda: _rows(
             dedup.lsh_candidate_pairs(sig, "id", bands=16, min_est_jaccard=0.5)
         ),

@@ -19,10 +19,11 @@ Design rules at 10^12-row scale:
   pairs into the kept rows;
 * MinHash and SimHash share one per-doc build (``_doc_hash_build``):
   JVM token hashes, one numpy scatter per Arrow batch;
-* clustering is alternating large-star/small-star connected
-  components (Kiveris et al. 2014) with localCheckpoint per round to
-  cut lineage; converges in O(log^2 |V|) rounds independent of graph
-  diameter.
+* clustering labels an edge set under Spark's broadcast threshold on
+  the driver; a larger one runs alternating large-star/small-star
+  connected components (Kiveris et al. 2014) with localCheckpoint per
+  round to cut lineage, converging in O(log^2 |V|) rounds independent
+  of graph diameter.
 
 ANSI-mode safe: no wrap-around arithmetic in JVM expressions — hash
 families come from xxhash64(h, j) re-hashing instead of overflow
@@ -87,21 +88,32 @@ def dedup_exact(
 
 # --------------------------------------------------------------- shingles
 def shingles_col(text: str | Column, n: int = 5, mode: str = "word") -> Column:
-    """Array of n-gram shingles, computed fully JVM-side."""
+    """Array of n-gram shingles, computed fully JVM-side.
+
+    Each row's units (its words, or its lower-cased text in char mode)
+    are computed once and bound to a lambda variable: written inline,
+    the split would re-run for every shingle the inner ``transform``
+    builds, quadratic in words per document."""
     t = F.col(text) if isinstance(text, str) else text
     if mode == "word":
-        w = F.split(F.lower(F.trim(t)), r"\s+")
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(w) - F.lit(n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        )
-    if mode == "char":
-        lt = F.lower(t)
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(lt) - F.lit(n - 1), F.lit(1))),
-            lambda i: lt.substr(i, F.lit(n)),
-        )
-    raise ValueError(f"unknown shingle mode {mode!r}")
+        units, size = F.split(F.lower(F.trim(t)), r"\s+"), F.size
+
+        def piece(w: Column, i: Column) -> Column:
+            return F.concat_ws(" ", F.slice(w, i, n))
+    elif mode == "char":
+        units, size = F.lower(t), F.length
+
+        def piece(w: Column, i: Column) -> Column:
+            return w.substr(i, F.lit(n))
+    else:
+        raise ValueError(f"unknown shingle mode {mode!r}")
+    return F.element_at(
+        F.transform(F.array(units), lambda w: F.transform(
+            F.sequence(F.lit(1), F.greatest(size(w) - F.lit(n - 1), F.lit(1))),
+            lambda i: piece(w, i),
+        )),
+        1,
+    )
 
 
 # --------------------------------------------------------------- MinHash
@@ -193,15 +205,13 @@ def _doc_hash_build(
     return hashed.mapInPandas(build, schema)
 
 
-def _materialized(df: DataFrame) -> bool:
-    """True when the frame is already a materialized RDD scan (e.g. a
-    prior ``localCheckpoint`` — callers that pass a shared signature
-    fixture should not pay a second copy of it)."""
+def _plan_is(df: DataFrame, node: str) -> bool:
+    """True when ``df``'s analyzed plan is one ``node``: "LogicalRDD" for
+    an already materialized RDD scan (e.g. a prior ``localCheckpoint`` —
+    callers that pass a shared signature fixture should not pay a second
+    copy of it), "LocalRelation" for a frame built from driver data."""
     try:
-        return (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        )
+        return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == node
     except Exception:
         return False
 
@@ -311,7 +321,7 @@ def _banded_pairs(
     aliased Column), and pairs failing ``keep`` drop.  Returns
     (id_a, id_b, score)."""
     keyed = sig.withColumn("_keys", keys)
-    if not _materialized(sig):
+    if not _plan_is(sig, "LogicalRDD"):
         keyed = keyed.localCheckpoint()
     banded = keyed.select(F.col(id_col).alias("_id"), F.posexplode("_keys").alias("band", "key"))
     pairs = _bucket_pairs(banded, ["band", "key"], hot_bucket_cap, warn_op)
@@ -431,6 +441,10 @@ def _keep_representatives(df: DataFrame, id_col: str, pairs: DataFrame) -> DataF
     """``df`` minus every row whose id is in a cluster of ``pairs``
     (id_a, id_b) but is not that cluster's min-id representative."""
     comp = connected_components(pairs, "id_a", "id_b")
+    if _plan_is(comp, "LocalRelation"):
+        # labelled on the driver, so small: ship it to every partition
+        # of ``df`` instead of shuffling ``df`` to meet it
+        comp = F.broadcast(comp)
     joined = df.join(comp, df[id_col] == comp["vertex"], "left")
     return joined.where(
         F.col("vertex").isNull() | (F.col(id_col) == F.col("component"))
@@ -546,23 +560,31 @@ def connected_components(
     max_iter: int = 50,
     on_nonconverged: str = "raise",
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
+    """Connected components: (vertex, component) where component = min
+    vertex id in the cluster, typed as the edge columns.
+
+    An edge set that fits under Spark's own broadcast threshold
+    (``spark.sql.autoBroadcastJoinThreshold`` bytes at 16 bytes an
+    edge), with ids that are not floats, is labelled on the driver
+    (``_label_components``): the oriented, deduplicated edges are
+    localCheckpointed once and one limited collect tells the two cases
+    apart.  A threshold of -1 ("never broadcast") pins the distributed
+    path below.
+
+    Larger edge sets run alternating large-star / small-star rounds
     (Kiveris et al. 2014) — converges in O(log^2 |V|) rounds regardless
     of graph DIAMETER (plain min-label propagation moves labels one hop
-    per round and silently splits chains longer than max_iter).
-
-    Returns (vertex, component) where component = min vertex id in the
-    cluster.  Stops after the first round whose output is a star
-    forest: then every vertex with a smaller neighbour has exactly one
-    neighbour, each component is one star around its minimum, and
-    min(N(u) + {u}) labels every vertex u.  One tiny agg action per
-    round tests that on the windowed neighbourhoods the next
-    large-star step would read, which each round localCheckpoints to
-    cut lineage (at cluster scale swap for a reliable checkpoint dir);
-    the answer is a projection of the last one.  If max_iter rounds
-    pass without a star forest, raises (or warns,
-    ``on_nonconverged="warn"``) instead of silently returning split
-    components.
+    per round and silently splits chains longer than max_iter).  Stops
+    after the first round whose output is a star forest: then every
+    vertex with a smaller neighbour has exactly one neighbour, each
+    component is one star around its minimum, and min(N(u) + {u})
+    labels every vertex u.  One tiny agg action per round tests that on
+    the windowed neighbourhoods the next large-star step would read,
+    which each round localCheckpoints to cut lineage (at cluster scale
+    swap for a reliable checkpoint dir); the answer is a projection of
+    the last one.  If max_iter rounds pass without a star forest,
+    raises (or warns, ``on_nonconverged="warn"``) instead of silently
+    returning split components.
     """
     # undirected and deduplicated, so each neighbour appears once per
     # source row below
@@ -573,6 +595,21 @@ def connected_components(
         .where(F.col("s") != F.col("d"))
         .distinct()
     )
+    spark = edges.sparkSession
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
+    t = e.schema["s"].dataType
+    # float ids stay in Spark: pandas would turn a NaN id into NULL
+    if cap > 0 and not isinstance(t, (T.FloatType, T.DoubleType)):
+        # lazy checkpoint: the limited collect below materializes it, so
+        # the star rounds of an over-cap edge set never re-run the
+        # upstream DAG (MinHash/LSH)
+        e = e.localCheckpoint(eager=False)
+        head = e.limit(cap + 1).toPandas()
+        if len(head) <= cap:
+            comp = _label_components(head["s"].to_numpy(), head["d"].to_numpy())
+            return spark.createDataFrame(
+                comp, T.StructType([T.StructField("vertex", t), T.StructField("component", t)])
+            )
     nb = _neighbourhoods(e)
     # a vertex breaks the star shape iff it has a smaller neighbour and
     # a second, distinct neighbour
@@ -595,3 +632,31 @@ def connected_components(
     return nb.where(F.col("d") == F.col("_mx")).select(
         F.col("s").alias("vertex"), F.least("s", "_mn").alias("component")
     )
+
+
+def _label_components(s: np.ndarray, d: np.ndarray):
+    """(vertex, component) as a pandas frame for the edges ``s[i]-d[i]``:
+    min-label hooking with pointer jumping on the driver.  Vertices are
+    ranked by id, so a rank's root (the smallest rank it reaches) is
+    its component's min id.  Each round hooks every root that an edge
+    joins to a smaller root onto the smallest such root, then jumps
+    every pointer straight to its root; parents only ever decrease, so
+    no cycle forms, and a round that finds no edge between two roots
+    ends it."""
+    import pandas as pd
+
+    vertex, rank = np.unique(np.concatenate([s, d]), return_inverse=True)
+    a, b = rank[: len(s)], rank[len(s):]
+    parent = np.arange(len(vertex))
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            break
+        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    return pd.DataFrame({"vertex": vertex, "component": vertex[parent]})

@@ -347,6 +347,8 @@ def _estimate(
                 final[f"S1_{srcs[0]}"], final[f"S2_{srcs[0]}"], nb,
                 np.sqrt, lambda v: np.maximum(v, 0.0),
             )
+            if srcs[0] in holes:  # no error bar on a NULL estimate
+                err = err.where(final[f"K_{srcs[0]}"] > 0)
         else:
             err = _spread_err(final[f"sd_{alias}"], final[f"n_{alias}"], np.sqrt)
         out[f"{alias}_err"] = err if group_by else err.astype(float)
@@ -397,9 +399,11 @@ def _estimate_spark(
             continue
         if kind == "closed":
             v = F.col(f"V_{srcs[0]}")
+            # a NULL-preserving clamp (``greatest`` skips NULLs), so a
+            # NULL estimate gets a NULL error bar, not 0.0
             err = _closed_err(
                 F.sum(v), F.sum(v * v), nb,
-                F.sqrt, lambda x: F.greatest(x, F.lit(0.0)),
+                F.sqrt, lambda x: F.when(x < 0, F.lit(0.0)).otherwise(x),
             )
         else:
             r = _value(srcs, lambda c: F.col(f"V_{c}"))
