@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import re
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,16 +35,11 @@ def _threshold(spark, value):
         spark.conf.set(THRESHOLD, old)
 
 
-@contextmanager
 def _cc_path(spark, path):
     """Pin ``connected_components`` to one path: the driver finish under
     the default threshold, the star rounds with it at -1 ("never
     broadcast")."""
-    if path == "driver":
-        yield
-    else:
-        with _threshold(spark, "-1"):
-            yield
+    return _threshold(spark, "-1") if path == "distributed" else nullcontext()
 
 
 @pytest.fixture(scope="module")
